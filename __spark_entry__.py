@@ -508,9 +508,8 @@ WHERE rn = 1 AND event_type <> 'error'
 def q22(spark, sf):
     """The flagship LWW final-state query, computed THROUGH the engine's
     full CDC lake path (not a window-function shortcut): events become a
-    change log ('error' = delete tombstone), replayed in 3 ordered
-    micro-batches of shuffle-free SCATTERED MOR commits
-    (plans/lake.py delta_layout='scattered'), with a mid-replay
+    change log ('error' = delete tombstone), replayed in 3 ordered,
+    pipelined micro-batches of MOR commits, with a mid-replay
     incremental COMPACTION (compact_every=2) folding the first two
     batches' deltas, so the final read exercises MOR READ-RESOLUTION of
     batch 3's still-pending deltas against the compacted base. The
@@ -539,8 +538,7 @@ def q22(spark, sf):
     )
     d = tempfile.mkdtemp(prefix="graft_q22_")
     replay(spark, os.path.join(d, "t"), ev, n_batches=3, n_buckets=8,
-           mode="mor", delta_layout="scattered", compact_every=2,
-           pipeline_depth=2)
+           mode="mor", compact_every=2, pipeline_depth=2)
     t = LakeTable(spark, os.path.join(d, "t"))
     return t.read().select(
         "user_id",
@@ -2117,15 +2115,14 @@ SELECT url, warc_ts, props AS text
 FROM ranked WHERE rn = 1 AND op <> 'delete'
 """)
 def q69(spark, sf):
-    """Scattered-delta-layout CDC replay round-trip (plans/lake.py
-    delta_layout='scattered': shuffle-free, barrier-free MOR commits;
-    each scan task writes the buckets it touches and compaction folds
-    the per-task files): the events table is cast to a change log
-    (url=user, op: error->delete, html wraps props), replayed in 3
-    ordered micro-batches through the scattered path, compacted, and the
-    final table state — LWW by (warc_ts, event_seq) with tombstoned
+    """Serial MOR CDC replay round-trip, then a full compaction: the
+    events table is cast to a change log (url=user, op: error->delete,
+    html wraps props), replayed in 3 ordered micro-batches of MOR delta
+    commits, compacted, and the final table state — LWW by (warc_ts, event_seq) with tombstoned
     deletes, text extracted by the byte-identical pandas UDF — must
-    equal the oracle's window/filter reconstruction."""
+    equal the oracle's window/filter reconstruction. The registered name
+    is kept from an earlier delta layout; table state never depended on
+    the layout."""
     from epigraphdb_graph_spark.plans.lake import LakeTable
     from epigraphdb_graph_spark.replay import replay
 
@@ -2144,7 +2141,7 @@ def q69(spark, sf):
     )
     d = tempfile.mkdtemp(prefix="graft_q69_")
     replay(spark, os.path.join(d, "t"), ev, n_batches=3, n_buckets=8,
-           mode="mor", mor_dedup="filter", delta_layout="scattered")
+           mode="mor")
     t = LakeTable(spark, os.path.join(d, "t"))
     t.compact()
     return t.read().select("url", "warc_ts", "text")

@@ -80,22 +80,18 @@ def cmd_replay(args) -> int:
             replay(spark, f"{wdir}/t",
                    generate_change_events(spark, warmup_n, seed=1,
                                           body_repeat=args.body_repeat),
-                   n_batches=1, n_buckets=args.buckets, mode=args.mode,
-                   delta_layout=getattr(args, "mor_layout", "clustered"))
+                   n_batches=1, n_buckets=args.buckets, mode=args.mode)
             if args.mode == "mor":
                 # the timed region ends in compaction — warm its codegen
                 # (resolution + rewrite plans) too, not just the commit path
                 LakeTable(spark, f"{wdir}/t").compact()
         finally:
             _sh.rmtree(wdir, ignore_errors=True)
-    mor_dedup = {"auto": "auto", "agg": "agg", "filter": "filter",
-                 "none": False}[getattr(args, "mor_dedup", "auto")]
     t0 = time.perf_counter()
     results = replay(
         spark, args.table, events, n_batches=args.batches,
         n_buckets=args.buckets, mode=args.mode, compact_every=args.compact_every,
-        dead_letter_dir=args.dead_letter_dir, mor_dedup=mor_dedup,
-        delta_layout=getattr(args, "mor_layout", "clustered"),
+        dead_letter_dir=args.dead_letter_dir,
         pipeline_depth=getattr(args, "pipeline", 1),
     )
     wall = time.perf_counter() - t0
@@ -330,23 +326,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--buckets", type=int, default=32)
     p.add_argument("--mode", choices=["cow", "mor"], default="cow")
     p.add_argument("--compact-every", type=int, default=None)
-    p.add_argument("--mor-dedup", choices=["auto", "agg", "filter", "none"],
-                   default="auto",
-                   help="MOR winner strategy: auto (supersede-ratio policy), "
-                        "agg (per-key max_by), filter (column-pruned winner "
-                        "broadcast — right for parquet/column-prunable logs "
-                        "with KB pages), none (append-all)")
     p.add_argument("--pipeline", type=int, default=1,
                    help="MOR batches in flight (1 = serial; 2+ overlaps "
                         "batch b+1's delta write with batch b's commit; "
                         "commits stay ordered)")
-    p.add_argument("--mor-layout", choices=["clustered", "scattered"],
-                   default="clustered",
-                   help="MOR delta file layout: clustered (bucket exchange, "
-                        "one file per touched bucket) or scattered "
-                        "(shuffle-free barrier-free commit; each scan task "
-                        "writes the buckets it touches, compaction folds "
-                        "the extra files)")
     p.add_argument("--warmup", action="store_true",
                    help="untimed small replay first (JIT + python-worker startup)")
     p.add_argument("--dead-letter-dir", default=None,

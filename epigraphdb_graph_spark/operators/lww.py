@@ -46,96 +46,6 @@ def lww_dedup_agg(
     return df.groupBy(*keys).agg(winner).select("w.*")
 
 
-def _pack_ord(ts_col: str, seq_col: str):
-    """Lexicographic (ts, seq) packed into one decimal — preserved for
-    |seq| < 10^18; decimal keeps the winner agg a HASH agg. Shared by the
-    per-batch filter and the replay-level batch-winner precompute (the
-    two must agree bit-for-bit or a precomputed winner set would filter
-    differently than the inline one)."""
-    return (
-        F.unix_micros(F.col(ts_col)).cast("decimal(38,0)")
-        * F.lit(1_000_000_000_000_000_000)
-        + F.col(seq_col)
-    )
-
-
-def lww_batch_winners(
-    df: DataFrame,
-    batch_expr,
-    key: str | list[str] = "url",
-    ts_col: str = "warc_ts",
-    seq_col: str = "event_seq",
-) -> DataFrame:
-    """Per-(batch, key) winner ordinals for EVERY batch of a replay in one
-    column-pruned pass — the amortized form of lww_winner_filter's winner
-    agg. A 4-batch replay otherwise runs four small 2-stage agg jobs whose
-    fixed costs (stage scheduling, Catalyst, broadcast build) do not
-    shrink with cores and so cap scaling efficiency; one pass over the
-    whole log computes the same winner sets with one job's fixed cost
-    and 4x the (perfectly parallel) work. ``batch_expr`` is a Column
-    assigning each event its batch index — it MUST partition events
-    exactly like the caller's batch ranges. Returns columns
-    ``(_b, _wk0.., _word)`` matching what lww_winner_filter's
-    ``winners=`` parameter expects after ``.filter(_b == i).drop("_b")``.
-
-    The result is small — O(distinct keys per batch) rows of key+decimal
-    — cache it and every per-batch broadcast build becomes a cache read
-    instead of a log re-scan."""
-    keys = [key] if isinstance(key, str) else list(key)
-    ord_expr = _pack_ord(ts_col, seq_col)
-    winners = (
-        df.select(batch_expr.alias("_b"), *keys, ord_expr.alias("_ord"))
-        .groupBy("_b", *keys)
-        .agg(F.max("_ord").alias("_word"))
-    )
-    for i, k in enumerate(keys):
-        winners = winners.withColumnRenamed(k, f"_wk{i}")
-    return winners
-
-
-def lww_winner_filter(
-    df: DataFrame,
-    key: str | list[str] = "url",
-    ts_col: str = "warc_ts",
-    seq_col: str = "event_seq",
-    winners: DataFrame | None = None,
-) -> DataFrame:
-    """Winner FILTER without moving row payloads: compute per-key max
-    (ts, seq) from a column-pruned pass (the shuffle carries only
-    key + a packed ordering decimal, map-side combined), broadcast the
-    tiny winners relation, and join-filter the raw rows map-side.
-
-    This is the MOR fast path's answer to superseded-event waste: payload
-    columns (KB-scale html) are never shuffled, and downstream per-row
-    work (html→text extraction!) runs only on winners — at a 10:1
-    supersede ratio that is ~90% less UDF CPU and ~90% smaller delta
-    files/compactions, while keeping the O(batch), join-free commit.
-    Rows tied at the winning (ts, seq) (re-delivered duplicates) are all
-    kept — read-resolution collapses them (plans/lake.py).
-
-    The broadcast is O(distinct keys in the batch) — bounded by the
-    micro-batch size the caller controls (maxFilesPerTrigger / n_batches),
-    NOT by table size. For huge ad-hoc batches use lww_dedup_agg instead.
-
-    ``winners``: a precomputed winner relation for THIS batch (columns
-    ``_wk0.., _word`` — see lww_batch_winners), typically a slice of a
-    cached all-batches winner table; skips the per-batch winner agg.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    # same packing as plans/lake.py resolution
-    ord_expr = _pack_ord(ts_col, seq_col)
-    if winners is None:
-        winners = df.select(*keys, ord_expr.alias("_ord")).groupBy(*keys).agg(
-            F.max("_ord").alias("_word"))
-        for i, k in enumerate(keys):
-            winners = winners.withColumnRenamed(k, f"_wk{i}")
-    cond = ord_expr == F.col("_word")
-    for i, k in enumerate(keys):
-        cond = cond & (F.col(k) == F.col(f"_wk{i}"))
-    return df.join(F.broadcast(winners), cond).drop(
-        "_word", *[f"_wk{i}" for i in range(len(keys))])
-
-
 def lww_dedup_window(
     df: DataFrame,
     key: str | list[str] = "url",

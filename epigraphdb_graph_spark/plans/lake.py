@@ -1100,10 +1100,10 @@ class LakeTable:
         extra_metrics: dict | None = None,
         src_aligned: bool = False,
         deferred_watermark=None,
-        delta_layout: str = "clustered",
         pre_commit=None,
     ) -> MergeResult:
-        """Apply a deduplicated change batch with MERGE semantics.
+        """Apply a prepared change batch (replay.prepare_batch output)
+        with MERGE semantics.
 
         ``pre_commit``: zero-arg callable invoked AFTER the batch's data
         files are written but BEFORE its manifest commit (MOR only) —
@@ -1117,9 +1117,10 @@ class LakeTable:
         over the raw batch) instead of paying a separate stats job; must
         return the max raw event_seq or None.
 
-        ``updates`` contract: one row per key (pre-deduplicated via
-        operators.lww), columns = [key, event_seq(op ordering long),
-        op(insert|update|delete), warc_ts] + payload columns. Payload
+        ``updates`` contract: one row per key for COW (pre-deduplicated
+        via operators.lww; MOR also takes append-all batches), columns =
+        [key, event_seq(op ordering long), op(insert|update|delete),
+        warc_ts] + payload columns. Payload
         columns not yet in the table trigger additive schema evolution.
 
         Semantics per key (north_rule):
@@ -1141,26 +1142,11 @@ class LakeTable:
             cost. Both modes converge to identical table states because
             resolution uses the same (_ts, _seq) total order.
 
-        ``delta_layout`` (MOR only): ``"clustered"`` (default) exchanges
-        the batch into bucket layout before the delta write (one file per
-        touched bucket); ``"scattered"`` writes with NO exchange — each
-        scan task emits every bucket it touches (files stay bucket-pure
-        via partitionBy; a bucket's rows span up to one file per task).
-        Scattered is the streaming-ingest tradeoff (shuffle-free, barrier-
-        free commit; more small files, folded by compaction).
-
-        Measured decision (round 5, 1M x 7KB from-log, BENCH/BASELINE.md):
-        at local[4] the two layouts are at throughput PARITY (~31-32k
-        ev/s both), but scattered costs ~15-25% at local[1] — the fused
-        extract+write task plus small-file stats/compaction overhead is
-        extra work, it just scales near-linearly (its jobs measured
-        3.6-5.0x from 1 to 4 cores vs clustered's exchange-bound 3.0x).
-        So: clustered is the single-node-throughput default; scattered is
-        the CLUSTER layout — its commit has no exchange barrier and no
-        shuffle, which is exactly the term that stops scaling, and the
-        N->4N campaigns measure it at a materially higher scaling
-        efficiency. The per-task writer sort is not the 1-core cost
-        (maxConcurrentOutputFileWriters probe showed no change).
+        ``src_aligned``: ``updates`` already sits in bucket layout
+        (prepare_batch's fused ``repartition(n_buckets, key)`` on a
+        murmur3 table) — the COW join reuses that exchange and the MOR
+        delta write needs none; otherwise merge exchanges the batch into
+        bucket layout itself (one delta file per touched bucket).
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
@@ -1207,7 +1193,7 @@ class LakeTable:
                 batch_id=batch_id, collect_metrics=collect_metrics,
                 watermark_seq=watermark_seq, extra_metrics=extra,
                 src_aligned=src_aligned, deferred_watermark=deferred_watermark,
-                delta_layout=delta_layout, pre_commit=pre_commit,
+                pre_commit=pre_commit,
             )
 
         # persist (COW): the updates lineage (dedup + extraction UDF) is
@@ -1412,7 +1398,6 @@ class LakeTable:
         extra_metrics: dict | None = None,
         src_aligned: bool = False,
         deferred_watermark=None,
-        delta_layout: str = "clustered",
         pre_commit=None,
     ) -> MergeResult:
         """Merge-on-read commit: append the batch as per-bucket delta
@@ -1420,10 +1405,9 @@ class LakeTable:
         is deferred to _read_resolved/compact (Hudi/Iceberg-v2 MOR analog).
         ``src`` arrives bucketed and schema-conformed, NOT persisted (side
         passes below are column-pruned recomputes — no html, no UDF), and
-        may hold multiple rows per key (callers use the broadcast winner
-        FILTER, operators/lww.py.lww_winner_filter, which can keep
-        re-delivered ties; resolution orders by (_ts,_seq) and collapses
-        ties regardless)."""
+        may hold multiple rows per key (prepare_batch's append-all form
+        keeps superseded events and re-delivered ties; resolution orders by
+        (_ts,_seq) and collapses them)."""
         extra = dict(extra_metrics or {})
         version = m["version"] + 1
         out = src.select(
@@ -1455,18 +1439,6 @@ class LakeTable:
             # already partition b == bucket b — append delta files with NO
             # exchange at all (the O(batch) commit's only stage is
             # scan->write)
-            to_write = out
-        elif delta_layout == "scattered":
-            # Hudi/Iceberg streaming-ingest analog: skip the bucket
-            # exchange entirely and let each scan task write every bucket
-            # it touches (partitionBy splits by the _bucket VALUE, so
-            # files stay bucket-pure — a bucket's delta rows just span up
-            # to one file per scan task). Trades more, smaller delta
-            # files per commit (bounded by compaction cadence) for a
-            # commit with NO shuffle and NO stage barrier: the batch is
-            # scan->filter->extract->write in one fused stage, so a slow
-            # scan split delays only its own write, not an exchange
-            # barrier the whole batch waits on.
             to_write = out
         else:
             to_write = self._bucket_repartition(out, m)

@@ -24,106 +24,43 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.extract import extract_text_udf
-from .operators.lww import lww_dedup_agg, lww_winner_filter
+from .operators.lww import lww_dedup_agg
 from .plans.lake import LakeTable, MergeResult
 from .schema import PAGES_SCHEMA
 
 
-def prepare_batch(events: DataFrame, *, dedup: bool | str = True,
+def prepare_batch(events: DataFrame, *, dedup: bool = True,
                   bucket_into: int | None = None,
-                  exchange_width: int | None = None,
-                  key: str = "url",
-                  winners: DataFrame | None = None) -> DataFrame:
-    """Prepare a raw change-event batch: per-key LWW winner selection,
-    then html→text extraction (on surviving rows only).
-
-    ``dedup`` strategies:
-      - ``True`` (COW requirement: the MERGE join needs exactly one source
-        row per key): ``lww_dedup_agg`` — max_by aggregation, shuffles one
-        combined row per (task, key).
-      - ``"filter"`` (column-prunable sources, e.g. a parquet/Kafka log):
-        ``lww_winner_filter`` — winners from a column-pruned agg +
-        broadcast join-back, so loser payloads are dropped at the scan and
-        never shuffle; extraction runs only on winners (at a 10:1
-        supersede ratio, ~90% less UDF CPU and ~90% smaller delta files).
-        May keep re-delivered ties; MOR read-resolution collapses them.
-      - ``False``: no winner selection — extract everything (MOR remains
-        correct via read-resolution; use when batches are too large for
-        the winner broadcast).
+                  key: str = "url") -> DataFrame:
+    """Prepare a raw change-event batch for ``LakeTable.merge``: per-key
+    LWW winner selection, then html→text extraction on winners only.
 
     ``bucket_into=n`` (murmur3-bucketed tables — apply_batch sets it)
-    FUSES the table's bucket layout into this preparation with a single
-    payload exchange: winner selection (broadcast filter — no payload
-    movement) and html→text extraction run in the narrow pre-exchange
-    stage, then ``repartition(n, key)`` places every surviving row in
-    partition == bucket (see LakeTable.create), so the downstream
-    MERGE/delta write needs no exchange at all.
+    fuses the table's bucket layout into this preparation: the raw batch
+    is exchanged once with ``repartition(n, key)``, which places every
+    row in partition == bucket (see LakeTable.create), so the downstream
+    MERGE join / delta write needs no further exchange. ``lww_dedup_agg``
+    then runs partition-local (HashPartitioning(key, n) already clusters
+    each key) with its map-side partial combine, and extraction runs
+    after it, so superseded events never reach the Python UDF. Payloads
+    cross one exchange, no winner set is collected to the driver (so any
+    batch size works), and the result has exactly one row per key — the
+    COW MERGE contract.
 
-    ``exchange_width=w`` (must divide ``bucket_into``) narrows that
-    exchange for SMALL batches: murmur3 placement nests modularly —
-    ``pmod(h, n) = b`` implies ``pmod(h, w) = b mod w`` whenever
-    ``w | n`` — so bucket ``b``'s rows all land in partition ``b mod
-    w``, key-clustering (and thus partition-local dedup) still holds,
-    and the partitioned write still emits exactly one bucket-pure file
-    per touched bucket; the post-exchange agg+UDF stage just runs ``w``
-    tasks instead of ``n`` (measured ~20-25% per-micro-batch win at
-    ~12k rows, where per-task Arrow/python setup dominates — see the
-    tailer's width policy). For ``dedup=True`` the
-    COW exactly-one-row-per-key contract is restored by a
-    partition-local dedup of re-delivered ties on the far side of the
-    exchange (HashPartitioning(key, n) satisfies the clustering — no
-    extra shuffle). ``dedup="agg"`` exchanges the raw batch instead and
-    dedups partition-locally — one job, no winner broadcast, correct at
-    any batch size; the choose_*_dedup policies pick between the forms
-    by cluster/bucket geometry."""
-    if bucket_into is None:
-        if dedup is True or dedup == "agg":
-            events = lww_dedup_agg(events, key=key, ts_col="warc_ts",
-                                   seq_col="event_seq")
-        elif dedup == "filter":
-            events = lww_winner_filter(events, key=key, ts_col="warc_ts",
-                                       seq_col="event_seq", winners=winners)
-        return events.withColumn("text", extract_text_udf(F.col("html")))
-    width = bucket_into
-    if exchange_width is not None:
-        if exchange_width < 1 or bucket_into % exchange_width != 0:
-            raise ValueError(
-                f"exchange_width ({exchange_width}) must be a positive "
-                f"divisor of bucket_into ({bucket_into}) for the modular "
-                "bucket-purity guarantee to hold")
-        width = exchange_width
-    if dedup == "agg":
-        # exchange first, partition-local agg dedup, extraction AFTER (on
-        # winners only) — the whole batch is ONE job with no broadcast
-        # collect, and correct at any batch size. The UDF stage is
-        # n_buckets tasks wide, each paying Arrow/python setup (~0.25
-        # s/task at 1 core), so the geometry policies pick this form only
-        # when cores amortize those rounds (choose_mor_dedup /
-        # choose_cow_dedup); from 4 cores up it is the fastest measured
-        # shape on both 70 B and 7 KB pages.
-        events = events.repartition(width, F.col(key))
-        events = lww_dedup_agg(events, key=key, ts_col="warc_ts",
-                               seq_col="event_seq")
-        return events.withColumn("text", extract_text_udf(F.col("html")))
-    if dedup in (True, "filter"):
-        # winner-select with zero payload movement (column-pruned agg +
-        # broadcast join-back) — losers are dropped at the scan
-        events = lww_winner_filter(events, key=key, ts_col="warc_ts",
-                                   seq_col="event_seq", winners=winners)
-    if dedup is not False:
-        # extraction in the NARROW pre-exchange stage (width = input
-        # splits, pipelined with the scan): a post-exchange UDF stage
-        # would be n_buckets tasks wide and pay per-task python overhead
+    ``dedup=False`` (MOR append-all, chosen by choose_mor_dedup for
+    effectively append-only batches): no winner selection — extract every
+    event, then exchange; MOR read-resolution collapses superseded rows
+    and re-delivered ties."""
+    if not dedup:
         events = events.withColumn("text", extract_text_udf(F.col("html")))
-        events = events.repartition(width, F.col(key))
-        if dedup is True:
-            # exact one-row-per-key (COW MERGE contract): collapse
-            # re-delivered ties partition-locally — HashPartitioning(key,
-            # n) satisfies the clustering, no further exchange
-            events = events.dropDuplicates([key])
+        if bucket_into is not None:
+            events = events.repartition(bucket_into, F.col(key))
         return events
-    events = events.withColumn("text", extract_text_udf(F.col("html")))
-    return events.repartition(width, F.col(key))
+    if bucket_into is not None:
+        events = events.repartition(bucket_into, F.col(key))
+    events = lww_dedup_agg(events, key=key, ts_col="warc_ts",
+                           seq_col="event_seq")
+    return events.withColumn("text", extract_text_udf(F.col("html")))
 
 
 #: auto MOR policy threshold: distinct(key)/rows above this means the
@@ -135,72 +72,24 @@ def prepare_batch(events: DataFrame, *, dedup: bool | str = True,
 #: instead of the raw log.
 MOR_DEDUP_MAX_DISTINCT_FRAC = 0.9
 
-#: between the two supersede-bearing strategies the cost driver is the
-#: post-exchange UDF stage width: "agg" (exchange raw events first,
-#: partition-local winner agg, extraction on winners only — ONE job per
-#: batch, no broadcast collect) runs its extraction n_buckets tasks wide,
-#: each paying Arrow/python-worker setup, so it needs enough cores to
-#: amortize those rounds; the broadcast winner filter (True) keeps
-#: extraction in the narrow pre-exchange stage but costs a second
-#: full-scan job per batch. Measured crossover on this engine (500k
-#: events 10:1 @70 B and 100k @7 KB, 32 buckets): agg 80.8k/14.5k ev/s
-#: vs True 46.1k/7.5k at 32 cores; agg ≈ True at 4 cores (7.0k vs 6.6k
-#: on the 100k shape); True 1.7× faster at 1 core. The threshold below
-#: (agg when n_buckets <= 8 * cores, i.e. at most ~8 serial UDF-task
-#: rounds) encodes that crossover.
-MOR_AGG_MAX_BUCKETS_PER_CORE = 8
-
-
-def choose_cow_dedup(
-    *, n_buckets: int | None = None, parallelism: int | None = None
-) -> bool | str:
-    """Pick the COW winner-selection form. COW always needs exactly one
-    source row per key (the MERGE full-outer join contract), so the only
-    question is WHICH dedup shape: the same geometry rule as the MOR
-    policy applies — ``"agg"`` (one job: exchange raw events, partition-
-    local winner agg, winners-only extraction) when the n_buckets-wide
-    UDF stage amortizes over the cores, else ``True`` (broadcast winner
-    filter + partition-local tie collapse; extraction stays in the narrow
-    pre-exchange stage). Both produce exactly one row per key — measured
-    61.8k vs 33.3k ev/s on the 500k/10:1/32-bucket shape at 32 cores."""
-    if (
-        n_buckets is not None
-        and parallelism is not None
-        and n_buckets <= MOR_AGG_MAX_BUCKETS_PER_CORE * parallelism
-    ):
-        return "agg"
-    return True
-
 
 def choose_mor_dedup(
     events: DataFrame, *, stats: tuple[int, int] | None = None,
     n_buckets: int | None = None, parallelism: int | None = None,
-) -> bool | str:
+) -> str | bool:
     """Pick the MOR winner-selection strategy from the batch's supersede
-    ratio and the cluster/bucket geometry. Returns ``False`` (append-all,
-    read-resolution dedups) when the batch is effectively append-only
-    (distinct keys ≈ rows) — winner selection would collapse nothing, so
-    its shuffle is pure overhead. For supersede-bearing batches:
-    ``"agg"`` (single-job exchange-first dedup with winners-only
-    extraction) when the post-exchange UDF stage width amortizes over the
-    available cores (``n_buckets <= MOR_AGG_MAX_BUCKETS_PER_CORE *
-    parallelism``), else ``True`` (broadcast winner filter — extraction
-    stays in the narrow pre-exchange stage). Correctness is identical in
-    every branch — this is purely a cost choice.
+    ratio: ``False`` (append-all, read-resolution dedups) when the batch
+    is effectively append-only (distinct keys ≈ rows) — winner selection
+    would collapse nothing, so its work is pure overhead — else ``"agg"``
+    (prepare_batch's exchange + partition-local ``lww_dedup_agg`` +
+    winners-only extraction). Correctness is identical either way — this
+    is purely a cost choice.
 
     ``stats=(n_rows, n_distinct_keys)``, when the caller already has them,
     makes this free; otherwise one column-pruned, map-side-combinable agg
-    over the key column runs (replay() folds the stats into its existing
-    log-bounds job, so the batch path never pays an extra pass).
-    ``n_buckets``/``parallelism`` default to "geometry unknown", which
-    keeps the broadcast-filter choice (safe at any width).
-
-    ``"filter"`` (broadcast winner filter without the partition-local tie
-    collapse) is never auto-chosen: it beats the agg only when the source
-    supports real column pruning (parquet/Kafka with lazy payload), where
-    its pruned winner pass skips payload IO and payload columns never
-    shuffle — callers with such sources and KB-scale pages should pass
-    ``mor_dedup="filter"`` explicitly."""
+    over the key column runs. ``n_buckets`` and ``parallelism`` are
+    accepted for callers that pass the table geometry; they no longer
+    affect the result."""
     if stats is None:
         row = events.agg(
             F.count("*").alias("n"),
@@ -208,17 +97,9 @@ def choose_mor_dedup(
         ).first()
         stats = (row["n"], row["k"])
     n_rows, n_keys = stats
-    if n_rows == 0:
+    if n_rows == 0 or n_keys / n_rows > MOR_DEDUP_MAX_DISTINCT_FRAC:
         return False
-    if n_keys / n_rows > MOR_DEDUP_MAX_DISTINCT_FRAC:
-        return False
-    if (
-        n_buckets is not None
-        and parallelism is not None
-        and n_buckets <= MOR_AGG_MAX_BUCKETS_PER_CORE * parallelism
-    ):
-        return "agg"
-    return True
+    return "agg"
 
 
 def apply_batch(
@@ -229,21 +110,30 @@ def apply_batch(
     watermark_seq: int | None = None,
     mode: str = "cow",
     dead_letter_dir: str | None = None,
-    mor_dedup: bool | str = "auto",
-    delta_layout: str = "clustered",
-    winners: DataFrame | None = None,
+    stats: tuple[int, int] | None = None,
+    deferred_watermark=None,
     pre_commit=None,
 ) -> MergeResult:
-    """Apply one change batch. With ``dead_letter_dir``, malformed events
-    are quarantined there (parquet, with a _reason column) instead of
-    poisoning the merge, and the per-reason counts land in the commit's
-    lineage metrics — the accounted version of the reference's
-    --skip-bad-relationships + import-report check (SURVEY J8/K2).
+    """Apply one change batch: quarantine, pick the dedup form, prepare,
+    MERGE — the one path both replay() and the streaming tailer take.
 
-    ``delta_layout="scattered"`` (MOR only) skips prepare_batch's fused
-    bucket exchange AND the merge-side repartition: the commit is one
-    fused scan->winner-filter->extract->write stage with no shuffle and
-    no stage barrier (see LakeTable.merge).
+    With ``dead_letter_dir``, malformed events are quarantined there
+    (parquet, with a _reason column) instead of poisoning the merge, and
+    the per-reason counts land in the commit's lineage metrics — the
+    accounted version of the reference's --skip-bad-relationships +
+    import-report check (SURVEY J8/K2). The batch is cached for the
+    duration so the quarantine's side jobs and the merge share one
+    source pass.
+
+    Dedup policy: COW always selects winners (the MERGE join needs exactly
+    one source row per key). MOR asks choose_mor_dedup with ``stats`` —
+    the caller's ``(rows, distinct keys)`` for this batch (replay's
+    whole-log bounds pass, or the tailer's previous micro-batch) — and
+    with ``stats=None`` assumes a supersede-bearing batch, which needs no
+    stats job.
+
+    ``deferred_watermark`` and ``pre_commit`` pass through to
+    ``LakeTable.merge``.
 
     Batch-level OCC retry: merge() absorbs MOR commit races internally by
     re-committing the already-written delta files against the fresh
@@ -258,44 +148,42 @@ def apply_batch(
     from .plans.lake import CommitInFlightError, ConcurrentWriteError
 
     extra = None
+    cached = None
     if dead_letter_dir is not None:
         from .operators.quarantine import quarantine
 
-        events, counts = quarantine(events, dead_letter_dir,
+        cached = events.persist()
+        events, counts = quarantine(cached, dead_letter_dir,
                                     batch_tag=batch_id)
         extra = {"quarantined": counts}
-    par = events.sparkSession.sparkContext.defaultParallelism
+    dedup = (mode == "cow" or stats is None
+             or choose_mor_dedup(events, stats=stats) == "agg")
     last_err: ConcurrentWriteError | None = None
-    for _ in range(3):
-        m = table.manifest()
-        if mode == "cow":
-            dedup: bool | str = choose_cow_dedup(
-                n_buckets=m["n_buckets"], parallelism=par)
-        elif mor_dedup == "auto":
-            dedup = choose_mor_dedup(
-                events, n_buckets=m["n_buckets"], parallelism=par)
-        else:
-            dedup = mor_dedup
-        scattered = mode == "mor" and delta_layout == "scattered"
-        aligned = m.get("bucket_hash") == "murmur3" and not scattered
-        try:
-            return table.merge(
-                prepare_batch(events, dedup=dedup, key=m["key"],
-                              bucket_into=m["n_buckets"] if aligned else None,
-                              winners=winners if dedup in (True, "filter")
-                              else None),
-                batch_id=batch_id, watermark_seq=watermark_seq,
-                mode=mode, extra_metrics=extra, src_aligned=aligned,
-                delta_layout=delta_layout, pre_commit=pre_commit,
-            )
-        except CommitInFlightError:
-            # a possibly-live writer holds the next version (within the
-            # abandoned-commit grace) — merge() already rebased with
-            # backoff; re-preparing in a tight loop just spins. Surface it.
-            raise
-        except ConcurrentWriteError as e:
-            last_err = e
-    raise last_err
+    try:
+        for _ in range(3):
+            m = table.manifest()
+            aligned = m.get("bucket_hash") == "murmur3"
+            try:
+                return table.merge(
+                    prepare_batch(events, dedup=dedup, key=m["key"],
+                                  bucket_into=m["n_buckets"] if aligned
+                                  else None),
+                    batch_id=batch_id, watermark_seq=watermark_seq,
+                    deferred_watermark=deferred_watermark, mode=mode,
+                    extra_metrics=extra, src_aligned=aligned,
+                    pre_commit=pre_commit,
+                )
+            except CommitInFlightError:
+                # a possibly-live writer holds the next version (within the
+                # abandoned-commit grace) — merge() already rebased with
+                # backoff; re-preparing in a tight loop just spins.
+                raise
+            except ConcurrentWriteError as e:
+                last_err = e
+        raise last_err
+    finally:
+        if cached is not None:
+            cached.unpersist()
 
 
 def replay(
@@ -309,8 +197,6 @@ def replay(
     mode: str = "cow",
     compact_every: int | None = None,
     dead_letter_dir: str | None = None,
-    mor_dedup: bool | str = "auto",
-    delta_layout: str = "clustered",
     pipeline_depth: int = 1,
 ) -> list[MergeResult]:
     """Replay a change log into a (possibly new) pages table in
@@ -322,12 +208,12 @@ def replay(
     rewrites; ``compact_every=k`` folds deltas into the base every k
     batches (the production cadence that bounds read amplification).
 
-    ``pipeline_depth=d`` (MOR only): keep up to ``d`` batches in flight —
-    batch b+1's delta-write job overlaps batch b's straggler tail and
-    commit bookkeeping; manifest commits stay strictly ordered (see
-    _replay_batches_pipelined). Final state is identical to serial
-    replay for every depth (state is a pure function of the event set;
-    asserted by tests/test_replay_pipeline.py)."""
+    ``pipeline_depth=d`` (MOR only; COW always runs at depth 1): keep up
+    to ``d`` batches in flight — batch b+1's delta-write job overlaps
+    batch b's straggler tail and commit bookkeeping; manifest commits
+    stay strictly ordered (see _replay_batches). Final state is identical
+    for every depth (state is a pure function of the event set; asserted
+    by tests/test_replay_pipeline.py)."""
     if LakeTable.exists(table_path):
         table = LakeTable(spark, table_path)
     else:
@@ -338,122 +224,34 @@ def replay(
                 base = type(base)([f for f in base.fields if f.name != "lang"])
         table = LakeTable.create(spark, table_path, base, key="url", n_buckets=n_buckets)
 
-    # one column-pruned pass yields the batch-split bounds AND (only when
-    # the auto policy needs them) the supersede stats — no extra job
-    need_stats = mode == "mor" and mor_dedup == "auto"
+    # one column-pruned pass yields the batch-split bounds AND (MOR only)
+    # the supersede stats of the dedup policy — no extra job
     aggs = [F.min("event_seq").alias("lo"), F.max("event_seq").alias("hi")]
-    if need_stats:
+    if mode == "mor":
         aggs += [F.count("*").alias("n"),
                  F.approx_count_distinct("url").alias("k")]
     bounds = events.agg(*aggs).first()
     if bounds["lo"] is None:
         return []
-    if need_stats:
-        # one whole-log decision (per-batch ratios track the log's at this
-        # generator's stationary key mix; a real tailer decides per batch)
-        mor_dedup = choose_mor_dedup(
-            events, stats=(bounds["n"], bounds["k"]),
-            n_buckets=table.manifest()["n_buckets"],
-            parallelism=spark.sparkContext.defaultParallelism)
+    # one whole-log decision (per-batch ratios track the log's at this
+    # generator's stationary key mix; the tailer decides per batch)
+    stats = (bounds["n"], bounds["k"]) if mode == "mor" else None
     lo, hi = bounds["lo"], bounds["hi"]
-    span = hi - lo + 1
-    step = max(1, (span + n_batches - 1) // n_batches)
-
-    # Amortize the per-batch winner agg: with the broadcast-filter
-    # strategies (True/"filter"), each batch otherwise runs its own small
-    # 2-stage winner job whose fixed costs (stage scheduling, planning,
-    # broadcast build) are constant in wall time — at high parallelism
-    # they dominate the shrunk batch wall and cap scaling efficiency
-    # (measured: 4 x ~0.4s of per-batch winner jobs at local[4] vs one
-    # ~0.7s combined job; BENCH/BASELINE.md round 5). One column-pruned
-    # pass over the whole replay range computes every batch's winner set
-    # (grouped by the same floor((seq - lo)/step) ranges the loop cuts),
-    # cached — per-batch broadcast builds then read O(batch keys) from
-    # cache instead of re-scanning the log. Winner semantics are
-    # identical: winners are within-batch either way (cross-batch
-    # supersedes resolve at read/merge), and the packed ordering decimal
-    # is the shared lww._pack_ord. Skipped for a single batch (nothing to
-    # amortize) and for non-broadcast strategies (agg/False never build
-    # winner sets). Cache is O(distinct keys) rows of key+decimal.
-    winners_all = None
-    # mor_dedup is already policy-resolved here when mode == "mor" (the
-    # need_stats branch above); COW's per-batch choose_cow_dedup picks
-    # "agg" at every sane local geometry, so precomputing for it would
-    # usually be a wasted pass — gate on the MOR broadcast strategies.
-    if n_batches > 1 and mode == "mor" and mor_dedup in (True, "filter"):
-        from .operators.lww import lww_batch_winners
-
-        batch_expr = F.floor((F.col("event_seq") - F.lit(lo)) / F.lit(step))
-        winners_all = lww_batch_winners(
-            events, batch_expr, key=table.manifest()["key"],
-            ts_col="warc_ts", seq_col="event_seq").persist()
-        winners_all.count()
-
-    results = []
-    try:
-        return _replay_batches(
-            table, events, results, lo=lo, step=step, hi=hi,
-            n_batches=n_batches, winners_all=winners_all, mode=mode,
-            dead_letter_dir=dead_letter_dir, mor_dedup=mor_dedup,
-            delta_layout=delta_layout, compact_every=compact_every,
-            pipeline_depth=pipeline_depth)
-    finally:
-        if winners_all is not None:
-            winners_all.unpersist()
+    step = max(1, (hi - lo + 1 + n_batches - 1) // n_batches)
+    return _replay_batches(
+        table, events, lo=lo, step=step, hi=hi, n_batches=n_batches,
+        mode=mode, stats=stats, dead_letter_dir=dead_letter_dir,
+        compact_every=compact_every,
+        depth=pipeline_depth if mode == "mor" else 1)
 
 
-def _replay_batches(table, events, results, *, lo, step, hi, n_batches,
-                    winners_all, mode, dead_letter_dir, mor_dedup,
-                    delta_layout, compact_every, pipeline_depth=1):
-    if pipeline_depth > 1 and mode == "mor" and n_batches > 1:
-        return _replay_batches_pipelined(
-            table, events, results, lo=lo, step=step, hi=hi,
-            n_batches=n_batches, winners_all=winners_all,
-            dead_letter_dir=dead_letter_dir, mor_dedup=mor_dedup,
-            delta_layout=delta_layout, compact_every=compact_every,
-            depth=pipeline_depth)
-    for b in range(n_batches):
-        start, end = lo + b * step, min(lo + (b + 1) * step, hi + 1)
-        if start >= end:
-            break
-        chunk = events.filter((F.col("event_seq") >= start) & (F.col("event_seq") < end))
-        results.append(
-            apply_batch(
-                table,
-                chunk,
-                winners=(winners_all.filter(F.col("_b") == b).drop("_b")
-                         if winners_all is not None else None),
-                # "ns:seq" structured id -> O(1) ledger entry (per-namespace
-                # high watermark). The id encodes the range END so that
-                # "seq <= hwm" truly means "every log position <= hwm is
-                # applied" regardless of batching: batches are contiguous
-                # ascending ranges from the log's minimum, and the log is
-                # append-only (event_seq only grows at the tail), so a
-                # re-run over a GROWN log — whose shifted boundaries would
-                # have broken start-encoded ids — skips exactly the batches
-                # it fully covered before and re-applies straddlers, whose
-                # already-applied rows are per-row stale no-ops (COW) /
-                # resolution tie-collapsed (MOR).
-                batch_id=f"replay:{end - 1:012d}",
-                watermark_seq=end - 1,
-                mode=mode,
-                dead_letter_dir=dead_letter_dir,
-                mor_dedup=mor_dedup,
-                delta_layout=delta_layout,
-            )
-        )
-        if compact_every and (b + 1) % compact_every == 0 and not results[-1].noop:
-            table.compact()
-    return results
+def _replay_batches(table, events, *, lo, step, hi, n_batches, mode, stats,
+                    dead_letter_dir, compact_every, depth):
+    """Apply the ``n_batches`` ranges with up to ``depth`` batches in
+    flight; depth 1 is plain serial replay.
 
-
-def _replay_batches_pipelined(table, events, results, *, lo, step, hi,
-                              n_batches, winners_all, dead_letter_dir,
-                              mor_dedup, delta_layout, compact_every, depth):
-    """Pipelined MOR replay: up to ``depth`` batches in flight at once.
-
-    The expensive part of a MOR batch — scan -> winner filter -> extract
-    -> delta-file write — is independent across batches (winner sets are
+    The expensive part of a MOR batch — scan -> dedup -> extract ->
+    delta-file write — is independent across batches (winner sets are
     within-batch; cross-batch supersedes resolve at read/compact, so the
     final state is a pure function of the event SET). Only the manifest
     commits must stay ORDERED, because the ledger's per-namespace high
@@ -466,16 +264,20 @@ def _replay_batches_pipelined(table, events, results, *, lo, step, hi,
     ``pre_commit`` barrier until batch b has committed. Commit races
     that slip through anyway (e.g. a concurrent compactor) are absorbed
     by the MOR OCC rebase, which re-commits the already-written files
-    with zero Spark re-run (plans/lake.py).
+    with zero Spark re-run (plans/lake.py). COW merges rewrite the
+    buckets they read, so COW replays run at depth 1.
 
     Compaction cadence stays on the caller's thread and quiesces the
-    window first (waits for the cadence batch's commit); a deeper
-    overlap is legal (compactor-vs-tailer rebase is tested) but buys
-    nothing at the cadences the bench uses.
+    window first (waits for the cadence batch's commit).
     """
     from concurrent.futures import ThreadPoolExecutor
 
     def _one(b, prev_fut):
+        if prev_fut is not None and prev_fut.done():
+            # a failed predecessor stops the replay; at depth 1 it has
+            # always finished here, so a COW replay (no commit barrier)
+            # never commits past a failed batch
+            prev_fut.result()
         start, end = lo + b * step, min(lo + (b + 1) * step, hi + 1)
         if start >= end:
             if prev_fut is not None:
@@ -486,14 +288,22 @@ def _replay_batches_pipelined(table, events, results, *, lo, step, hi,
         return apply_batch(
             table,
             chunk,
-            winners=(winners_all.filter(F.col("_b") == b).drop("_b")
-                     if winners_all is not None else None),
+            # "ns:seq" structured id -> O(1) ledger entry (per-namespace
+            # high watermark). The id encodes the range END so that
+            # "seq <= hwm" truly means "every log position <= hwm is
+            # applied" regardless of batching: batches are contiguous
+            # ascending ranges from the log's minimum, and the log is
+            # append-only (event_seq only grows at the tail), so a re-run
+            # over a GROWN log — whose shifted boundaries would have
+            # broken start-encoded ids — skips exactly the batches it
+            # fully covered before and re-applies straddlers, whose
+            # already-applied rows are per-row stale no-ops (COW) /
+            # resolution tie-collapsed (MOR).
             batch_id=f"replay:{end - 1:012d}",
             watermark_seq=end - 1,
-            mode="mor",
+            mode=mode,
             dead_letter_dir=dead_letter_dir,
-            mor_dedup=mor_dedup,
-            delta_layout=delta_layout,
+            stats=stats,
             # ordered-commit barrier: predecessor committed (or failed)
             pre_commit=(prev_fut.result if prev_fut is not None else None),
         )
@@ -508,6 +318,7 @@ def _replay_batches_pipelined(table, events, results, *, lo, step, hi,
                 r = prev.result()  # quiesce the window up to the cadence
                 if r is not None and not r.noop:
                     table.compact()
+    results = []
     for f in futs:
         r = f.result()
         if r is not None:

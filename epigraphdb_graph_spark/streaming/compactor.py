@@ -92,8 +92,11 @@ class BackgroundCompactor:
     def _run(self) -> None:
         while True:
             self._wake.wait()
-            stopping = self._stop.is_set()
+            # clear BEFORE reading stop: a close() landing between the two
+            # would otherwise have its wake consumed while stopping reads
+            # False, and the worker re-blocks with nobody left to wake it
             self._wake.clear()
+            stopping = self._stop.is_set()
             try:
                 if not LakeTable.exists(self._path):
                     pass  # first micro-batch not committed yet

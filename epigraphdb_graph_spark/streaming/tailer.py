@@ -5,8 +5,9 @@ memoization plus a full drop-and-rebuild import (workflow/Snakefile:135-139,
 156-163). This module replaces it with a real tailer: a Structured
 Streaming file source over the change-log directory (the sandbox stand-in
 for a binlog/Kafka topic — same micro-batch surface), applying each
-micro-batch through the same ``prepare_batch -> LakeTable.merge`` path the
-batch replayer uses.
+micro-batch through ``replay.apply_batch`` — the same quarantine, dedup
+policy, prepare and MERGE path (with its bounded OCC re-prepare retry)
+the batch replayer uses.
 
 Exactly-once story (north_rule), two independent layers:
 
@@ -36,34 +37,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import replay
 from ..plans.lake import LakeTable
-from ..replay import prepare_batch
 from ..schema import CHANGE_EVENT_SCHEMA, PAGES_SCHEMA
-
-
-#: exchange-width policy target: rows per post-exchange task. Below this
-#: the per-task Arrow/python-worker setup of the dedup+extraction stage
-#: outweighs the parallelism it buys (measured ~20-25% per-micro-batch
-#: win narrowing 32 -> 8 at ~12k rows on local[32]).
-_MIN_ROWS_PER_EXCHANGE_TASK = 2_000
-
-
-def _pick_exchange_width(rows: int, n_buckets: int, parallelism: int) -> int | None:
-    """Width for prepare_batch's fused exchange on a micro-batch of
-    ``rows`` events: the largest power-of-two divisor of ``n_buckets``
-    that keeps >= _MIN_ROWS_PER_EXCHANGE_TASK rows per task, floored at 4
-    (below that the lost parallelism costs more than the setup saved).
-    Returns None (full width) when the batch is big enough — large
-    batches always exchange at n_buckets so partition == bucket exactly."""
-    if rows <= 0:
-        return None
-    want = max(rows // _MIN_ROWS_PER_EXCHANGE_TASK, 4)
-    if want >= min(n_buckets, parallelism):
-        return None
-    w = n_buckets
-    while w > 4 and w % 2 == 0 and w // 2 >= want:
-        w //= 2
-    return w if w < n_buckets else None
 
 
 def tail_change_log(
@@ -79,7 +55,6 @@ def tail_change_log(
     mode: str = "cow",
     dead_letter_dir: str | None = None,
     auto_compact_delta_files: int | None = None,
-    mor_dedup: bool | str = "auto",
     compactor=None,
 ):
     """Tail ``log_dir`` (parquet change-event files) into the lake table at
@@ -120,10 +95,11 @@ def tail_change_log(
 
     # previous micro-batch's observed (rows, distinct keys): CDC streams
     # are key-mix-stationary at micro-batch cadence, so last batch's
-    # supersede ratio is the right prior for this batch's strategy pick —
+    # supersede ratio is the right prior for this batch's MOR dedup pick —
     # and it makes the pick FREE (no stats job; the Observation below
-    # fills it during the merge's own write job). A wrong pick costs only
-    # a wasted (or skipped) dedup shuffle — state is identical either way.
+    # fills it during the merge's own write job). The first micro-batch
+    # has no prior and is treated as supersede-bearing. A wrong pick costs
+    # only a wasted (or skipped) dedup shuffle — state is identical.
     prev_stats: list[tuple[int, int] | None] = [None]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -140,43 +116,6 @@ def tail_change_log(
             F.count("*").alias("n"),
             F.approx_count_distinct("url").alias("k"),
         )
-        extra = None
-        cached = None
-        if dead_letter_dir is not None:
-            from ..operators.quarantine import quarantine
-
-            # quarantine splits + counts in side jobs: cache the scanned
-            # batch so those jobs and the merge share one source pass
-            cached = events.persist()
-            events, counts = quarantine(cached, dead_letter_dir,
-                                        batch_tag=f"{ns}-{batch_id}")
-            extra = {"quarantined": counts}
-        par = batch_df.sparkSession.sparkContext.defaultParallelism
-        m = table.manifest()
-        if mode == "cow":
-            from ..replay import choose_cow_dedup
-
-            dedup: bool | str = choose_cow_dedup(
-                n_buckets=m["n_buckets"], parallelism=par)
-        elif mor_dedup == "auto":
-            from ..replay import choose_mor_dedup
-
-            if prev_stats[0] is not None:
-                dedup = choose_mor_dedup(
-                    events, stats=prev_stats[0],
-                    n_buckets=m["n_buckets"], parallelism=par)
-            else:
-                # first batch: assume supersede-bearing (the normal CDC
-                # shape) and pick by geometry alone
-                from ..replay import choose_cow_dedup
-
-                dedup = choose_cow_dedup(
-                    n_buckets=m["n_buckets"], parallelism=par)
-        else:
-            # explicit override — e.g. "filter" for column-prunable sources
-            # with KB-scale payloads (see replay.choose_mor_dedup docstring)
-            dedup = mor_dedup
-        aligned = m.get("bucket_hash") == "murmur3"
 
         def _wm_from_obs() -> int:
             got = raw_obs.get  # filled by the completed merge job
@@ -184,27 +123,18 @@ def tail_change_log(
             wm = got.get("wm")
             return int(wm) if wm is not None else -1
 
-        width = None
-        if aligned and prev_stats[0] is not None:
-            width = _pick_exchange_width(
-                prev_stats[0][0], m["n_buckets"], par)
-        table.merge(
-            prepare_batch(events, dedup=dedup, key=m["key"],
-                          bucket_into=m["n_buckets"] if aligned else None,
-                          exchange_width=width),
+        replay.apply_batch(
+            table, events,
             batch_id=f"stream-{ns}:{batch_id:012d}",
-            watermark_seq=None,
-            deferred_watermark=_wm_from_obs,
             mode=mode,
-            extra_metrics=extra,
-            src_aligned=aligned,
+            dead_letter_dir=dead_letter_dir,
+            stats=prev_stats[0],
+            deferred_watermark=_wm_from_obs,
         )
         if compactor is not None:
             compactor.notify()  # non-blocking; folds on its own thread
         elif auto_compact_delta_files is not None:
             table.maybe_compact(max_delta_files=auto_compact_delta_files)
-        if cached is not None:
-            cached.unpersist()
 
     writer = (
         events.writeStream.foreachBatch(_apply)

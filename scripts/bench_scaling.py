@@ -32,7 +32,7 @@ full-shape warmup; per level the best of ``--runs`` trials is kept
 
 Writes/updates BENCH/BASELINE.md. Usage:
     python scripts/bench_scaling.py [n_events] [mode] [body_repeat] [runs]
-        [N] [strategy] [layout] [trials_per_level] [pipeline_depth]
+        [N] [trials_per_level] [pipeline_depth]
 """
 
 from __future__ import annotations
@@ -64,9 +64,8 @@ def gen_log(log_dir: str, n_events: int, body_repeat: int) -> None:
     """Materialize the change log ONCE (untimed, shared by all levels):
     the north-rule job is tailing an EXISTING binlog/log into the lake —
     synthesizing 3.5 GB of page bodies inside the timed region measures
-    the generator's memory traffic, not the engine. From parquet, the
-    winner-filter's pruned pass reads 3 columns and batch slices prune on
-    event_seq row-group stats."""
+    the generator's memory traffic, not the engine. From parquet, batch
+    slices prune on event_seq row-group stats."""
     _cli([
         "gen-log", "--out", log_dir, "--events", str(n_events),
         # key universe scales with events (CC-style crawl); page size is
@@ -79,7 +78,6 @@ def gen_log(log_dir: str, n_events: int, body_repeat: int) -> None:
 
 
 def run_level(cores: int, log_dir: str, mode: str, body_repeat: int,
-              strategy: str = "filter", layout: str = "clustered",
               pipeline: int = 1) -> dict:
     tmp = tempfile.mkdtemp(prefix=f"scale_{cores}_")
     try:
@@ -89,18 +87,11 @@ def run_level(cores: int, log_dir: str, mode: str, body_repeat: int,
             "--log-dir", log_dir,
             "--body-repeat", str(body_repeat),  # warmup page shape
             "--batches", "4", "--buckets", "32",
-            "--mor-layout", layout,
             "--pipeline", str(pipeline),
             "--mode", mode, "--master", f"local[{cores}]", "--warmup",
         ]
         if mode == "mor":
-            # strategy pinned IDENTICAL at both levels (same physical job).
-            # "filter": pruned winners pass reads 3 columns, loser payloads
-            # never read (column-prunable parquet log). "agg": single-job
-            # exchange-first dedup — round-3 measurements have it faster in
-            # absolute terms at both 1 and 4 cores on the 7 KB from-log
-            # shape (46.1s vs 55.3s @1 core, 200k events).
-            cmd += ["--compact-every", "4", "--mor-dedup", strategy]
+            cmd += ["--compact-every", "4"]
         return _cli(cmd)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -112,18 +103,16 @@ def main():
     body_repeat = int(sys.argv[3]) if len(sys.argv) > 3 else 100
     runs = int(sys.argv[4]) if len(sys.argv) > 4 else 2
     n_lo = int(sys.argv[5]) if len(sys.argv) > 5 else DEFAULT_N
-    strategy = sys.argv[6] if len(sys.argv) > 6 else "filter"
-    layout = sys.argv[7] if len(sys.argv) > 7 else "clustered"
     # trials per level per WINDOW: with 1, a single hypervisor-storm spike
     # (memory: identical jobs vary 2-7x on this host) lands verbatim in
     # that window's pair; with 2+, each window's level takes its best wall
     # (bench.py's best-of-2 estimator) and a storm must hit both trials of
     # a level inside one window to survive into the ratio
-    trials = int(sys.argv[8]) if len(sys.argv) > 8 else 1
+    trials = int(sys.argv[6]) if len(sys.argv) > 6 else 1
     # MOR batches in flight (replay --pipeline): overlapping batch b+1's
     # delta-write job with batch b's commit hides the constant per-batch
     # driver-serial term — the dominant anti-scaling cost at this job size
-    pipeline = int(sys.argv[9]) if len(sys.argv) > 9 else 1
+    pipeline = int(sys.argv[7]) if len(sys.argv) > 7 else 1
     core_pair = (n_lo, 4 * n_lo)
 
     log_dir = tempfile.mkdtemp(prefix="scale_log_") + "/changelog"
@@ -139,8 +128,7 @@ def main():
             trial: dict[int, dict] = {}
             for cores in core_pair:
                 for k in range(trials):
-                    r = run_level(cores, log_dir, mode, body_repeat,
-                                  strategy, layout, pipeline)
+                    r = run_level(cores, log_dir, mode, body_repeat, pipeline)
                     print(f"local[{cores}] run{t}.{k}: {r['wall_s']}s  "
                           f"{r['events_per_sec']} events/sec  "
                           f"final_rows={r['final_rows']}")
@@ -177,7 +165,7 @@ def main():
     os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     path = os.path.join(ROOT, "BENCH", "BASELINE.md")
     row = (
-        f"| {stamp} | {mode}-fromlog-{strategy}-{layout}"
+        f"| {stamp} | {mode}-fromlog"
         f"{f'-pipe{pipeline}' if pipeline > 1 else ''} | {n_events} | {70 * body_repeat} "
         f"| {lo}->{hi} | {tp_lo} | {tp_hi} | {eff:.3f} "
         f"| {best[hi]['final_rows']} |\n"

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Decompose a from-log replay wall into Spark-job time vs driver-serial
-gaps (Spark UI REST API), per strategy — the measurement behind the
-scaling-campaign design in BENCH/BASELINE.md.
+gaps (Spark UI REST API) — the measurement behind the scaling-campaign
+design in BENCH/BASELINE.md.
 
-Usage: python scripts/profile_serial.py <log_dir> <cores> <mode> <strategy> [batches]
+Usage: python scripts/profile_serial.py <log_dir> <cores> <mode> [batches]
 Prints one JSON line: wall, sum of job walls, serial gap, per-job list.
 """
 
@@ -33,9 +33,8 @@ def jobs_info(port: int = 4040) -> list[dict]:
 
 
 def main():
-    log_dir, cores, mode, strategy = sys.argv[1:5]
-    batches = int(sys.argv[5]) if len(sys.argv) > 5 else 4
-    layout = sys.argv[6] if len(sys.argv) > 6 else "clustered"
+    log_dir, cores, mode = sys.argv[1:4]
+    batches = int(sys.argv[4]) if len(sys.argv) > 4 else 4
     from epigraphdb_graph_spark.replay import replay
     from epigraphdb_graph_spark.plans.lake import LakeTable
     from epigraphdb_graph_spark.session import get_spark
@@ -51,7 +50,7 @@ def main():
     lo = events.agg(F.min("event_seq")).first()[0]
     replay(spark, os.path.join(wtmp, "t"),
            events.filter(F.col("event_seq") < lo + 20000),
-           n_batches=2, n_buckets=32, mode=mode, mor_dedup=strategy)
+           n_batches=2, n_buckets=32, mode=mode)
     LakeTable(spark, os.path.join(wtmp, "t")).compact()
     shutil.rmtree(wtmp, ignore_errors=True)
 
@@ -59,8 +58,7 @@ def main():
     tmp = tempfile.mkdtemp(prefix="prof_")
     t0 = time.perf_counter()
     replay(spark, os.path.join(tmp, "t"), events, n_batches=batches,
-           n_buckets=32, mode=mode, mor_dedup=strategy, compact_every=batches,
-           delta_layout=layout)
+           n_buckets=32, mode=mode, compact_every=batches)
     wall = time.perf_counter() - t0
     time.sleep(0.5)
     rows = LakeTable(spark, os.path.join(tmp, "t")).read().count()
@@ -90,8 +88,8 @@ def main():
         j.pop("_sub"), j.pop("_comp")
     job_sum = sum(j["s"] for j in out_jobs)
     print(json.dumps({
-        "cores": int(cores), "mode": mode, "strategy": strategy,
-        "layout": layout, "batches": batches, "wall_s": round(wall, 2),
+        "cores": int(cores), "mode": mode,
+        "batches": batches, "wall_s": round(wall, 2),
         "job_sum_s": round(job_sum, 2),
         "serial_gap_s": round(wall - job_sum, 2),
         "final_rows": rows,

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pandas as pd
 import pytest
 
@@ -298,6 +301,32 @@ def test_competing_compactors_refused(spark, tmp_path):
         c2.compact()
 
 
+class _SwappedWake(threading.Event):
+    """Instrumented stand-in for a compactor's wake event; ``waiting`` is
+    set once the worker has moved onto it."""
+
+    def __init__(self):
+        super().__init__()
+        self.waiting = threading.Event()
+
+    def wait(self, timeout=None):
+        self.waiting.set()
+        return super().wait(timeout)
+
+
+def _compactor_on(tmp_path, wake: _SwappedWake):
+    """A normally constructed BackgroundCompactor whose worker has moved
+    its wait() onto ``wake``. No table exists, so the worker's loop body
+    is a no-op and only the shutdown protocol is under test."""
+    from epigraphdb_graph_spark.streaming.compactor import BackgroundCompactor
+
+    comp = BackgroundCompactor(None, str(tmp_path / "never_created"))
+    old, comp._wake = comp._wake, wake
+    old.set()  # release the worker's wait() on the original event
+    assert wake.waiting.wait(5.0)
+    return comp
+
+
 def test_background_compactor_close_shutdown_handoff(tmp_path):
     """close() must publish the stop flag BEFORE the wakeup: in the
     reverse order, a worker blocked in wait() can consume close()'s wake,
@@ -306,33 +335,87 @@ def test_background_compactor_close_shutdown_handoff(tmp_path):
     instrumented wake below FORCES that adversarial schedule: its set()
     does not return until the worker has consumed (cleared) the event, so
     a stop flag set after the wake is provably set too late."""
-    import threading
-    import time
 
-    from epigraphdb_graph_spark.streaming.compactor import BackgroundCompactor
-
-    class HandoffEvent(threading.Event):
+    class HandoffEvent(_SwappedWake):
         def set(self):  # noqa: A003 - mirrors threading.Event
             super().set()
             deadline = time.monotonic() + 2.0
             while self.is_set() and time.monotonic() < deadline:
                 time.sleep(0.001)
 
-    # assemble without __init__ so the worker thread starts with the
-    # instrumented event already in place (no table: the worker's loop
-    # body is a pure no-op, isolating the shutdown protocol itself)
-    comp = BackgroundCompactor.__new__(BackgroundCompactor)
-    comp._spark = None
-    comp._path = str(tmp_path / "never_created")
-    comp._max = 64
-    comp._drop = False
-    comp._wake = HandoffEvent()
-    comp._stop = threading.Event()
-    comp._err = None
-    comp.compactions = 0
-    comp._thread = threading.Thread(target=comp._run, daemon=True)
-    comp._thread.start()
-    time.sleep(0.05)  # let the worker reach wait()
-
+    comp = _compactor_on(tmp_path, HandoffEvent())
     comp.close(timeout=5.0)  # deadlocks (TimeoutError) if wake precedes stop
     assert not comp._thread.is_alive()
+
+
+def test_background_compactor_close_after_wake_not_lost(tmp_path):
+    """A close() landing after the worker returns from wait() but before
+    it clears the wake event must still stop the worker. The worker has
+    to clear the event BEFORE reading the stop flag: read first, and the
+    flag it saw predates close() while the clear swallows close()'s wake,
+    so the worker re-blocks and close() times out. The instrumented
+    clear() below forces close() into exactly that window."""
+
+    class CloseBeforeClear(_SwappedWake):
+        def __init__(self):
+            super().__init__()
+            self.armed = False
+            self.in_window = threading.Event()
+            self.closer_signalled = threading.Event()
+
+        def set(self):  # noqa: A003 - mirrors threading.Event
+            super().set()
+            if self.in_window.is_set():
+                self.closer_signalled.set()
+
+        def clear(self):
+            if self.armed:
+                self.armed = False
+                self.in_window.set()
+                self.closer_signalled.wait(5.0)  # close() has signalled
+            super().clear()
+
+    wake = CloseBeforeClear()
+    comp = _compactor_on(tmp_path, wake)
+    wake.armed = True
+    comp.notify()
+    assert wake.in_window.wait(5.0)  # worker is between wait() and clear()
+    comp.close(timeout=5.0)  # TimeoutError if close()'s wake is swallowed
+    assert not comp._thread.is_alive()
+
+
+def test_tailer_cow_lost_race_reprepares(spark, tmp_path, monkeypatch):
+    """A COW micro-batch whose first commit attempt loses an OCC race (a
+    competing writer committed after the tailer read its snapshot) must
+    land through apply_batch's re-prepare; the query must not fail."""
+    from epigraphdb_graph_spark.streaming.tailer import tail_change_log
+
+    path = str(tmp_path / "t8")
+    LakeTable.create(spark, path, PAGES_SCHEMA, key="url", n_buckets=2)
+    w1 = LakeTable(spark, path)
+    stale = w1.manifest()  # v0: the snapshot the tailer derives from
+    apply_batch(w1, _ev(spark, 1, "https://a.org/p1"), batch_id="b1")  # wins
+    log_dir = str(tmp_path / "log")
+    _ev(spark, 2, "https://a.org/p2").write.parquet(log_dir)
+
+    real = LakeTable.manifest
+    calls = {"n": 0}
+
+    def stale_first(self, version=None):
+        # stale twice: apply_batch's read + merge's own read
+        if version is None and self.path == w1.path:
+            calls["n"] += 1
+            if calls["n"] <= 2:
+                return dict(stale)
+        return real(self, version)
+
+    monkeypatch.setattr(LakeTable, "manifest", stale_first)
+    q = tail_change_log(spark, log_dir, path, str(tmp_path / "ckpt"),
+                        mode="cow")
+    q.awaitTermination(120)  # raises if the lost race failed the query
+    monkeypatch.undo()
+    assert calls["n"] > 2  # the re-prepare read the fresh snapshot
+    t = LakeTable(spark, path)
+    assert t.current_version() == 2
+    got = {r["url"] for r in t.read().select("url").collect()}
+    assert got == {"https://a.org/p1", "https://a.org/p2"}

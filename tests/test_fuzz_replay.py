@@ -53,8 +53,6 @@ def pages_schema():
     log=event_logs(),
     n_batches=st.integers(min_value=1, max_value=3),
     mode=st.sampled_from(["cow", "mor"]),
-    # every MOR winner strategy must be state-equal (pure cost choice)
-    mor_dedup=st.sampled_from(["auto", True, "filter", False]),
     compact=st.booleans(),
 )
 @settings(max_examples=7, deadline=None,
@@ -62,12 +60,12 @@ def pages_schema():
                                  HealthCheck.too_slow])
 def test_replay_state_is_batching_and_mode_invariant(
         spark, tmp_path_factory, pages_schema, log, n_batches, mode,
-        mor_dedup, compact):
+        compact):
     path = str(tmp_path_factory.mktemp("fuzz") / "t")
     events = spark.createDataFrame(
         log, "event_seq long, op string, url string, warc_ts timestamp, html binary")
     replay(spark, path, events, n_batches=n_batches, n_buckets=4,
-           mode=mode, schema=pages_schema, mor_dedup=mor_dedup)
+           mode=mode, schema=pages_schema)
     table = LakeTable(spark, path)
     if compact:
         table.compact()

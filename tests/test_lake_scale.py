@@ -156,32 +156,6 @@ def test_steady_state_broadcast_resolution(spark, tmp_path, events, oracle_state
     _assert_equal(_state(spark, path), oracle_state)
 
 
-def test_lww_winner_filter_semantics(spark):
-    """Broadcast winner filter: keeps exactly the max-(ts,seq) row per key
-    — plus all copies of a tied winner (re-delivery; resolution dedups)."""
-    import pandas as pd
-
-    from epigraphdb_graph_spark.operators.lww import (
-        lww_dedup_agg, lww_winner_filter)
-
-    rows = [
-        (1, "a", pd.Timestamp("2024-01-01"), "v1"),
-        (2, "a", pd.Timestamp("2024-01-02"), "v2"),   # winner for a
-        (3, "b", pd.Timestamp("2024-01-01"), "w1"),   # winner for b
-        (1, "c", pd.Timestamp("2024-01-03"), "x1"),   # winner for c (dup'd)
-        (1, "c", pd.Timestamp("2024-01-03"), "x1"),   # re-delivered tie
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["event_seq", "url", "warc_ts", "body"]))
-    got = lww_winner_filter(df).toPandas().sort_values(
-        ["url", "event_seq"]).reset_index(drop=True)
-    assert list(got["url"]) == ["a", "b", "c", "c"]  # tie kept twice
-    assert list(got["body"]) == ["v2", "w1", "x1", "x1"]
-    # agrees with the agg form on the deduped key set
-    agg = lww_dedup_agg(df).toPandas()
-    assert set(agg["url"]) == {"a", "b", "c"}
-
-
 def test_choose_mor_dedup_by_supersede_ratio(spark):
     """Adaptive MOR winner strategy keys on the supersede ratio
     (round-2 regression fix: payload bytes alone picked append-all for
@@ -196,24 +170,19 @@ def test_choose_mor_dedup_by_supersede_ratio(spark):
         spark, 2000, seed=5, n_domains=4, pages_per_domain=16)  # 64 keys
     append_only = generate_change_events(
         spark, 200, seed=5, n_domains=4000, pages_per_domain=4096)
-    assert choose_mor_dedup(superseding) is True
+    assert choose_mor_dedup(superseding) == "agg"
     assert choose_mor_dedup(append_only) is False
     # precomputed stats short-circuit the agg entirely
-    assert choose_mor_dedup(superseding, stats=(1000, 100)) is True
+    assert choose_mor_dedup(superseding, stats=(1000, 100)) == "agg"
     assert choose_mor_dedup(superseding, stats=(1000, 990)) is False
     assert choose_mor_dedup(superseding, stats=(0, 0)) is False
-    # geometry-aware branch: the single-job exchange-first "agg" form is
-    # picked only when the post-exchange UDF stage (n_buckets tasks wide)
-    # amortizes over the cores — <= MOR_AGG_MAX_BUCKETS_PER_CORE rounds
+    # table geometry no longer affects the pick (the benchmark's call shape)
     assert choose_mor_dedup(
-        superseding, stats=(1000, 100), n_buckets=32, parallelism=32) == "agg"
+        None, stats=(1000, 100), n_buckets=8, parallelism=4) == "agg"
     assert choose_mor_dedup(
-        superseding, stats=(1000, 100), n_buckets=32, parallelism=4) == "agg"
+        None, stats=(1000, 100), n_buckets=32, parallelism=1) == "agg"
     assert choose_mor_dedup(
-        superseding, stats=(1000, 100), n_buckets=32, parallelism=1) is True
-    # append-only wins regardless of geometry
-    assert choose_mor_dedup(
-        superseding, stats=(1000, 990), n_buckets=32, parallelism=32) is False
+        None, stats=(1000, 990), n_buckets=8, parallelism=4) is False
 
 
 def test_ledger_is_bounded_and_resumable(spark, tmp_path, events):

@@ -24,39 +24,6 @@ def test_lww_agg_and_window_agree(spark):
     assert a.shape == w.shape
 
 
-def test_lww_batch_winners_matches_inline(spark):
-    """The replay-level winner precompute (one pass over all batches) must
-    select bit-identical survivors to the per-batch inline winner agg for
-    every batch slice — otherwise a cached winner table would silently
-    change replay results. Exercises the shared _pack_ord ordering."""
-    from epigraphdb_graph_spark.operators.lww import (
-        lww_batch_winners,
-        lww_winner_filter,
-    )
-
-    ev = generate_change_events(spark, 5000, seed=11, n_domains=15,
-                                pages_per_domain=6)
-    lo, hi = 0, 4999
-    n_batches, step = 4, 1250
-    batch_expr = F.floor((F.col("event_seq") - F.lit(lo)) / F.lit(step))
-    winners_all = lww_batch_winners(ev, batch_expr).persist()
-    try:
-        for b in range(n_batches):
-            start, end = lo + b * step, min(lo + (b + 1) * step, hi + 1)
-            chunk = ev.filter(
-                (F.col("event_seq") >= start) & (F.col("event_seq") < end))
-            inline = lww_winner_filter(chunk).select("url", "event_seq")
-            pre = lww_winner_filter(
-                chunk,
-                winners=winners_all.filter(F.col("_b") == b).drop("_b"),
-            ).select("url", "event_seq")
-            a = {tuple(r) for r in inline.collect()}
-            p = {tuple(r) for r in pre.collect()}
-            assert a == p and len(a) > 0
-    finally:
-        winners_all.unpersist()
-
-
 def test_overwrite_bulk_load_then_incremental(spark, tmp_path):
     """First-load fast path (ref: neo4j-admin bulk import vs LOAD CSV,
     README.md:10): overwrite() writes without a MERGE join; later

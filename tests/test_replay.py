@@ -172,32 +172,3 @@ def test_time_travel(spark, tmp_path, events):
     # version 1 only saw the first half of the log
     m1 = table.manifest(1)
     assert m1["watermark_seq"] < N_EVENTS - 1
-
-
-def test_scattered_delta_layout_matches_oracle(spark, tmp_path, events, oracle_state):
-    """MOR replay with delta_layout='scattered' (no bucket exchange — each
-    scan task writes the buckets it touches) must converge to the same
-    final state as the clustered layout and the oracle, with every delta
-    file still bucket-pure (partitionBy splits by the _bucket VALUE), and
-    compaction must fold the extra per-task files back to one per bucket."""
-    from epigraphdb_graph_spark.plans.lake import LakeTable
-
-    path = str(tmp_path / "pages_scattered")
-    replay(spark, path, events, n_batches=4, n_buckets=16, mode="mor",
-           mor_dedup="filter", delta_layout="scattered")
-    table = LakeTable(spark, path)
-    m = table.manifest()
-    # scattered layout: at least one bucket carries >1 delta file per commit
-    # when the scan ran multi-split (files stay bucket-pure regardless)
-    n_delta_files = sum(len(fl) for fl in m.get("deltas", {}).values())
-    assert n_delta_files >= sum(1 for fl in m.get("deltas", {}).values() if fl)
-    got = (table.read().select("url", "warc_ts", "html", "text")
-           .toPandas().sort_values("url").reset_index(drop=True))
-    _assert_state_equal(got, oracle_state)
-    # compaction folds scattered deltas; state unchanged
-    table.compact()
-    m2 = table.manifest()
-    assert not any(m2.get("deltas", {}).values())
-    got2 = (table.read().select("url", "warc_ts", "html", "text")
-            .toPandas().sort_values("url").reset_index(drop=True))
-    _assert_state_equal(got2, oracle_state)

@@ -29,9 +29,9 @@ def _events(spark, n=24_000, seed=7):
 def test_pipelined_equals_serial(spark, tmp_path, depth):
     events = _events(spark)
     serial = replay(spark, str(tmp_path / "serial"), events, n_batches=4,
-                    n_buckets=8, mode="mor", mor_dedup="filter")
+                    n_buckets=8, mode="mor")
     piped = replay(spark, str(tmp_path / f"pipe{depth}"), events,
-                   n_batches=4, n_buckets=8, mode="mor", mor_dedup="filter",
+                   n_batches=4, n_buckets=8, mode="mor",
                    pipeline_depth=depth)
     assert len(piped) == len(serial) == 4
     assert _state(spark, str(tmp_path / "serial")) == _state(
@@ -44,7 +44,7 @@ def test_pipelined_commit_order_and_ledger(spark, tmp_path):
     and every batch id lands exactly once."""
     events = _events(spark)
     res = replay(spark, str(tmp_path / "t"), events, n_batches=4,
-                 n_buckets=8, mode="mor", mor_dedup="filter",
+                 n_buckets=8, mode="mor",
                  pipeline_depth=2)
     versions = [r.version for r in res]
     assert versions == sorted(versions) and len(set(versions)) == 4
@@ -59,10 +59,10 @@ def test_pipelined_with_midstream_compaction(spark, tmp_path):
     batches append on the compacted base. State equality still holds."""
     events = _events(spark)
     serial = replay(spark, str(tmp_path / "serial"), events, n_batches=4,
-                    n_buckets=8, mode="mor", mor_dedup="filter",
+                    n_buckets=8, mode="mor",
                     compact_every=2)
     piped = replay(spark, str(tmp_path / "pipe"), events, n_batches=4,
-                   n_buckets=8, mode="mor", mor_dedup="filter",
+                   n_buckets=8, mode="mor",
                    compact_every=2, pipeline_depth=2)
     assert len(piped) == len(serial) == 4
     assert _state(spark, str(tmp_path / "serial")) == _state(
@@ -93,10 +93,10 @@ def test_pipelined_dead_letter_per_batch_dirs(spark, tmp_path):
     mixed = events.unionByName(bad)
     dl_p = str(tmp_path / "dead_pipe")
     piped = replay(spark, str(tmp_path / "pipe"), mixed, n_batches=4,
-                   n_buckets=8, mode="mor", mor_dedup="filter",
+                   n_buckets=8, mode="mor",
                    pipeline_depth=3, dead_letter_dir=dl_p)
     serial = replay(spark, str(tmp_path / "serial"), mixed, n_batches=4,
-                    n_buckets=8, mode="mor", mor_dedup="filter",
+                    n_buckets=8, mode="mor",
                     dead_letter_dir=str(tmp_path / "dead_serial"))
     assert len(piped) == len(serial) == 4
     assert _state(spark, str(tmp_path / "serial")) == _state(
@@ -114,10 +114,37 @@ def test_pipelined_resume_skips_committed(spark, tmp_path):
     ledger), matching the serial resume contract."""
     events = _events(spark)
     replay(spark, str(tmp_path / "t"), events, n_batches=4, n_buckets=8,
-           mode="mor", mor_dedup="filter", pipeline_depth=2)
+           mode="mor", pipeline_depth=2)
     again = replay(spark, str(tmp_path / "t"), events, n_batches=4,
-                   n_buckets=8, mode="mor", mor_dedup="filter",
+                   n_buckets=8, mode="mor",
                    pipeline_depth=2)
     assert all(r.noop for r in again)
     led = _ledger(LakeTable(spark, str(tmp_path / "t")).manifest())
     assert led["applied_count"] == 4
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_failed_batch_stops_serial_replay(spark, tmp_path, monkeypatch, mode):
+    """At depth 1 a failed batch ends the replay: no later batch is
+    prepared or committed, so the ledger high watermark never moves past
+    the batch that has to be re-applied on resume."""
+    from epigraphdb_graph_spark import replay as replay_mod
+
+    real_apply = replay_mod.apply_batch
+    calls = []
+
+    def failing_second(*args, **kwargs):
+        calls.append(kwargs["batch_id"])
+        if len(calls) == 2:
+            raise RuntimeError("batch lost")
+        return real_apply(*args, **kwargs)
+
+    monkeypatch.setattr(replay_mod, "apply_batch", failing_second)
+    events = _events(spark, n=3000)
+    path = str(tmp_path / "t")
+    with pytest.raises(RuntimeError, match="batch lost"):
+        replay(spark, path, events, n_batches=3, n_buckets=4, mode=mode)
+    assert len(calls) == 2
+    led = _ledger(LakeTable(spark, path).manifest())
+    assert led["applied_count"] == 1
+    assert led["hwm"]["replay"] == int(calls[0].split(":")[1])

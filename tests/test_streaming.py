@@ -7,6 +7,9 @@ resume from the same checkpoint."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -132,36 +135,76 @@ def test_tailer_restart_same_checkpoint_is_noop(spark, tmp_path, events):
     assert LakeTable(spark, table_path).current_version() == v1
 
 
-def test_tailer_heavy_pages_uses_winner_filter(spark, tmp_path):
-    """The broadcast winner-filter branch (explicit mor_dedup="filter" —
-    the column-prunable-source option auto no longer picks): superseded
-    events never reach extraction or the delta files; final state must
-    still equal the oracle."""
-    ev = generate_change_events(
-        spark, 800, seed=13, n_domains=10, pages_per_domain=4,
-        body_repeat=100,
-    ).cache()
-    from epigraphdb_graph_spark.replay import choose_mor_dedup
+_EVENT_DDL = "event_seq long, op string, url string, warc_ts timestamp, html binary"
 
-    # auto picks agg dedup for this supersede-heavy shape (40 keys)
-    assert choose_mor_dedup(ev) is True
-    log_dir, table_path, ckpt = (str(tmp_path / d) for d in ("log", "t", "c"))
-    ev.write.parquet(log_dir)
-    q = tail_change_log(spark, log_dir, table_path, ckpt, n_buckets=4,
-                        mode="mor", mor_dedup="filter")
+
+def _append_only_log(n_files: int, per_file: int) -> list[pd.DataFrame]:
+    """Change-log files whose distinct-key fraction (0.975) is above
+    replay.MOR_DEDUP_MAX_DISTINCT_FRAC: mostly first inserts, plus a few
+    in-file updates and deletes of keys the same file inserted."""
+    base = pd.Timestamp("2024-05-01")
+    files = []
+    for i in range(n_files):
+        rows = []
+        fresh = per_file * 39 // 40
+        for j in range(per_file):
+            seq = i * per_file + j
+            k = j if j < fresh else j - fresh
+            url = f"https://d{k % 50}.example/f{i}-{k}"
+            op = "insert" if j < fresh else ("delete" if k % 3 == 0 else "update")
+            html = None if op == "delete" else f"<p>{op} {seq} of {url}</p>".encode()
+            rows.append((seq, op, url, base + pd.Timedelta(seconds=seq), html))
+        files.append(pd.DataFrame(
+            rows, columns=["event_seq", "op", "url", "warc_ts", "html"]))
+    return files
+
+
+def test_append_only_log_appends_all(spark, tmp_path, monkeypatch):
+    """An effectively append-only log takes MOR append-all — no winner
+    selection, every event lands in the delta files — through both the
+    batch replay (whole-log stats) and the tailer (previous micro-batch's
+    stats; the first micro-batch has none and dedups). State equals the
+    oracle either way."""
+    from epigraphdb_graph_spark import replay as replay_mod
+
+    picks = []
+    real_choose = replay_mod.choose_mor_dedup
+
+    def spy(*args, **kwargs):
+        picks.append(real_choose(*args, **kwargs))
+        return picks[-1]
+
+    monkeypatch.setattr(replay_mod, "choose_mor_dedup", spy)
+    files = _append_only_log(2, 400)
+    pdf = pd.concat(files, ignore_index=True)
+
+    def appended(table) -> list[int]:
+        return [sum(h["metrics"]["actions"].values()) for h in table.history()
+                if h["metrics"].get("op") == "merge"]
+
+    replay_mod.replay(spark, str(tmp_path / "replayed"),
+                      spark.createDataFrame(pdf, _EVENT_DDL), n_batches=2,
+                      n_buckets=4, mode="mor")
+    assert picks == [False, False]
+    assert appended(LakeTable(spark, str(tmp_path / "replayed"))) == [400, 400]
+    _assert_equal(_read_state(spark, str(tmp_path / "replayed")), pdf)
+
+    picks.clear()
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+    for i, f in enumerate(files):  # one parquet file per micro-batch
+        staged = str(tmp_path / f"staged{i}")
+        spark.createDataFrame(f, _EVENT_DDL).coalesce(1).write.parquet(staged)
+        (part,) = glob.glob(f"{staged}/part-*.parquet")
+        os.rename(part, log_dir / f"part-{i}.parquet")
+    table_path = str(tmp_path / "tailed")
+    q = tail_change_log(spark, str(log_dir), table_path, str(tmp_path / "ckpt"),
+                        n_buckets=4, mode="mor", max_files_per_trigger=1)
     q.awaitTermination(120)
-    table = LakeTable(spark, table_path)
-    _assert_equal(_read_state(spark, table_path), ev.toPandas())
-    # the filter really dropped superseded rows from the delta commit
-    from epigraphdb_graph_spark.plans.lake import _parquet_num_rows
-
-    m = table.manifest()
-    delta_rows = sum(
-        _parquet_num_rows(f"{table.path}/{f}")
-        for fl in m["deltas"].values() for f in fl)
-    n_keys = table.read().count()
-    assert delta_rows < 800  # fewer delta rows than raw events
-    assert delta_rows >= n_keys
+    assert picks == [False]
+    # first micro-batch dedups (390 winners), the second appends all 400
+    assert appended(LakeTable(spark, table_path)) == [390, 400]
+    _assert_equal(_read_state(spark, table_path), pdf)
 
 
 def test_streaming_windowed_agg_with_watermark(spark, tmp_path):
@@ -229,59 +272,6 @@ def test_streaming_windowed_agg_with_watermark(spark, tmp_path):
     # open windows (end beyond the watermark) are withheld
     open_ends = got[got["window_end"] > pd.Timestamp(max_ts)]
     assert len(open_ends) == 0
-
-
-def test_pick_exchange_width_policy():
-    from epigraphdb_graph_spark.streaming.tailer import _pick_exchange_width
-
-    # tiny batch -> narrow hard, floored at 4
-    assert _pick_exchange_width(1_000, 32, 32) == 4
-    # ~12k rows on 32 buckets -> 8 (the measured sweet spot)
-    assert _pick_exchange_width(12_500, 32, 32) == 8
-    # big batch -> full width (None)
-    assert _pick_exchange_width(500_000, 32, 32) is None
-    assert _pick_exchange_width(64_000, 32, 32) is None
-    # width never exceeds n_buckets, always divides it
-    for rows in (1, 100, 5_000, 20_000, 100_000):
-        w = _pick_exchange_width(rows, 32, 32)
-        assert w is None or (32 % w == 0 and 4 <= w < 32)
-    # unknown/empty stats -> no narrowing
-    assert _pick_exchange_width(0, 32, 32) is None
-
-
-def test_prepare_batch_exchange_width_bucket_purity(spark, tmp_path, events):
-    """Narrow-exchange micro-batches must produce the same table state as
-    full-width ones AND keep every delta file bucket-pure (murmur3
-    modular nesting: pmod(h,32)=b => pmod(h,8)=b%8)."""
-    from epigraphdb_graph_spark.replay import prepare_batch
-    from epigraphdb_graph_spark.schema import PAGES_SCHEMA
-
-    path = str(tmp_path / "narrow")
-    t = LakeTable.create(spark, path, PAGES_SCHEMA, key="url", n_buckets=32)
-    for i, (lo, hi) in enumerate([(0, 700), (700, 1400), (1400, 2000)]):
-        batch = events.filter(
-            (F.col("event_seq") >= lo) & (F.col("event_seq") < hi))
-        prep = prepare_batch(batch, dedup="agg", key="url", bucket_into=32,
-                             exchange_width=8)
-        t.merge(prep, batch_id=f"w8-{i}", mode="mor", src_aligned=True,
-                watermark_seq=hi - 1)
-    # bucket purity: rows in each bucket-b delta hash to b
-    m = t.manifest()
-    assert sum(len(v) for v in m["deltas"].values()) > 0
-    for b, fl in m["deltas"].items():
-        for f in fl:
-            got = spark.read.parquet(f"{path}/{f}") \
-                .select(F.pmod(F.hash("url"), F.lit(32)).alias("h")) \
-                .distinct().collect()
-            assert [r["h"] for r in got] == [int(b)], (b, f)
-    # state equality vs oracle
-    _assert_equal(
-        t.read().select("url", "warc_ts", "text").toPandas()
-        .sort_values("url").reset_index(drop=True),
-        events.toPandas())
-    # invalid width rejected
-    with pytest.raises(ValueError, match="divisor"):
-        prepare_batch(events, dedup="agg", bucket_into=32, exchange_width=5)
 
 
 def test_background_compactor_overlaps_tailer(spark, tmp_path, events):
