@@ -184,7 +184,7 @@ def to_iceberg_metadata(table: LakeTable, out_dir: str | None = None) -> str:
                     "file_path": os.path.abspath(fpath),
                     "file_format": "PARQUET",
                     "partition": {},  # unpartitioned spec (see module doc)
-                    "record_count": int(m.get("file_rows", {}).get(rel, -1)),
+                    "record_count": int(m["file_rows"][rel]),
                     "file_size_in_bytes": os.path.getsize(fpath),
                 },
             })

@@ -26,7 +26,8 @@ Layout::
 Scale design (what holds at 100 TB / 1000 executors):
 
 - **Hash-on-key bucketing**: every data file holds rows of exactly one
-  bucket ``pmod(xxhash64(url), n_buckets)``. A MERGE batch touches only
+  bucket ``pmod(hash(url), n_buckets)`` (Spark's murmur3, so bucket b is
+  partition b of ``repartition(n_buckets, url)``). A MERGE batch touches only
   the buckets its keys hash into; untouched buckets' files are *referenced*
   from the parent snapshot (zero copy). The rewrite cost per commit is
   O(touched data), not O(table).
@@ -67,8 +68,9 @@ SYS_COLS = ["_seq", "_ts", "_deleted"]
 _META = "_meta"
 _DATA = "data"
 
-#: optimistic-concurrency bounds: MOR appends rebase-and-retry this many
-#: times on a lost commit race before surfacing ConcurrentWriteError
+#: optimistic-concurrency bounds: rebasing writers (MOR appends,
+#: incremental compaction) rebase-and-retry this many times on a lost
+#: commit race before surfacing ConcurrentWriteError
 _COMMIT_RETRIES = 4
 #: a manifest file for version v with the table pointer still at v's
 #: parent and older than this is an ABANDONED half-commit (writer
@@ -83,6 +85,20 @@ _ABANDONED_COMMIT_GRACE_S = 900.0
 #: pointer-swap critical section lock: held for two metadata ops; a lock
 #: file older than this is a crashed locker and gets broken
 _POINTER_LOCK_STALE_S = 10.0
+
+
+def _batch_watermark(src: DataFrame, watermark_seq: int | None,
+                     deferred_watermark) -> int:
+    """A change batch's log position: the caller's ``watermark_seq``, else
+    its ``deferred_watermark()``, else max event_seq in the (deduped)
+    batch — LWW by (warc_ts, seq) may have dropped the max-seq event, so
+    the explicit forms are the accurate ones (replay.py passes them)."""
+    if watermark_seq is None and deferred_watermark is not None:
+        watermark_seq = deferred_watermark()
+    if watermark_seq is None:
+        wm_row = src.agg(F.max("event_seq")).first()
+        watermark_seq = wm_row[0] if wm_row[0] is not None else -1
+    return watermark_seq
 
 
 def _rebase_backoff(attempt: int) -> None:
@@ -105,24 +121,56 @@ def _rebase_backoff(attempt: int) -> None:
 # ≈ tens of MB broadcast — safe for any reasonable driver/executor memory.
 RESOLVE_BROADCAST_MAX_DELTA_ROWS = 1_000_000
 
+
+def _ord():
+    """Packed (_ts, _seq) resolution order: unix_micros(_ts) * 10^18 +
+    _seq. Lexicographic (ts, seq) order is preserved for any seq in
+    (-10^18, 10^18) (covers 10^10-event logs and the base-load _seq = -1);
+    max micros ~1.7e15 keeps the product < 10^34 (decimal cap is 10^38). A
+    single packed decimal keeps the winner agg a HASH agg (max over a
+    struct would fall back to SortAggregate — struct buffers aren't
+    mutable)."""
+    return (
+        F.unix_micros(F.col("_ts")).cast("decimal(38,0)")
+        * F.lit(1_000_000_000_000_000_000)
+        + F.col("_seq")
+    )
+
+
+def _keep_winners(union_hot: DataFrame, winners: DataFrame,
+                  key: str) -> DataFrame:
+    """Broadcast-join the (``_wk`` -> ``_word``) winners and keep each
+    key's winning rows. A key untouched by any delta has no winner row
+    and passes through; winners stream through map-side with zero extra
+    exchange."""
+    j = union_hot.join(F.broadcast(winners),
+                       F.col(key) == F.col("_wk"), "left")
+    return j.filter(
+        F.col("_wk").isNull() | (F.col("_ord") == F.col("_word"))
+    ).drop("_wk", "_word", "_ord")
+
+
+def _rank_winners(union_hot: DataFrame, key: str) -> DataFrame:
+    """Key-partitioned shuffle resolution: one exchange of the hot
+    buckets' full rows, O(hot data), bounded executor memory, no driver
+    broadcast, ties deduped by row_number. Correct at any size; only
+    pays the full-row shuffle a neglected table (or re-delivered ties)
+    forces."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(key).orderBy(F.desc("_ord"))
+    return (
+        union_hot.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_ord")
+    )
+
+
 # Exactly-once ledger: bounded list of recently applied batch ids kept
 # verbatim in the manifest (backstop for unstructured ids); structured
 # "ns:seq" ids are tracked by a per-namespace high-watermark instead, so
 # the manifest stays O(namespaces), not O(batches ever applied).
 LEDGER_RECENT_MAX = 64
-
-
-def _parquet_num_rows(path: str) -> int:
-    """Row count from the parquet footer — metadata only, no data read.
-    Commit-time only (and legacy-manifest fallback): every commit records
-    per-file row counts in the manifest (``file_rows``), so the read path
-    never re-touches footers — at object-store scale serial driver-side
-    footer GETs over 10^5 files would otherwise become the per-read
-    bottleneck. Commit-time reads cover only the files the commit just
-    wrote (page-cache hot locally; O(commit), not O(table))."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
 
 
 def _spark_murmur3(data: bytes, seed: int = 42) -> int:
@@ -254,18 +302,8 @@ def _parse_batch_id(batch_id: str) -> tuple[str, int] | None:
     return None
 
 
-def _ledger(m: dict) -> dict:
-    led = m.get("ledger")
-    if led is None:
-        # legacy manifests carried the full applied_batches list
-        legacy = m.get("applied_batches", [])
-        led = {"hwm": {}, "recent": list(legacy[-LEDGER_RECENT_MAX:]),
-               "applied_count": len(legacy)}
-    return led
-
-
 def _batch_seen(m: dict, batch_id: str) -> bool:
-    led = _ledger(m)
+    led = m["ledger"]
     parsed = _parse_batch_id(batch_id)
     if parsed is not None:
         ns, seq = parsed
@@ -277,7 +315,7 @@ def _batch_seen(m: dict, batch_id: str) -> bool:
 def _ledger_add(m: dict, batch_id: str | None) -> dict:
     """New ledger dict with ``batch_id`` recorded (manifest stays bounded:
     O(namespaces) + O(LEDGER_RECENT_MAX))."""
-    led = _ledger(m)
+    led = m["ledger"]
     if batch_id is None:
         return led
     hwm = dict(led["hwm"])
@@ -324,7 +362,16 @@ class LakeTable:
     def manifest(self, version: int | None = None) -> dict:
         v = self.current_version() if version is None else version
         with open(os.path.join(self._meta_dir, f"v{v:08d}.json")) as f:
-            return json.load(f)
+            m = json.load(f)
+        layout = m.get("bucket_hash")
+        if layout != "murmur3":
+            # writing murmur3 placement into another layout would split
+            # keys across buckets — refuse to read or write the table
+            raise ValueError(
+                f"table {self.path} v{v} uses bucket layout {layout!r}; only "
+                f"'murmur3' (pmod(hash(key), n)) is supported — legacy "
+                f"xxhash64 tables must be re-created")
+        return m
 
     def schema(self, version: int | None = None) -> T.StructType:
         return T.StructType.fromJson(self.manifest(version)["schema"])
@@ -547,7 +594,7 @@ class LakeTable:
             # satisfies groupBy(key)/join(key) clustering, so LWW dedup and
             # the MERGE join run in the same stage with no further shuffle
             # (Iceberg bucket-transform storage-partitioned-join analog).
-            # Legacy manifests without the field read as "xxhash64".
+            # The only layout: manifest() rejects any other value.
             "bucket_hash": "murmur3",
             "schema": schema.jsonValue(),
             "files": {},   # bucket(str) -> [relative paths] (base files)
@@ -635,15 +682,75 @@ class LakeTable:
           ties with a per-key pick, so MOR reads stay idempotent under
           re-delivery just like COW's per-row stale guard.
         """
-        deltas = manifest.get("deltas", {})
-        files = manifest.get("files", {})
+        split = self._split_hot(manifest, buckets, file_schema)
+        if split is None:
+            return self._read_files(manifest, buckets, file_schema)
+        base_cold, union_hot, winner_input = split
+        key = manifest["key"]
+        if winner_input is not None:
+            # Winners restricted to delta-touched keys, then two chained
+            # hash aggs. The second agg ALSO counts rows tied at the
+            # winning _ord (max_by of the per-(key,_ord) count) — see the
+            # tie probe below.
+            winners_q = (
+                winner_input
+                .groupBy(key, "_ord")
+                .agg(F.count("*").alias("_cnt"))
+                .groupBy(F.col(key).alias("_wk"))
+                .agg(F.max("_ord").alias("_word"),
+                     F.max_by("_cnt", "_ord").alias("_wties"))
+            )
+            # ONE job: pull the winners to the driver (O(delta keys) x 3
+            # cols — the same rows a broadcast would ship there anyway;
+            # Arrow columnar both ways, no per-row Python) and derive the
+            # tie answer locally. This replaces the previous three
+            # driver-synchronous steps (eager localCheckpoint job +
+            # tie-probe job + broadcast build) — per-commit serial time
+            # that executor count cannot shrink, i.e. exactly what caps
+            # N->4N scaling at micro-batch cadence. Ties (equal
+            # (_ts,_seq) = re-delivered copies of the same event) exist
+            # only under at-least-once re-delivery — almost never; the
+            # common case then resolves in a SINGLE pass over the full
+            # rows (broadcast join + filter, no second branch, no dedup
+            # shuffle).
+            winners_pdf = winners_q.toPandas()
+            if not (winners_pdf["_wties"] > 1).any():
+                winners = self.spark.createDataFrame(
+                    winners_pdf[["_wk", "_word"]],
+                    T.StructType([
+                        T.StructField("_wk", winners_q.schema["_wk"].dataType),
+                        T.StructField("_word",
+                                      winners_q.schema["_word"].dataType),
+                    ]),
+                )
+                return base_cold.unionByName(
+                    _keep_winners(union_hot, winners, key))
+        # compaction-overdue overflow, or re-delivered ties
+        return base_cold.unionByName(_rank_winners(union_hot, key))
+
+    def _split_hot(
+        self,
+        manifest: dict,
+        buckets: list[int] | None,
+        file_schema: T.StructType | None = None,
+    ) -> tuple[DataFrame, DataFrame, DataFrame | None] | None:
+        """Shared front of both MOR resolution forms. None when no wanted
+        bucket carries pending deltas (a plain scan suffices); else
+        ``(base_cold, union_hot, winner_input)``: the scan of delta-free
+        buckets, the hot buckets' base ∪ delta rows with their packed
+        ``_ord``, and the column-pruned ``(key, _ts, _seq, _ord)`` rows
+        the winners are aggregated from — None when the pending delta
+        rows exceed RESOLVE_BROADCAST_MAX_DELTA_ROWS (shuffle
+        resolution)."""
+        deltas = manifest["deltas"]
+        files = manifest["files"]
         if buckets is None:
             wanted = sorted(set(files.keys()) | set(deltas.keys()), key=int)
         else:
             wanted = [str(b) for b in buckets]
-        hot = [b for b in wanted if deltas.get(str(b))]
+        hot = [b for b in wanted if deltas.get(b)]
         if not hot:
-            return self._read_files(manifest, buckets, file_schema)
+            return None
         hot_set = set(hot)
         cold = [b for b in wanted if b not in hot_set]
 
@@ -651,53 +758,21 @@ class LakeTable:
         base_hot = self._read_files(manifest, hot, file_schema)
         delta_df = self._read_files(manifest, hot, file_schema, which="deltas")
         key = manifest["key"]
-
-        # Packing: ord = unix_micros(_ts) * 10^18 + _seq. Lexicographic
-        # (ts, seq) order is preserved for any seq in (-10^18, 10^18)
-        # (covers 10^10-event logs and the base-load _seq = -1); max micros
-        # ~1.7e15 keeps the product < 10^34 (decimal cap is 10^38). A single
-        # packed decimal keeps the winner agg a HASH agg (max over a struct
-        # would fall back to SortAggregate — struct buffers aren't mutable).
-        ord_expr = (
-            F.unix_micros(F.col("_ts")).cast("decimal(38,0)")
-            * F.lit(1_000_000_000_000_000_000)
-            + F.col("_seq")
-        )
-        union_hot = base_hot.unionByName(delta_df).withColumn("_ord", ord_expr)
+        union_hot = base_hot.unionByName(delta_df).withColumn("_ord", _ord())
 
         # pending delta volume from manifest-resident per-file row counts
         # (recorded at commit time): pure dict lookups — no footer IO, no job
         n_delta_rows = sum(
-            self._file_rows(manifest, f)
-            for b in hot
-            for f in deltas.get(str(b), [])
-        )
+            manifest["file_rows"][f] for b in hot for f in deltas[b])
         if n_delta_rows > RESOLVE_BROADCAST_MAX_DELTA_ROWS:
-            # Compaction-overdue overflow: key-partitioned shuffle
-            # resolution — one exchange of the hot buckets' full rows,
-            # O(hot data), bounded executor memory, no driver broadcast,
-            # ties deduped by row_number. Correct at any size; only pays
-            # the full-row shuffle a neglected table forces.
-            from pyspark.sql import Window
+            return base_cold, union_hot, None
 
-            w = Window.partitionBy(key).orderBy(F.desc("_ord"))
-            resolved_hot = (
-                union_hot.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "_ord")
-            )
-            return base_cold.unionByName(resolved_hot)
-
-        # Winners restricted to delta-touched keys: a column-pruned pass
-        # (parquet reads key, _ts, _seq only) semi-joined to the distinct
-        # delta keys, then two chained hash aggs. O(delta keys), not
-        # O(table keys) — base rows whose key never appears in a delta are
-        # already their own winners and skip resolution entirely. The
-        # second agg ALSO counts rows tied at the winning _ord (max_by of
-        # the per-(key,_ord) count) — see the tie probe below.
+        # Winner input restricted to delta-touched keys: a column-pruned
+        # pass (parquet reads key, _ts, _seq only) — O(delta keys), not
+        # O(table keys); base rows whose key never appears in a delta are
+        # already their own winners and skip resolution entirely.
         pruned = delta_df.select(key, "_ts", "_seq")
-        has_base = any(files.get(str(b)) for b in hot)
-        if has_base:
+        if any(files.get(b) for b in hot):
             # base rows only matter for keys a delta touches; semi-join
             # keeps the winner relation O(delta keys) on a huge table.
             # (With no base files — young pure-MOR table — deltas ARE the
@@ -706,114 +781,36 @@ class LakeTable:
             base_pruned = base_hot.select(key, "_ts", "_seq").join(
                 F.broadcast(dkeys), F.col(key) == F.col("_dk"), "left_semi")
             pruned = pruned.unionByName(base_pruned)
-        winners_q = (
-            pruned.withColumn("_ord", ord_expr)
-            .groupBy(key, "_ord")
-            .agg(F.count("*").alias("_cnt"))
-            .groupBy(F.col(key).alias("_wk"))
-            .agg(F.max("_ord").alias("_word"),
-                 F.max_by("_cnt", "_ord").alias("_wties"))
-        )
-        # ONE job: pull the winners to the driver (O(delta keys) x 3 cols
-        # — the same rows a broadcast would ship there anyway; Arrow
-        # columnar both ways, no per-row Python) and derive the tie
-        # answer locally. This replaces the previous three
-        # driver-synchronous steps (eager localCheckpoint job + tie-probe
-        # job + broadcast build) — per-commit serial time that executor
-        # count cannot shrink, i.e. exactly what caps N->4N scaling at
-        # micro-batch cadence. Ties (equal (_ts,_seq) = re-delivered
-        # copies of the same event) exist only under at-least-once
-        # re-delivery — almost never; the common case then resolves in a
-        # SINGLE pass over the full rows (broadcast join + filter, no
-        # second branch, no dedup shuffle).
-        winners_pdf = winners_q.toPandas()
-        has_ties = bool((winners_pdf["_wties"] > 1).any())
-        if has_ties:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(key).orderBy(F.desc("_ord"))
-            resolved_hot = (
-                union_hot.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "_ord")
-            )
-            return base_cold.unionByName(resolved_hot)
-        winners = self.spark.createDataFrame(
-            winners_pdf[["_wk", "_word"]],
-            T.StructType([
-                T.StructField("_wk", winners_q.schema["_wk"].dataType),
-                T.StructField("_word", winners_q.schema["_word"].dataType),
-            ]),
-        )
-        j = union_hot.join(F.broadcast(winners),
-                           F.col(key) == F.col("_wk"), "left")
-        # key untouched by any delta -> no winner row -> passes through;
-        # winners stream through map-side with zero extra exchange
-        resolved_hot = j.filter(
-            F.col("_wk").isNull() | (F.col("_ord") == F.col("_word"))
-        ).drop("_wk", "_word", "_ord")
-        return base_cold.unionByName(resolved_hot)
+        return base_cold, union_hot, pruned.withColumn("_ord", _ord())
 
     def _resolved_for_rewrite(
         self, manifest: dict, buckets: list[int] | None
     ) -> tuple[DataFrame, bool]:
-        """Resolution variant for compact()'s rewrite on murmur3 tables:
-        semantics of _read_resolved, but built as ONE pure plan — the
-        winners relation stays a broadcast *subplan* (materialized inside
-        the rewrite job itself), with no driver toPandas round-trip and no
-        tie-probe decision job. Tied re-delivered rows (equal (_ts,_seq)
+        """Resolution variant for compact()'s rewrite: semantics of
+        _read_resolved, but built as ONE pure plan — the winners relation
+        stays a broadcast *subplan* (materialized inside the rewrite job
+        itself), with no driver toPandas round-trip and no tie-probe
+        decision job. Tied re-delivered rows (equal (_ts,_seq)
         byte-identical copies) may survive the winner filter; the caller
         collapses them with a partition-local dropDuplicates(key) AFTER its
         bucket-aligned exchange (HashPartitioning(key, n) satisfies the
         clustering, so the dedup adds no shuffle). Returns
-        ``(df, needs_key_dedup)``; falls back to _read_resolved (probe
-        path) for the compaction-overdue overflow case."""
-        deltas = manifest.get("deltas", {})
-        files = manifest.get("files", {})
-        if buckets is None:
-            wanted = sorted(set(files.keys()) | set(deltas.keys()), key=int)
-        else:
-            wanted = [str(b) for b in buckets]
-        hot = [b for b in wanted if deltas.get(str(b))]
-        if not hot:
+        ``(df, needs_key_dedup)``; the compaction-overdue overflow case
+        takes the shuffle resolution, which leaves no ties."""
+        split = self._split_hot(manifest, buckets)
+        if split is None:
             return self._read_files(manifest, buckets), False
-        n_delta_rows = sum(
-            self._file_rows(manifest, f)
-            for b in hot
-            for f in deltas.get(str(b), [])
-        )
-        if n_delta_rows > RESOLVE_BROADCAST_MAX_DELTA_ROWS:
-            return self._read_resolved(manifest, buckets), False
-
-        hot_set = set(hot)
-        cold = [b for b in wanted if b not in hot_set]
-        base_cold = self._read_files(manifest, cold)
-        base_hot = self._read_files(manifest, hot)
-        delta_df = self._read_files(manifest, hot, which="deltas")
+        base_cold, union_hot, winner_input = split
         key = manifest["key"]
-        ord_expr = (  # packed (_ts,_seq) — see _read_resolved
-            F.unix_micros(F.col("_ts")).cast("decimal(38,0)")
-            * F.lit(1_000_000_000_000_000_000)
-            + F.col("_seq")
-        )
-        union_hot = base_hot.unionByName(delta_df).withColumn("_ord", ord_expr)
-        pruned = delta_df.select(key, "_ts", "_seq")
-        if any(files.get(str(b)) for b in hot):
-            dkeys = delta_df.select(F.col(key).alias("_dk")).distinct()
-            base_pruned = base_hot.select(key, "_ts", "_seq").join(
-                F.broadcast(dkeys), F.col(key) == F.col("_dk"), "left_semi")
-            pruned = pruned.unionByName(base_pruned)
+        if winner_input is None:
+            return base_cold.unionByName(_rank_winners(union_hot, key)), False
         winners = (
-            pruned.withColumn("_ord", ord_expr)
+            winner_input
             .groupBy(F.col(key).alias("_wk"))
             .agg(F.max("_ord").alias("_word"))
         )
-        j = union_hot.join(F.broadcast(winners),
-                           F.col(key) == F.col("_wk"), "left")
-        resolved_hot = j.filter(
-            F.col("_wk").isNull() | (F.col("_ord") == F.col("_word"))
-        ).drop("_wk", "_word", "_ord")
-        return base_cold.unionByName(resolved_hot), True
+        return base_cold.unionByName(
+            _keep_winners(union_hot, winners, key)), True
 
     def read(self, version: int | None = None, *, with_system_cols: bool = False) -> DataFrame:
         """Current (or time-travel) state. Tombstones filtered out; pending
@@ -833,16 +830,11 @@ class LakeTable:
         pruning only drops files that cannot hold a requested key — every
         row of a requested key survives, and resolution is per-key."""
         n = m["n_buckets"]
-        if m.get("bucket_hash") == "murmur3":
-            by_bucket: dict[str, list[str]] = {}
-            for k in keys:
-                b = str(_spark_murmur3(k.encode("utf-8")) % n)
-                by_bucket.setdefault(b, []).append(k)
-        else:
-            # legacy xxhash64 tables: no driver-side hash — bounds-only
-            # pruning over every bucket
-            by_bucket = {str(b): list(keys) for b in range(n)}
-        fkb = m.get("file_key_bounds", {})
+        by_bucket: dict[str, list[str]] = {}
+        for k in keys:
+            b = str(_spark_murmur3(k.encode("utf-8")) % n)
+            by_bucket.setdefault(b, []).append(k)
+        fkb = m["file_key_bounds"]
 
         def keep(f: str, ks: list[str]) -> bool:
             b = fkb.get(f)
@@ -855,8 +847,7 @@ class LakeTable:
                 if section.get(b)
             }
 
-        return {**m, "files": prune(m.get("files", {})),
-                "deltas": prune(m.get("deltas", {}))}
+        return {**m, "files": prune(m["files"]), "deltas": prune(m["deltas"])}
 
     def read_keys(self, keys, *, version: int | None = None,
                   with_system_cols: bool = False) -> DataFrame:
@@ -880,30 +871,13 @@ class LakeTable:
             df = df.drop(*SYS_COLS)
         return df
 
-    def bucket_expr(self, key_col, n_buckets: int | None = None,
-                    manifest: dict | None = None):
-        m = manifest if manifest is not None else self.manifest()
-        n = n_buckets or m["n_buckets"]
-        if m.get("bucket_hash", "xxhash64") == "murmur3":
-            # pmod(murmur3(key), n) — bit-identical to Spark's
-            # HashPartitioning partition id, so partition b == bucket b
-            # after repartition(n, key) (see create() note)
-            return F.pmod(F.hash(key_col), F.lit(n)).cast("int")
-        return F.pmod(F.xxhash64(key_col), F.lit(n)).cast("int")
-
-    def _bucket_repartition(self, df: DataFrame, manifest: dict,
-                            n_buckets: int | None = None) -> DataFrame:
-        """One exchange into bucket-aligned layout. murmur3 tables hash the
-        KEY (partition id == bucket id, and the resulting
-        HashPartitioning(key, n) satisfies any downstream groupBy(key)/
-        dropDuplicates(key)/join(key) clustering — no further shuffle);
-        legacy xxhash64 tables hash the _bucket column (stable placement,
-        but buckets scatter over partitions: some tasks carry 2-3 buckets
-        — the write-stage straggler murmur3 alignment removes)."""
-        n = n_buckets or manifest["n_buckets"]
-        if manifest.get("bucket_hash", "xxhash64") == "murmur3":
-            return df.repartition(n, F.col(manifest["key"]))
-        return df.repartition(n, "_bucket")
+    def bucket_expr(self, key_col, n_buckets: int | None = None):
+        """pmod(murmur3(key), n) — bit-identical to Spark's
+        HashPartitioning partition id, so partition b == bucket b after
+        repartition(n, key) (see create() note). ``n_buckets`` defaults
+        to the current table spec."""
+        n = n_buckets or self.manifest()["n_buckets"]
+        return F.pmod(F.hash(key_col), F.lit(n)).cast("int")
 
     # ----------------------------------------------------------------- write
     def _write_snapshot(
@@ -1024,29 +998,133 @@ class LakeTable:
         m: dict,
         files: dict[str, list[str]],
         deltas: dict[str, list[str]],
-        new_vals: dict,
-        field: str = "file_rows",
-    ) -> dict:
-        """Carry forward per-file stats (row counts / key bounds) for files
-        still referenced, add this commit's, drop retired ones — the map
-        stays O(live files)."""
-        merged = {**m.get(field, {}), **new_vals}
-        referenced = {
-            f for d in (files, deltas) for fl in d.values() for f in fl
-        }
-        return {f: merged[f] for f in sorted(referenced) if f in merged}
+        new_stats: dict[str, dict],
+    ) -> dict[str, dict]:
+        """Carry forward per-file stats (``file_rows`` row counts /
+        ``file_key_bounds`` key bounds, keyed by manifest field) for files
+        still referenced, add this commit's, drop retired ones — the maps
+        stay O(live files)."""
+        referenced = sorted(
+            {f for d in (files, deltas) for fl in d.values() for f in fl})
+        out = {}
+        for field, new_vals in new_stats.items():
+            merged = {**m[field], **new_vals}
+            out[field] = {f: merged[f] for f in referenced if f in merged}
+        return out
 
-    def _file_rows(self, manifest: dict, rel_path: str) -> int:
-        """Row count for a referenced file: manifest-resident (normal), or
-        one footer read for pre-``file_rows`` legacy manifests."""
-        fr = manifest.get("file_rows", {})
-        if rel_path in fr:
-            return fr[rel_path]
-        return _parquet_num_rows(os.path.join(self.path, rel_path))
+    def _publish_snapshot(
+        self,
+        m: dict,
+        metrics: dict,
+        *,
+        batch_id: str | None = None,
+        new_files: dict[str, list[str]] | None = None,
+        rewritten=(),
+        appended: dict[str, list[str]] | None = None,
+        new_rows: dict | None = None,
+        new_bounds: dict | None = None,
+        schema: T.StructType | None = None,
+        watermark_seq: int | None = None,
+        watermark_ts: int | None = None,
+        n_buckets: int | None = None,
+        rebase=None,
+        pre_commit=None,
+    ) -> tuple[int, bool]:
+        """Build the manifest that follows ``m`` (the snapshot the writer
+        read) and commit it — the one commit path of every writer after
+        create(). Returns ``(version, noop)``.
+
+        The writer reports what it did: ``rewritten`` buckets (None =
+        every bucket: a full rewrite or rebucket) now hold ``new_files``
+        as base files, and their deltas as of ``m`` are folded (retired);
+        ``appended`` adds delta files; ``new_rows``/``new_bounds`` are the
+        new files' stats. ``schema`` merges additively, watermarks take
+        the max, ``n_buckets`` (when given) sets the bucket spec, and
+        ``batch_id`` enters the ledger. With no files this is the
+        ledger-only commit of an empty batch.
+
+        Lost commit race: with ``rebase=None`` the ConcurrentWriteError
+        propagates — rewrite writers referenced the superseded base files
+        and must re-prepare. Otherwise the same written files are
+        re-committed against a re-read manifest, at most _COMMIT_RETRIES
+        attempts in all: ``rebase(base)`` raises ConcurrentWriteError when
+        that would be unsound, deltas appended after ``m`` stay pending
+        (LWW resolution is idempotent, so they resolve identically against
+        the new files), and a base whose ledger already holds ``batch_id``
+        ends in a committed no-op. ``pre_commit`` (pipelined replay's
+        commit-order barrier; requires ``rebase``) runs before the first
+        attempt, which then rebases onto the predecessors' snapshot."""
+        new_files = new_files or {}
+        retired = (m["deltas"] if rewritten is None
+                   else {b: m["deltas"].get(b, []) for b in rewritten})
+        folded = {f for fl in retired.values() for f in fl}
+
+        def build(base: dict) -> dict:
+            if rewritten is None:
+                files = dict(new_files)
+            else:
+                files = dict(base["files"])
+                for b in rewritten:
+                    # a bucket can legitimately rewrite to zero files (all
+                    # rows were tombstones and got dropped)
+                    files[b] = new_files.get(b, [])
+            deltas = {}
+            for b, fl in base["deltas"].items():
+                rem = [f for f in fl if f not in folded]
+                if rem:
+                    deltas[b] = rem
+            for b, fl in (appended or {}).items():
+                deltas[b] = deltas.get(b, []) + fl
+            wm_ts = [t for t in (base["watermark_ts"], watermark_ts)
+                     if t is not None]
+            return {
+                **base,
+                "version": base["version"] + 1,
+                "parent": base["version"],
+                "n_buckets": n_buckets or base["n_buckets"],
+                "schema": base["schema"] if schema is None else merge_schemas(
+                    T.StructType.fromJson(base["schema"]), schema).jsonValue(),
+                "files": files,
+                "deltas": deltas,
+                **self._carry_file_stats(base, files, deltas, {
+                    "file_rows": new_rows or {},
+                    "file_key_bounds": new_bounds or {}}),
+                "ledger": _ledger_add(base, batch_id),
+                "watermark_seq": max(
+                    base["watermark_seq"],
+                    -1 if watermark_seq is None else watermark_seq),
+                "watermark_ts": max(wm_ts, default=None),
+                "metrics": metrics,
+            }
+
+        base = m
+        if pre_commit is not None:
+            pre_commit()
+            base = self.manifest()
+        for attempt in range(_COMMIT_RETRIES):
+            if attempt:
+                _rebase_backoff(attempt)
+                base = self.manifest()  # rebase on the winner's snapshot
+            if base is not m:
+                if batch_id is not None and _batch_seen(base, batch_id):
+                    # a concurrent writer applied THIS batch (shared log,
+                    # competing tailers): exactly-once holds — our attempt
+                    # dir becomes an orphan (expire_snapshots sweeps it)
+                    return base["version"], True
+                rebase(base)
+            nxt = build(base)
+            try:
+                self._commit(nxt)
+                return nxt["version"], False
+            except ConcurrentWriteError:
+                if rebase is None or attempt == _COMMIT_RETRIES - 1:
+                    raise
 
     def overwrite(self, df: DataFrame, *, batch_id: str | None = None) -> MergeResult:
         """Bulk first-load fast path (no MERGE join) — analog of the
-        reference's neo4j-admin bulk import vs transactional LOAD CSV."""
+        reference's neo4j-admin bulk import vs transactional LOAD CSV.
+        Replaces the whole table: every base file and every pending delta
+        is retired."""
         m = self.manifest()
         key = m["key"]
         new_schema = merge_schemas(T.StructType.fromJson(m["schema"]), df.schema)
@@ -1069,23 +1147,15 @@ class LakeTable:
             (F.col("warc_ts") if "warc_ts" in df.columns
              else F.lit(None).cast("timestamp")).alias("_ts"),
             F.lit(False).alias("_deleted"),
-            self.bucket_expr(F.col(key), m["n_buckets"], manifest=m).alias("_bucket"),
+            self.bucket_expr(F.col(key), m["n_buckets"]).alias("_bucket"),
         )
-        files = self._write_snapshot(self._bucket_repartition(full, m), version)
+        files = self._write_snapshot(
+            full.repartition(m["n_buckets"], F.col(key)), version)
         new_rows, new_bounds = self._scan_new_file_stats(files, key)
-        manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "schema": new_schema.jsonValue(),
-            "files": files,
-            "file_rows": self._carry_file_stats(m, files, {}, new_rows),
-            "file_key_bounds": self._carry_file_stats(
-                m, files, {}, new_bounds, "file_key_bounds"),
-            "ledger": _ledger_add(m, batch_id),
-            "metrics": {"op": "overwrite"},
-        }
-        self._commit(manifest)
+        version, _ = self._publish_snapshot(
+            m, {"op": "overwrite"}, batch_id=batch_id, new_files=files,
+            rewritten=None, new_rows=new_rows, new_bounds=new_bounds,
+            schema=new_schema)
         return MergeResult(version, 0, 0, 0, 0, len(files))
 
     # ----------------------------------------------------------------- merge
@@ -1094,7 +1164,6 @@ class LakeTable:
         updates: DataFrame,
         *,
         batch_id: str | None = None,
-        collect_metrics: bool = True,
         watermark_seq: int | None = None,
         mode: str = "cow",
         extra_metrics: dict | None = None,
@@ -1133,20 +1202,24 @@ class LakeTable:
           - ``"cow"`` (copy-on-write): full-outer MERGE join against the
             touched buckets, rewrite them. Commit cost O(touched data);
             reads stay plain scans. Right when batches are large relative
-            to update locality or reads dominate.
+            to update locality or reads dominate. A lost commit race
+            raises ConcurrentWriteError (the rewrite read superseded base
+            files); ``replay.apply_batch`` re-prepares the batch.
           - ``"mor"`` (merge-on-read): append the batch as per-bucket delta
             files — commit cost O(batch), **no join, no target read**; the
             per-key LWW resolution is deferred to read()/compact(), exactly
             like Iceberg v2 / Hudi MOR tables. Right for high-throughput
             CDC tailing; run ``compact()`` on a cadence to re-bound read
-            cost. Both modes converge to identical table states because
-            resolution uses the same (_ts, _seq) total order.
+            cost. A lost commit race rebases the written delta files onto
+            the winner's snapshot. Both modes converge to identical table
+            states because resolution uses the same (_ts, _seq) total
+            order.
 
         ``src_aligned``: ``updates`` already sits in bucket layout
-        (prepare_batch's fused ``repartition(n_buckets, key)`` on a
-        murmur3 table) — the COW join reuses that exchange and the MOR
-        delta write needs none; otherwise merge exchanges the batch into
-        bucket layout itself (one delta file per touched bucket).
+        (prepare_batch's fused ``repartition(n_buckets, key)``) — the COW
+        join reuses that exchange and the MOR delta write needs none;
+        otherwise merge exchanges the batch into bucket layout itself (one
+        delta file per touched bucket).
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
@@ -1180,7 +1253,7 @@ class LakeTable:
                 conformed.append(F.col(c))
         src = updates.select(
             *conformed, "event_seq", "op",
-            self.bucket_expr(F.col(key), n_buckets, manifest=m).alias("_bucket"),
+            self.bucket_expr(F.col(key), n_buckets).alias("_bucket"),
         )
 
         if mode == "mor":
@@ -1190,10 +1263,9 @@ class LakeTable:
             # O(batch) memory traffic for nothing
             return self._merge_mor(
                 m, src, all_cols, new_schema,
-                batch_id=batch_id, collect_metrics=collect_metrics,
-                watermark_seq=watermark_seq, extra_metrics=extra,
-                src_aligned=src_aligned, deferred_watermark=deferred_watermark,
-                pre_commit=pre_commit,
+                batch_id=batch_id, watermark_seq=watermark_seq,
+                extra_metrics=extra, src_aligned=src_aligned,
+                deferred_watermark=deferred_watermark, pre_commit=pre_commit,
             )
 
         # persist (COW): the updates lineage (dedup + extraction UDF) is
@@ -1210,11 +1282,9 @@ class LakeTable:
             # the exactly-once ledger stays accurate
             src.unpersist()
             if batch_id is not None:
-                version = m["version"] + 1
-                self._commit({**m, "version": version, "parent": m["version"],
-                              "ledger": _ledger_add(m, batch_id),
-                              "metrics": {"op": "merge", "batch_id": batch_id,
-                                          "empty": True, **extra}})
+                version, _ = self._publish_snapshot(
+                    m, {"op": "merge", "batch_id": batch_id, "empty": True,
+                        **extra}, batch_id=batch_id)
                 return MergeResult(version, 0, 0, 0, 0, 0)
             return MergeResult(m["version"], 0, 0, 0, 0, 0, noop=True)
         evolved_manifest = {**m, "schema": new_schema.jsonValue()}
@@ -1223,9 +1293,9 @@ class LakeTable:
         target = (
             self._read_resolved(m, buckets=touched,
                                 file_schema=self._file_schema(evolved_manifest))
-            .withColumn("_bucket", self.bucket_expr(F.col(key), n_buckets, manifest=m))
+            .withColumn("_bucket", self.bucket_expr(F.col(key), n_buckets))
         )
-        if src_aligned and m.get("bucket_hash") == "murmur3":
+        if src_aligned:
             # explicitly co-partition the target at n_buckets so the MERGE
             # join reuses src's fused exchange verbatim: without this,
             # EnsureRequirements normalizes BOTH sides to
@@ -1274,35 +1344,32 @@ class LakeTable:
         )
 
         version = m["version"] + 1
-        out = resolved.drop("_action")
         # action counts piggyback on the write job (Observation — no extra
         # pass over the join); per-bucket row counts come from the written
         # parquet footers (metadata only). An earlier design ran a separate
         # column-pruned metrics job per commit — one whole extra job.
-        obs = None
-        late_thr = _late_threshold_micros(m)
-        if collect_metrics:
-            from pyspark.sql import Observation
+        from pyspark.sql import Observation
 
-            obs = Observation()
-            applied = ~F.col("_action").isin("keep", "stale")
-            out = resolved.observe(
-                obs,
-                *[
-                    F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
-                    for a in ("keep", "insert", "update", "delete",
-                              "tombstone_new", "revive", "stale")
-                ],
-                # event-time watermark + late-data accounting (St3):
-                # max applied event time, and applied events older than
-                # (previous watermark - lateness horizon). Stale rows are
-                # late by definition and already counted above.
-                F.max(F.when(applied, F.unix_micros(F.col("_ts")))).alias("_wm_ts"),
-                F.sum(F.when(
-                    applied & (F.unix_micros(F.col("_ts")) < F.lit(late_thr)),
-                    1).otherwise(0)).alias("_late"),
-            ).drop("_action")
-        if src_aligned and m.get("bucket_hash") == "murmur3":
+        obs = Observation()
+        late_thr = _late_threshold_micros(m)
+        applied = ~F.col("_action").isin("keep", "stale")
+        out = resolved.observe(
+            obs,
+            *[
+                F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
+                for a in ("keep", "insert", "update", "delete",
+                          "tombstone_new", "revive", "stale")
+            ],
+            # event-time watermark + late-data accounting (St3):
+            # max applied event time, and applied events older than
+            # (previous watermark - lateness horizon). Stale rows are
+            # late by definition and already counted above.
+            F.max(F.when(applied, F.unix_micros(F.col("_ts")))).alias("_wm_ts"),
+            F.sum(F.when(
+                applied & (F.unix_micros(F.col("_ts")) < F.lit(late_thr)),
+                1).otherwise(0)).alias("_late"),
+        ).drop("_action")
+        if src_aligned:
             # src arrived HashPartitioning(key, n_buckets) (prepare_batch's
             # fused exchange); the planner co-partitions the target side to
             # match, and a full-outer SMJ moves no rows — so the join
@@ -1313,69 +1380,31 @@ class LakeTable:
             # exactly ONE shuffle (the target side's co-partitioning).
             new_files = self._write_snapshot(out, version)
         else:
-            n_parts = max(len(touched), 1)
             new_files = self._write_snapshot(
-                self._bucket_repartition(out, m, n_parts)
-                if m.get("bucket_hash") != "murmur3"
-                else out.repartition(m["n_buckets"], F.col(key)), version)
+                out.repartition(n_buckets, F.col(key)), version)
         # per-file stats of the just-written files, recorded in the manifest
         # so reads/lineage never re-touch footers
         new_rows, new_bounds = self._scan_new_file_stats(new_files, key)
 
-        metrics = {}
-        if collect_metrics and obs is not None:
-            got = obs.get
-            agg = {a: int(v) for a, v in got.items()
-                   if v and not a.startswith("_")}
-            by_bucket = {
-                b: {"rows": sum(new_rows[f] for f in fl)}
-                for b, fl in new_files.items()
-            }
-            metrics = {"actions": agg, "by_bucket": by_bucket,
-                       "late_events": int(got.get("_late") or 0)
-                       + agg.get("stale", 0)}
-            wm_obs = got.get("_wm_ts")
-            if wm_obs is not None:
-                metrics["_wm_ts_obs"] = int(wm_obs)
-
-        files = dict(m["files"])
-        deltas = dict(m.get("deltas", {}))
-        for b in touched:
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)  # rewrite folded these deltas in
-        # watermark: log position processed. If the caller doesn't supply the
-        # batch's end position, fall back to max seq in the (deduped) batch —
-        # note LWW by (warc_ts, seq) may have dropped the max-seq event, so
-        # the explicit parameter is the accurate form (replay.py passes it).
-        if watermark_seq is None and deferred_watermark is not None:
-            watermark_seq = deferred_watermark()
-        if watermark_seq is None:
-            wm_row = src.agg(F.max("event_seq")).first()
-            watermark_seq = wm_row[0] if wm_row[0] is not None else -1
-        watermark = max(m["watermark_seq"], watermark_seq)
-        src.unpersist()
-
-        wm_ts = m.get("watermark_ts")
-        obs_ts = metrics.pop("_wm_ts_obs", None)
-        if obs_ts is not None:
-            wm_ts = obs_ts if wm_ts is None else max(wm_ts, obs_ts)
-        manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "schema": new_schema.jsonValue(),
-            "files": files,
-            "deltas": deltas,
-            "file_rows": self._carry_file_stats(m, files, deltas, new_rows),
-            "file_key_bounds": self._carry_file_stats(
-                m, files, deltas, new_bounds, "file_key_bounds"),
-            "ledger": _ledger_add(m, batch_id),
-            "watermark_seq": watermark,
-            "watermark_ts": wm_ts,
-            "metrics": {"op": "merge", "batch_id": batch_id, **metrics, **extra},
+        got = obs.get
+        a = {k: int(v) for k, v in got.items() if v and not k.startswith("_")}
+        metrics = {
+            "actions": a,
+            "by_bucket": {b: {"rows": sum(new_rows[f] for f in fl)}
+                          for b, fl in new_files.items()},
+            "late_events": int(got.get("_late") or 0) + a.get("stale", 0),
         }
-        self._commit(manifest)
-        a = metrics.get("actions", {})
+        wm_ts = got.get("_wm_ts")
+        watermark_seq = _batch_watermark(src, watermark_seq,
+                                         deferred_watermark)
+        src.unpersist()
+        version, _ = self._publish_snapshot(
+            m, {"op": "merge", "batch_id": batch_id, **metrics, **extra},
+            batch_id=batch_id, new_files=new_files,
+            rewritten=[str(b) for b in touched],
+            new_rows=new_rows, new_bounds=new_bounds, schema=new_schema,
+            watermark_seq=watermark_seq,
+            watermark_ts=None if wm_ts is None else int(wm_ts))
         return MergeResult(
             version,
             inserted=a.get("insert", 0) + a.get("revive", 0),
@@ -1393,7 +1422,6 @@ class LakeTable:
         new_schema: T.StructType,
         *,
         batch_id: str | None,
-        collect_metrics: bool,
         watermark_seq: int | None,
         extra_metrics: dict | None = None,
         src_aligned: bool = False,
@@ -1420,160 +1448,85 @@ class LakeTable:
         # metrics piggyback on the write job itself (Observation fills when
         # the action runs) — a separate metrics pass was a whole extra job
         # per commit; per-bucket row counts come from parquet footers below
-        obs = None
-        late_thr = _late_threshold_micros(m)
-        if collect_metrics:
-            from pyspark.sql import Observation
+        from pyspark.sql import Observation
 
-            obs = Observation()
-            out = out.observe(
-                obs,
-                F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("deletes"),
-                F.sum(F.when(F.col("_deleted"), 0).otherwise(1)).alias("upserts"),
-                F.max(F.unix_micros(F.col("_ts"))).alias("_wm_ts"),
-                F.sum(F.when(F.unix_micros(F.col("_ts")) < F.lit(late_thr), 1)
-                      .otherwise(0)).alias("_late"),
-            )
-        if src_aligned and m.get("bucket_hash") == "murmur3":
-            # aligned src (prepare_batch fused exchange): the batch is
-            # already partition b == bucket b — append delta files with NO
-            # exchange at all (the O(batch) commit's only stage is
-            # scan->write)
-            to_write = out
-        else:
-            to_write = self._bucket_repartition(out, m)
-        new_files = self._write_snapshot(
-            to_write, version, kind="delta", bloom_key=m["key"],
+        obs = Observation()
+        late_thr = _late_threshold_micros(m)
+        out = out.observe(
+            obs,
+            F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("deletes"),
+            F.sum(F.when(F.col("_deleted"), 0).otherwise(1)).alias("upserts"),
+            F.max(F.unix_micros(F.col("_ts"))).alias("_wm_ts"),
+            F.sum(F.when(F.unix_micros(F.col("_ts")) < F.lit(late_thr), 1)
+                  .otherwise(0)).alias("_late"),
         )
+        if not src_aligned:
+            out = out.repartition(m["n_buckets"], F.col(m["key"]))
+        # aligned src (prepare_batch fused exchange): the batch is already
+        # partition b == bucket b — append delta files with NO exchange at
+        # all (the O(batch) commit's only stage is scan->write)
+        new_files = self._write_snapshot(
+            out, version, kind="delta", bloom_key=m["key"],
+        )
+
+        def _same_spec(base: dict) -> None:
+            # The delta files were written keyed by m's bucket ids, so if
+            # the lost race was a rebucket / full compaction the rebase
+            # would merge old-spec file lists into a new-spec manifest —
+            # rows invisible to bucket-pruned reads and droppable by the
+            # next incremental compaction. Force a full re-prepare under
+            # the new spec instead: a spec change can never be absorbed by
+            # rebasing these files.
+            if base["n_buckets"] != m["n_buckets"]:
+                raise ConcurrentWriteError(
+                    "bucket spec changed under an in-flight MOR append "
+                    f"(n_buckets {m['n_buckets']} -> {base['n_buckets']})"
+                    " — re-prepare the batch under the new spec"
+                )
+
+        # pre_commit is the pipelined replay's commit-order barrier
+        # (replay.py): this batch's data files are fully written — the
+        # expensive, freely-overlappable part — so block only at the
+        # commit until every earlier batch has committed. Ordered commits
+        # keep the ledger's per-namespace high watermark ("every log
+        # position <= hwm is applied") truthful under overlapped writes.
         if not new_files:  # empty batch: ledger-only commit (cf. COW path)
-            if batch_id is not None:
-                if pre_commit is not None:  # commit-order barrier (pipelined)
-                    pre_commit()
-                    m = self.manifest()
-                    if _batch_seen(m, batch_id):
-                        return MergeResult(m["version"], 0, 0, 0, 0, 0,
-                                           noop=True)
-                    version = m["version"] + 1
-                self._commit({**m, "version": version, "parent": m["version"],
-                              "ledger": _ledger_add(m, batch_id),
-                              "metrics": {"op": "merge", "mode": "mor",
-                                          "batch_id": batch_id, "empty": True,
-                                          **extra}})
-                return MergeResult(version, 0, 0, 0, 0, 0)
-            return MergeResult(m["version"], 0, 0, 0, 0, 0, noop=True)
+            if batch_id is None:
+                return MergeResult(m["version"], 0, 0, 0, 0, 0, noop=True)
+            version, noop = self._publish_snapshot(
+                m, {"op": "merge", "mode": "mor", "batch_id": batch_id,
+                    "empty": True, **extra},
+                batch_id=batch_id, rebase=_same_spec, pre_commit=pre_commit)
+            return MergeResult(version, 0, 0, 0, 0, 0, noop=noop)
 
         # per-file stats of the just-written delta files — recorded in the
         # manifest so read-path delta sizing is dict lookups, never footer IO
         new_rows, new_bounds = self._scan_new_file_stats(new_files, m["key"])
-        metrics: dict = {"mode": "mor"}
-        n_upserts = n_deletes = 0
-        if collect_metrics and obs is not None:
-            got = obs.get  # filled by the completed write job — no new job
-            n_upserts = int(got.get("upserts") or 0)
-            n_deletes = int(got.get("deletes") or 0)
-            metrics["actions"] = {"append_upsert": n_upserts, "append_delete": n_deletes}
-            metrics["late_events"] = int(got.get("_late") or 0)
-            if got.get("_wm_ts") is not None:
-                metrics["_wm_ts_obs"] = int(got["_wm_ts"])
-            metrics["by_bucket"] = {
-                b: {"rows": sum(new_rows[f] for f in fl)}
-                for b, fl in new_files.items()
-            }
-
-        if watermark_seq is None and deferred_watermark is not None:
-            watermark_seq = deferred_watermark()
-        if watermark_seq is None:
-            wm_row = src.agg(F.max("event_seq")).first()
-            watermark_seq = wm_row[0] if wm_row[0] is not None else -1
-        watermark = max(m["watermark_seq"], watermark_seq)
-
-        obs_ts = metrics.pop("_wm_ts_obs", None)
-
-        def _build(base: dict) -> dict:
-            """Commit manifest derived from ``base`` — separated out so a
-            lost commit race can REBASE: a MOR append is semantically
-            independent of concurrent appends (delta file lists merge,
-            ledgers union, watermarks max, schemas additive-merge), so on
-            ConcurrentWriteError the same already-written data files are
-            re-committed against the fresh manifest with no Spark work."""
-            deltas = dict(base.get("deltas", {}))
-            for b, fl in new_files.items():
-                deltas[b] = list(deltas.get(b, [])) + fl
-            wm_ts = base.get("watermark_ts")
-            if obs_ts is not None:
-                wm_ts = obs_ts if wm_ts is None else max(wm_ts, obs_ts)
-            schema = merge_schemas(
-                T.StructType.fromJson(base["schema"]), new_schema)
-            return {
-                **base,
-                "version": base["version"] + 1,
-                "parent": base["version"],
-                "schema": schema.jsonValue(),
-                "deltas": deltas,
-                "file_rows": self._carry_file_stats(
-                    base, base.get("files", {}), deltas, new_rows),
-                "file_key_bounds": self._carry_file_stats(
-                    base, base.get("files", {}), deltas, new_bounds,
-                    "file_key_bounds"),
-                "ledger": _ledger_add(base, batch_id),
-                "watermark_seq": max(base["watermark_seq"], watermark),
-                "watermark_ts": wm_ts,
-                "metrics": {"op": "merge", "batch_id": batch_id,
-                            **metrics, **extra},
-            }
-
-        base = m
-        if pre_commit is not None:
-            # Pipelined replay's commit-order barrier (replay.py): this
-            # batch's data files are fully written — the expensive,
-            # freely-overlappable part — so block HERE, and only here,
-            # until every earlier batch has committed. Ordered commits
-            # keep the ledger's per-namespace high watermark ("every log
-            # position <= hwm is applied") truthful under overlapped
-            # writes. Rebase straight onto the predecessors' snapshot so
-            # the first commit attempt isn't a guaranteed lost CAS; the
-            # spec guard below still compares against ``m`` — the spec
-            # the delta files were WRITTEN under.
-            pre_commit()
-            base = self.manifest()
-            if batch_id is not None and _batch_seen(base, batch_id):
-                return MergeResult(base["version"], 0, 0, 0, 0, 0,
-                                   noop=True)
-        for attempt in range(_COMMIT_RETRIES):
-            if attempt:
-                _rebase_backoff(attempt)
-                base = self.manifest()  # rebase on the winner's snapshot
-                if batch_id is not None and _batch_seen(base, batch_id):
-                    # a concurrent writer applied THIS batch (shared log,
-                    # competing tailers): exactly-once holds — our attempt
-                    # dir becomes an orphan (expire_snapshots sweeps it)
-                    return MergeResult(base["version"], 0, 0, 0, 0, 0,
-                                       noop=True)
-            # bucket-spec guard (mirror of the compaction-side rebase
-            # guard): the delta files were written keyed by m's bucket
-            # ids, so if the lost race was a rebucket / full compaction
-            # the rebase would merge old-spec file lists into a new-spec
-            # manifest — rows invisible to bucket-pruned reads and
-            # droppable by the next incremental compaction. Force a full
-            # re-prepare under the new spec instead. No retry: a spec
-            # change can never be absorbed by rebasing these files.
-            if base.get("n_buckets") != m["n_buckets"] or (
-                base.get("bucket_hash") != m.get("bucket_hash")
-            ):
-                raise ConcurrentWriteError(
-                    "bucket spec changed under an in-flight MOR append "
-                    f"(n_buckets {m['n_buckets']} -> {base.get('n_buckets')})"
-                    " — re-prepare the batch under the new spec"
-                )
-            try:
-                committed = _build(base)
-                self._commit(committed)
-                break
-            except ConcurrentWriteError:
-                if attempt == _COMMIT_RETRIES - 1:
-                    raise
+        got = obs.get  # filled by the completed write job — no new job
+        n_upserts = int(got.get("upserts") or 0)
+        n_deletes = int(got.get("deletes") or 0)
+        metrics = {
+            "mode": "mor",
+            "actions": {"append_upsert": n_upserts,
+                        "append_delete": n_deletes},
+            "late_events": int(got.get("_late") or 0),
+            "by_bucket": {b: {"rows": sum(new_rows[f] for f in fl)}
+                          for b, fl in new_files.items()},
+        }
+        wm_ts = got.get("_wm_ts")
+        watermark_seq = _batch_watermark(src, watermark_seq,
+                                         deferred_watermark)
+        version, noop = self._publish_snapshot(
+            m, {"op": "merge", "batch_id": batch_id, **metrics, **extra},
+            batch_id=batch_id, appended=new_files,
+            new_rows=new_rows, new_bounds=new_bounds, schema=new_schema,
+            watermark_seq=watermark_seq,
+            watermark_ts=None if wm_ts is None else int(wm_ts),
+            rebase=_same_spec, pre_commit=pre_commit)
+        if noop:
+            return MergeResult(version, 0, 0, 0, 0, 0, noop=True)
         return MergeResult(
-            committed["version"], inserted=n_upserts, updated=0,
+            version, inserted=n_upserts, updated=0,
             deleted=n_deletes, stale_skipped=0, touched_buckets=len(new_files),
         )
 
@@ -1707,12 +1660,8 @@ class LakeTable:
     def evolve(self, new_columns: T.StructType) -> int:
         """Explicit additive ALTER TABLE ADD COLUMNS (merge() also evolves
         implicitly when updates carry new payload columns)."""
-        m = self.manifest()
-        new_schema = merge_schemas(T.StructType.fromJson(m["schema"]), new_columns)
-        version = m["version"] + 1
-        self._commit({**m, "version": version, "parent": m["version"],
-                      "schema": new_schema.jsonValue(),
-                      "metrics": {"op": "evolve"}})
+        version, _ = self._publish_snapshot(
+            self.manifest(), {"op": "evolve"}, schema=new_columns)
         return version
 
     # ------------------------------------------------------------ housekeeping
@@ -1747,115 +1696,61 @@ class LakeTable:
         buckets this compaction rewrites (combine with ``full=True`` for a
         table-wide sweep once the lateness horizon has passed)."""
         m = self.manifest()
+        key = m["key"]
         new_n = n_buckets or m["n_buckets"]
         full = full or (new_n != m["n_buckets"])
         if full:
             target = None  # every bucket, re-hashed under the new spec
         else:
-            target = sorted(
-                (b for b, fl in m.get("deltas", {}).items() if fl), key=int
-            )
+            target = sorted((b for b, fl in m["deltas"].items() if fl), key=int)
             if not target:
                 return m["version"]  # nothing pending — no-op, no commit
-        fused = m.get("bucket_hash") == "murmur3"
-        if fused:
-            # single-job rewrite: winners as a pure broadcast subplan, ties
-            # collapsed partition-locally after the aligned exchange — the
-            # whole compaction is one Spark job (no driver probe round-trip)
-            df, needs_dedup = self._resolved_for_rewrite(m, target)
-        else:
-            df, needs_dedup = self._read_resolved(m, buckets=target), False
-        df = df.withColumn(
-            "_bucket", self.bucket_expr(F.col(m["key"]), new_n, manifest=m)
-        )
+        # single-job rewrite: winners as a pure broadcast subplan, ties
+        # collapsed partition-locally after the aligned exchange — the
+        # whole compaction is one Spark job (no driver probe round-trip)
+        df, needs_dedup = self._resolved_for_rewrite(m, target)
+        df = df.withColumn("_bucket", self.bucket_expr(F.col(key), new_n))
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
-        version = m["version"] + 1
-        n_parts = new_n if full else max(len(target), 1)
-        if fused:
-            out = df.repartition(new_n, F.col(m["key"]))
-            if needs_dedup:
-                # HashPartitioning(key, new_n) satisfies the clustering —
-                # this dedup of re-delivered ties adds NO exchange
-                out = out.dropDuplicates([m["key"]])
-        else:
-            out = self._bucket_repartition(df, {**m, "n_buckets": new_n}, n_parts)
+        out = df.repartition(new_n, F.col(key))
+        if needs_dedup:
+            # HashPartitioning(key, new_n) satisfies the clustering —
+            # this dedup of re-delivered ties adds NO exchange
+            out = out.dropDuplicates([key])
         # key-sorted base files (Iceberg sort-order analog): a partition-
         # local, spill-safe sort on a rewrite that is happening anyway.
         # Tightens parquet row-group key stats so point lookups
         # (read_keys -> isin pushdown) prune ROW GROUPS inside multi-GB
         # bucket files, not just whole files via file_key_bounds.
-        out = out.sortWithinPartitions(m["key"])
-        new_files = self._write_snapshot(out, version)
-        new_rows, new_bounds = self._scan_new_file_stats(new_files, m["key"])
-        folded = {str(b): set(m.get("deltas", {}).get(str(b), []))
-                  for b in (target or [])}
+        out = out.sortWithinPartitions(key)
+        new_files = self._write_snapshot(out, m["version"] + 1)
+        new_rows, new_bounds = self._scan_new_file_stats(new_files, key)
 
-        def _build(base: dict) -> dict:
-            """Compaction commit against ``base``. Separated so a lost
-            commit race against a live TAILER can rebase (the background-
-            compactor deployment): the rewrite folded exactly the deltas
-            read from ``m``, and LWW resolution is idempotent, so deltas
-            appended since stay PENDING against the new base files and
-            resolve identically at read/next compaction. Rebase refuses
-            (ConcurrentWriteError propagates) when the race is another
-            REWRITE of the same buckets (competing compactor — a
-            misconfiguration: exactly one compactor per table), when the
-            bucket spec moved, or for full/rebucket compactions."""
-            if base is not m:
-                if full or new_n != m["n_buckets"]:
+        def _rebase_ok(base: dict) -> None:
+            """A lost commit race against a live TAILER rebases (the
+            background-compactor deployment): the rewrite folded exactly
+            the deltas read from ``m``, so deltas appended since stay
+            pending against the new base files. Refuse when the bucket
+            spec moved or the race was another REWRITE of the same
+            buckets (competing compactor — a misconfiguration: exactly
+            one compactor per table). Full/rebucket compactions never
+            rebase."""
+            if base["n_buckets"] != m["n_buckets"]:
+                raise ConcurrentWriteError(
+                    "bucket spec changed under an in-flight compaction")
+            for b in target:
+                if base["files"].get(b) != m["files"].get(b):
                     raise ConcurrentWriteError(
-                        "full/rebucket compaction lost a commit race — "
-                        "rerun against the new snapshot")
-                if base.get("n_buckets") != m["n_buckets"]:
-                    raise ConcurrentWriteError(
-                        "bucket spec changed under an in-flight compaction")
-                for b in target:
-                    if base["files"].get(str(b)) != m["files"].get(str(b)):
-                        raise ConcurrentWriteError(
-                            f"bucket {b} was rewritten by a concurrent "
-                            f"compaction — rerun against the new snapshot")
-            if full:
-                files, deltas = dict(new_files), {}
-            else:
-                files = dict(base["files"])
-                deltas = dict(base.get("deltas", {}))
-                for b in target:
-                    # a bucket can legitimately compact to zero files (all
-                    # rows were tombstones and got dropped)
-                    files[str(b)] = new_files.get(str(b), [])
-                    # deltas appended AFTER our read stay pending
-                    rem = [f for f in deltas.get(str(b), [])
-                           if f not in folded[str(b)]]
-                    if rem:
-                        deltas[str(b)] = rem
-                    else:
-                        deltas.pop(str(b), None)
-            return {**base, "version": base["version"] + 1,
-                    "parent": base["version"],
-                    "n_buckets": new_n, "files": files, "deltas": deltas,
-                    "file_rows": self._carry_file_stats(
-                        base, files, deltas, new_rows),
-                    "file_key_bounds": self._carry_file_stats(
-                        base, files, deltas, new_bounds, "file_key_bounds"),
-                    "metrics": {"op": "compact", "n_buckets": new_n,
-                                "full": full,
-                                "rewritten_buckets": (new_n if full
-                                                      else len(target))}}
+                        f"bucket {b} was rewritten by a concurrent "
+                        f"compaction — rerun against the new snapshot")
 
-        base = m
-        for attempt in range(_COMMIT_RETRIES):
-            if attempt:
-                _rebase_backoff(attempt)
-                base = self.manifest()  # rebase on the tailer's commit
-            try:
-                committed = _build(base)
-                self._commit(committed)
-                break
-            except ConcurrentWriteError:
-                if attempt == _COMMIT_RETRIES - 1:
-                    raise
-        return committed["version"]
+        version, _ = self._publish_snapshot(
+            m, {"op": "compact", "n_buckets": new_n, "full": full,
+                "rewritten_buckets": new_n if full else len(target)},
+            new_files=new_files, rewritten=target, new_rows=new_rows,
+            new_bounds=new_bounds, n_buckets=new_n,
+            rebase=None if full else _rebase_ok)
+        return version
 
     def pending_delta_files(self) -> int:
         return sum(len(v) for v in self.manifest().get("deltas", {}).values())

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .lake import LakeTable, MergeResult, _ledger_add
+from .lake import LakeTable, MergeResult, _batch_seen
 
 
 def _cond(c: Column | bool | None, default: bool) -> Column:
@@ -90,11 +90,8 @@ def merge_into(
     """
     spark = table.spark
     m = table.manifest()
-    if batch_id is not None:
-        from .lake import _batch_seen
-
-        if _batch_seen(m, batch_id):
-            return MergeResult(m["version"], 0, 0, 0, 0, 0, noop=True)
+    if batch_id is not None and _batch_seen(m, batch_id):
+        return MergeResult(m["version"], 0, 0, 0, 0, 0, noop=True)
     key = on or m["key"]
     n_buckets = m["n_buckets"]
     version = m["version"] + 1
@@ -128,7 +125,7 @@ def merge_into(
     ts = event_time if event_time is not None else F.current_timestamp()
 
     src = source.withColumn(
-        "_bucket", table.bucket_expr(F.col(key), n_buckets, manifest=m)
+        "_bucket", table.bucket_expr(F.col(key), n_buckets)
     ).persist()
     if by_source:
         # every visible target row with no source match is a candidate:
@@ -139,15 +136,14 @@ def merge_into(
     if not touched:
         src.unpersist()
         if batch_id is not None:
-            table._commit({**m, "version": version, "parent": m["version"],
-                           "ledger": _ledger_add(m, batch_id),
-                           "metrics": {"op": "merge_into", "empty": True,
-                                       "batch_id": batch_id}})
+            version, _ = table._publish_snapshot(
+                m, {"op": "merge_into", "empty": True, "batch_id": batch_id},
+                batch_id=batch_id)
             return MergeResult(version, 0, 0, 0, 0, 0)
         return MergeResult(m["version"], 0, 0, 0, 0, 0, noop=True)
 
     target = table._read_resolved(m, buckets=touched).withColumn(
-        "_bucket", table.bucket_expr(F.col(key), n_buckets, manifest=m)
+        "_bucket", table.bucket_expr(F.col(key), n_buckets)
     )
     j = target.alias("t").join(
         src.alias("s"), F.col(f"t.{key}") == F.col(f"s.{key}"), "full_outer"
@@ -246,34 +242,20 @@ def merge_into(
     ).drop("_action")
 
     new_files = table._write_snapshot(
-        out.repartition(max(len(touched), 1), F.col(key))
-        if m.get("bucket_hash") != "murmur3"
-        else out.repartition(n_buckets, F.col(key)),
-        version,
-    )
+        out.repartition(n_buckets, F.col(key)), version)
     new_rows, new_bounds = table._scan_new_file_stats(new_files, m["key"])
-    files = dict(m["files"])
-    deltas = dict(m.get("deltas", {}))
-    for b in touched:
-        files[str(b)] = new_files.get(str(b), [])
-        deltas.pop(str(b), None)
     got = obs.get
     src.unpersist()
-    table._commit({
-        **m,
-        "version": version,
-        "parent": m["version"],
-        "files": files,
-        "deltas": deltas,
-        "file_rows": table._carry_file_stats(m, files, deltas, new_rows),
-        "file_key_bounds": table._carry_file_stats(
-            m, files, deltas, new_bounds, "file_key_bounds"),
-        "ledger": _ledger_add(m, batch_id),
-        "metrics": {"op": "merge_into", "batch_id": batch_id,
-                    "actions": {a: int(got.get(a) or 0)
-                                for a in ("insert", "update", "update_t",
-                                          "delete", "keep")}},
-    })
+    # a rewrite: a lost commit race raises ConcurrentWriteError (never
+    # rebased — the clauses were evaluated against m's rows)
+    table._publish_snapshot(
+        m, {"op": "merge_into", "batch_id": batch_id,
+            "actions": {a: int(got.get(a) or 0)
+                        for a in ("insert", "update", "update_t", "delete",
+                                  "keep")}},
+        batch_id=batch_id, new_files=new_files,
+        rewritten=[str(b) for b in touched],
+        new_rows=new_rows, new_bounds=new_bounds)
     return MergeResult(
         version,
         inserted=int(got.get("insert") or 0),

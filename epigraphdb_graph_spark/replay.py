@@ -35,7 +35,7 @@ def prepare_batch(events: DataFrame, *, dedup: bool = True,
     """Prepare a raw change-event batch for ``LakeTable.merge``: per-key
     LWW winner selection, then html→text extraction on winners only.
 
-    ``bucket_into=n`` (murmur3-bucketed tables — apply_batch sets it)
+    ``bucket_into=n`` (apply_batch sets it to the table's n_buckets)
     fuses the table's bucket layout into this preparation: the raw batch
     is exchanged once with ``repartition(n, key)``, which places every
     row in partition == bucket (see LakeTable.create), so the downstream
@@ -162,15 +162,13 @@ def apply_batch(
     try:
         for _ in range(3):
             m = table.manifest()
-            aligned = m.get("bucket_hash") == "murmur3"
             try:
                 return table.merge(
                     prepare_batch(events, dedup=dedup, key=m["key"],
-                                  bucket_into=m["n_buckets"] if aligned
-                                  else None),
+                                  bucket_into=m["n_buckets"]),
                     batch_id=batch_id, watermark_seq=watermark_seq,
                     deferred_watermark=deferred_watermark, mode=mode,
-                    extra_metrics=extra, src_aligned=aligned,
+                    extra_metrics=extra, src_aligned=True,
                     pre_commit=pre_commit,
                 )
             except CommitInFlightError:

@@ -240,6 +240,49 @@ def _prep(spark, seq, url):
     return prepare_batch(_ev(spark, seq, url=url), dedup=True)
 
 
+def test_cow_merge_from_stale_snapshot_refused(spark, tmp_path):
+    """A COW rewrite read the base files of its snapshot; committing it
+    over a newer head would drop the winner's rows. It must never rebase:
+    the lost race raises and the winner's commit stays at the head."""
+    path = str(tmp_path / "t_cow")
+    LakeTable.create(spark, path, PAGES_SCHEMA, key="url", n_buckets=2)
+    w1, w2 = LakeTable(spark, path), LakeTable(spark, path)
+    stale = w2.manifest()
+    w1.merge(_prep(spark, 1, "https://a.org/p1"), batch_id="w1:b1")
+
+    _stale_first_manifest(w2, stale)
+    with pytest.raises(ConcurrentWriteError):
+        w2.merge(_prep(spark, 2, "https://a.org/p2"), batch_id="w2:b1")
+    t = LakeTable(spark, path)
+    assert t.current_version() == 1
+    assert t.manifest()["metrics"]["batch_id"] == "w1:b1"
+    assert {r["url"] for r in t.read().select("url").collect()} == {
+        "https://a.org/p1"}
+
+
+def test_merge_into_from_stale_snapshot_refused(spark, tmp_path):
+    """merge_into evaluates its clauses against its snapshot's rows, so a
+    lost commit race is refused, never rebased."""
+    from epigraphdb_graph_spark.plans.merge_into import merge_into
+
+    path = str(tmp_path / "t_mi")
+    LakeTable.create(spark, path, PAGES_SCHEMA, key="url", n_buckets=2)
+    w1, w2 = LakeTable(spark, path), LakeTable(spark, path)
+    stale = w2.manifest()
+    w1.merge(_prep(spark, 1, "https://a.org/p1"), batch_id="w1:b1")
+
+    _stale_first_manifest(w2, stale)
+    src = spark.createDataFrame([("https://a.org/p2", "two")],
+                                "url string, text string")
+    with pytest.raises(ConcurrentWriteError):
+        merge_into(w2, src, batch_id="w2:b1")
+    t = LakeTable(spark, path)
+    assert t.current_version() == 1
+    assert t.manifest()["metrics"]["batch_id"] == "w1:b1"
+    assert {r["url"] for r in t.read().select("url").collect()} == {
+        "https://a.org/p1"}
+
+
 def test_compaction_rebases_past_tailer_commit(spark, tmp_path):
     """Background-compactor deployment: the compactor derives its rewrite
     from snapshot S; a tailer appends a NEW delta before the compactor

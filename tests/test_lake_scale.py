@@ -20,10 +20,12 @@ import time
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from epigraphdb_graph_spark.plans import lake as lake_mod
 from epigraphdb_graph_spark.plans.lake import LakeTable
-from epigraphdb_graph_spark.replay import apply_batch, replay
+from epigraphdb_graph_spark.replay import apply_batch, prepare_batch, replay
+from epigraphdb_graph_spark.schema import PAGES_SCHEMA
 from epigraphdb_graph_spark.sources.events import generate_change_events
 
 from .oracle import replay_oracle
@@ -68,10 +70,9 @@ def test_mor_resolution_shuffle_fallback(spark, tmp_path, events, oracle_state,
     path = str(tmp_path / "fallback")
     replay(spark, path, events, n_batches=4, n_buckets=8, mode="mor")
     table = LakeTable(spark, path)
-    n_delta_rows = sum(
-        lake_mod._parquet_num_rows(os.path.join(table.path, f))
-        for fl in table.manifest()["deltas"].values() for f in fl
-    )
+    m = table.manifest()
+    n_delta_rows = sum(m["file_rows"][f]
+                       for fl in m["deltas"].values() for f in fl)
     assert n_delta_rows > 10  # fallback path is actually exercised
     _assert_equal(_state(spark, path), oracle_state)
     # compaction goes through the same resolution; still correct
@@ -147,10 +148,7 @@ def test_steady_state_broadcast_resolution(spark, tmp_path, events, oracle_state
     table = LakeTable(spark, path)
     apply_batch(table, rest, batch_id="tail:000000000000", mode="mor")
     m = table.manifest()
-    n_delta = sum(
-        lake_mod._parquet_num_rows(os.path.join(table.path, f))
-        for fl in m["deltas"].values() for f in fl
-    )
+    n_delta = sum(m["file_rows"][f] for fl in m["deltas"].values() for f in fl)
     # broadcast path is the one exercised (under the overflow threshold)
     assert 0 < n_delta <= lake_mod.RESOLVE_BROADCAST_MAX_DELTA_ROWS
     _assert_equal(_state(spark, path), oracle_state)
@@ -229,8 +227,6 @@ def test_unreserved_batch_id_namespaces_are_not_hwm_matched(spark, tmp_path):
     caller id like 'backfill:20240817' followed by a numerically smaller
     'backfill:20230101' must both apply — date-stamped suffixes are not
     monotone, and hwm-skipping the second silently loses its data."""
-    from epigraphdb_graph_spark.schema import PAGES_SCHEMA
-
     path = str(tmp_path / "ns")
     table = LakeTable.create(spark, path, PAGES_SCHEMA, key="url", n_buckets=4)
 
@@ -259,41 +255,108 @@ def test_unreserved_batch_id_namespaces_are_not_hwm_matched(spark, tmp_path):
     assert "backfill" not in led["hwm"]
 
 
+def _assert_stats_cover_live_files(table):
+    """``file_rows`` holds exactly the referenced files (retired ones
+    dropped); key bounds never outlive their file."""
+    m = table.manifest()
+    referenced = {f for d in (m["files"], m["deltas"])
+                  for fl in d.values() for f in fl}
+    assert set(m["file_rows"]) == referenced
+    assert set(m["file_key_bounds"]) <= referenced
+    return m, referenced
+
+
 def test_manifest_file_rows_keep_read_path_footer_free(spark, tmp_path,
                                                        events, monkeypatch):
     """Per-file row counts are recorded in the manifest at commit time
     (round-2 item 4): the MOR read path's delta sizing and lineage read
     them as dict lookups — at object-store scale, per-read serial footer
-    GETs over 10^5 files would bottleneck every read."""
+    GETs over 10^5 files would bottleneck every read. Every writer keeps
+    the map equal to the referenced files."""
+    import pyarrow.parquet as pq
+
+    from epigraphdb_graph_spark.plans.merge_into import merge_into
+
     path = str(tmp_path / "stats")
     replay(spark, path, events, n_batches=3, n_buckets=4, mode="mor")
     table = LakeTable(spark, path)
-    m = table.manifest()
-    referenced = {f for d in (m["files"], m["deltas"])
-                  for fl in d.values() for f in fl}
-    assert set(m["file_rows"]) == referenced
+    m, referenced = _assert_stats_cover_live_files(table)
     # counts are the truth (spot-check against actual footers)
     for f in sorted(referenced)[:3]:
-        assert m["file_rows"][f] == lake_mod._parquet_num_rows(
-            os.path.join(table.path, f))
+        assert m["file_rows"][f] == pq.ParquetFile(
+            os.path.join(table.path, f)).metadata.num_rows
 
     # the read path must not open a single footer
-    def _boom(path):
+    def _boom(path, *a, **k):
         raise AssertionError(f"read path touched a parquet footer: {path}")
 
-    monkeypatch.setattr(lake_mod, "_parquet_num_rows", _boom)
+    monkeypatch.setattr(pq, "ParquetFile", _boom)
     want = replay_oracle(events.toPandas())
     _assert_equal(_state(spark, path), want)
+    monkeypatch.undo()
 
     # compaction retires delta entries from file_rows and carries the rest
-    monkeypatch.undo()
     table.compact()
-    m2 = table.manifest()
-    referenced2 = {f for d in (m2["files"], m2["deltas"])
-                   for fl in d.values() for f in fl}
-    assert set(m2["file_rows"]) == referenced2
-    monkeypatch.setattr(lake_mod, "_parquet_num_rows", _boom)
+    _assert_stats_cover_live_files(table)
+    monkeypatch.setattr(pq, "ParquetFile", _boom)
     _assert_equal(_state(spark, path), want)
+    monkeypatch.undo()
+
+    # every other writer keeps the map exact too
+    late = (events.limit(5).withColumn("event_seq", F.col("event_seq") + 10**7)
+            .withColumn("warc_ts", F.current_timestamp()))
+    apply_batch(table, late, batch_id="late:000000000000", mode="mor")
+    apply_batch(table, late.withColumn("event_seq", F.col("event_seq") + 1),
+                batch_id="late:000000000001", mode="cow")
+    _assert_stats_cover_live_files(table)
+    merge_into(table, spark.createDataFrame(
+        [("https://new.example.org/x", "x")], "url string, text string"),
+        batch_id="mi:1")
+    _assert_stats_cover_live_files(table)
+    table.evolve(T.StructType([T.StructField("extra", T.StringType())]))
+    _assert_stats_cover_live_files(table)
+    apply_batch(table, late.withColumn("event_seq", F.col("event_seq") + 2),
+                batch_id="late:000000000002", mode="mor")
+    table.overwrite(table.read().select("url", "warc_ts", "text"))
+    m, _ = _assert_stats_cover_live_files(table)
+    assert m["deltas"] == {}
+    apply_batch(table, late.withColumn("event_seq", F.col("event_seq") + 3),
+                batch_id="late:000000000003", mode="mor")
+    table.compact()
+    _assert_stats_cover_live_files(table)
+
+
+@pytest.mark.parametrize("layout", [None, "xxhash64"])
+def test_non_murmur3_layout_rejected(spark, tmp_path, layout):
+    """Only the murmur3 bucket layout is supported: writing murmur3
+    placement into a table laid out by another hash would split keys
+    across buckets, so reads and writes of such a manifest refuse with a
+    ValueError that names the layout."""
+    path = str(tmp_path / "legacy")
+    table = LakeTable.create(spark, path, PAGES_SCHEMA, key="url",
+                             n_buckets=2)
+    ev = spark.createDataFrame(pd.DataFrame(
+        [(1, "insert", "https://a.org/p1", pd.Timestamp("2024-01-01"),
+          b"<p>x</p>")],
+        columns=["event_seq", "op", "url", "warc_ts", "html"]))
+    apply_batch(table, ev, batch_id="b1", mode="mor")
+    mpath = os.path.join(table._meta_dir,
+                         f"v{table.current_version():08d}.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    if layout is None:
+        m.pop("bucket_hash")
+    else:
+        m["bucket_hash"] = layout
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+
+    with pytest.raises(ValueError, match=repr(layout)):
+        table.read_keys("https://a.org/p1")
+    with pytest.raises(ValueError, match=repr(layout)):
+        table.merge(prepare_batch(ev), batch_id="b2")
+    with pytest.raises(ValueError, match=repr(layout)):
+        table.compact()
 
 
 def test_crashed_commit_is_invisible_and_recoverable(spark, tmp_path, events,
@@ -506,10 +569,6 @@ def test_expire_snapshots_bounds_metadata(spark, tmp_path, events, oracle_state)
 
 
 def _pages_schema(events):
-    from pyspark.sql import types as T
-
-    from epigraphdb_graph_spark.schema import PAGES_SCHEMA
-
     if "lang" in events.columns:
         return PAGES_SCHEMA
     return T.StructType([f for f in PAGES_SCHEMA.fields if f.name != "lang"])

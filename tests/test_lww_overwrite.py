@@ -79,3 +79,30 @@ def test_overwrite_mor_delta_on_top(spark, tmp_path):
     assert len(state) == 9                       # p4 tombstoned
     assert state.loc["https://a.org/p2", "text"] == "v2"
     assert state.loc["https://a.org/p0", "text"] == "text 0"
+
+
+def test_overwrite_retires_pending_deltas(spark, tmp_path):
+    """overwrite() replaces the whole table: MOR deltas pending before it
+    must not stay live on top of the new base files, and their per-file
+    stats must leave the manifest with them."""
+    path = str(tmp_path / "bulk_over_mor")
+    table = LakeTable.create(spark, path, PAGES_SCHEMA, key="url", n_buckets=4)
+    old = spark.createDataFrame(pd.DataFrame(
+        [(1, "insert", "https://a.org/old", pd.Timestamp("2024-03-01"),
+          b"<p>old</p>")],
+        columns=["event_seq", "op", "url", "warc_ts", "html"]))
+    apply_batch(table, old, batch_id="d1", mode="mor")
+    assert table.manifest()["deltas"]
+
+    ts = pd.Timestamp("2024-01-01")
+    bulk = spark.createDataFrame(pd.DataFrame(
+        [(f"https://a.org/p{i}", ts, None, f"text {i}", "en") for i in range(3)],
+        columns=["url", "warc_ts", "html", "text", "lang"]))
+    table.overwrite(bulk)
+
+    got = {r["url"] for r in table.read().select("url").collect()}
+    assert got == {f"https://a.org/p{i}" for i in range(3)}
+    m = table.manifest()
+    assert m["deltas"] == {}
+    referenced = {f for fl in m["files"].values() for f in fl}
+    assert set(m["file_rows"]) == referenced

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from epigraphdb_graph_spark.plans.lake import LakeTable, _ledger
+from epigraphdb_graph_spark.plans.lake import LakeTable
 from epigraphdb_graph_spark.replay import replay
 from epigraphdb_graph_spark.sources.events import generate_change_events
 
@@ -48,7 +48,7 @@ def test_pipelined_commit_order_and_ledger(spark, tmp_path):
                  pipeline_depth=2)
     versions = [r.version for r in res]
     assert versions == sorted(versions) and len(set(versions)) == 4
-    led = _ledger(LakeTable(spark, str(tmp_path / "t")).manifest())
+    led = LakeTable(spark, str(tmp_path / "t")).manifest()["ledger"]
     assert led["applied_count"] == 4
     hi = events.agg({"event_seq": "max"}).first()[0]
     assert led["hwm"]["replay"] == hi
@@ -119,7 +119,7 @@ def test_pipelined_resume_skips_committed(spark, tmp_path):
                    n_buckets=8, mode="mor",
                    pipeline_depth=2)
     assert all(r.noop for r in again)
-    led = _ledger(LakeTable(spark, str(tmp_path / "t")).manifest())
+    led = LakeTable(spark, str(tmp_path / "t")).manifest()["ledger"]
     assert led["applied_count"] == 4
 
 
@@ -145,6 +145,6 @@ def test_failed_batch_stops_serial_replay(spark, tmp_path, monkeypatch, mode):
     with pytest.raises(RuntimeError, match="batch lost"):
         replay(spark, path, events, n_batches=3, n_buckets=4, mode=mode)
     assert len(calls) == 2
-    led = _ledger(LakeTable(spark, path).manifest())
+    led = LakeTable(spark, path).manifest()["ledger"]
     assert led["applied_count"] == 1
     assert led["hwm"]["replay"] == int(calls[0].split(":")[1])
