@@ -277,9 +277,9 @@ def cmd_profile(args) -> int:
             "generated_unix": int(time.time()),
             "n_rows": rows[0]["n_rows"] if rows else 0,
             "columns": rows,
-            "last_commit_metrics": m.get("metrics", {}),
-            "applied_batches": m.get("ledger", {}).get("applied_count", 0),
-            "watermark_seq": m.get("watermark_seq"),
+            "last_commit_metrics": m["metrics"],
+            "applied_batches": m["ledger"]["applied_count"],
+            "watermark_seq": m["watermark_seq"],
         }, f, indent=1, default=str)
     print(json.dumps({"report": json_path, "parquet": pq_path,
                       "version": version, "columns": len(rows)}))
@@ -298,8 +298,8 @@ def cmd_show(args) -> int:
         "watermark_seq": m["watermark_seq"],
         "schema": [f.name for f in table.schema().fields],
         "rows": table.read().count(),
-        "applied_batches": m.get("ledger", {}).get("applied_count", 0),
-        "pending_delta_files": sum(len(v) for v in m.get("deltas", {}).values()),
+        "applied_batches": m["ledger"]["applied_count"],
+        "pending_delta_files": sum(len(v) for v in m["deltas"].values()),
     }))
     if args.history:
         stream_metrics(table).show(100, False)

@@ -149,7 +149,7 @@ def to_iceberg_metadata(table: LakeTable, out_dir: str | None = None) -> str:
     ``vN.metadata.json`` written. See module docstring for the documented
     deviations (JSON manifests, unpartitioned spec, MOR refusal)."""
     m = table.manifest()
-    if any(fl for fl in m.get("deltas", {}).values()):
+    if any(fl for fl in m["deltas"].values()):
         raise ValueError(
             "table has pending MOR deltas — their last-writer-wins "
             "resolve-on-read semantics are not expressible as Iceberg "
@@ -171,7 +171,7 @@ def to_iceberg_metadata(table: LakeTable, out_dir: str | None = None) -> str:
 
     # ---- one manifest of data_file entries (spec manifest_entry shape)
     entries = []
-    for bucket, files in sorted(m.get("files", {}).items(), key=lambda kv: kv[0]):
+    for bucket, files in sorted(m["files"].items(), key=lambda kv: kv[0]):
         for rel in files:
             fpath = os.path.join(table.path, rel)
             entries.append({

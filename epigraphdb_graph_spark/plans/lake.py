@@ -137,33 +137,26 @@ def _ord():
     )
 
 
-def _keep_winners(union_hot: DataFrame, winners: DataFrame,
-                  key: str) -> DataFrame:
-    """Broadcast-join the (``_wk`` -> ``_word``) winners and keep each
-    key's winning rows. A key untouched by any delta has no winner row
-    and passes through; winners stream through map-side with zero extra
-    exchange."""
-    j = union_hot.join(F.broadcast(winners),
-                       F.col(key) == F.col("_wk"), "left")
-    return j.filter(
-        F.col("_wk").isNull() | (F.col("_ord") == F.col("_word"))
-    ).drop("_wk", "_word", "_ord")
-
-
-def _rank_winners(union_hot: DataFrame, key: str) -> DataFrame:
-    """Key-partitioned shuffle resolution: one exchange of the hot
-    buckets' full rows, O(hot data), bounded executor memory, no driver
-    broadcast, ties deduped by row_number. Correct at any size; only
-    pays the full-row shuffle a neglected table (or re-delivered ties)
-    forces."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key).orderBy(F.desc("_ord"))
-    return (
-        union_hot.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_ord")
-    )
+def _conformed_cols(df: DataFrame, schema: T.StructType) -> list:
+    """``df``'s columns projected onto ``schema`` (an additive evolution of
+    the table schema): columns ``df`` lacks are null-filled, columns of
+    another type are cast — e.g. an all-null column arriving as NullType
+    from pandas inference or a delete-only batch. Callers select these in
+    ONE projection, not a withColumn chain: every stacked withColumn
+    re-runs analysis over the growing plan — at micro-batch cadence the
+    per-commit Catalyst time is a driver-side serial term that caps
+    scaling (it does not shrink with executor count)."""
+    src_types = {f.name: f.dataType for f in df.schema.fields}
+    out = []
+    for f in schema.fields:
+        c = f.name
+        if c not in src_types:
+            out.append(F.lit(None).cast(f.dataType).alias(c))
+        elif src_types[c] != f.dataType:
+            out.append(F.col(c).cast(f.dataType).alias(c))
+        else:
+            out.append(F.col(c))
+    return out
 
 
 # Exactly-once ledger: bounded list of recently applied batch ids kept
@@ -637,7 +630,7 @@ class LakeTable:
         *,
         which: str = "files",
     ) -> DataFrame:
-        files = manifest.get(which, {})
+        files = manifest[which]
         wanted = files.keys() if buckets is None else [str(b) for b in buckets]
         paths = [os.path.join(self.path, p) for b in wanted for p in files.get(str(b), [])]
         fschema = file_schema or self._file_schema(manifest)
@@ -672,8 +665,8 @@ class LakeTable:
           is only ever needed for keys that appear in a delta. The winners
           relation is O(pending delta keys) — bounded by the compaction
           cadence (``maybe_compact``), NOT by the table's key count.
-          It is broadcast when small (the common case, steady-state
-          tailing) and falls back to a key-partitioned shuffle resolution
+          It is collected to the driver and broadcast when small (the
+          common case, steady-state tailing) and falls back to a key-partitioned shuffle resolution
           when a neglected table has accumulated too many delta rows
           (correct at any size; just pays the shuffle).
         - **Exactly one row per key**: re-delivered events (at-least-once
@@ -681,19 +674,54 @@ class LakeTable:
           delta rows with equal (_ts, _seq); resolution collapses such
           ties with a per-key pick, so MOR reads stay idempotent under
           re-delivery just like COW's per-row stale guard.
+
+        Every reader and rewriter resolves through here: ``read``,
+        ``read_keys``, ``changes``, COW merge targets, ``merge_into`` and
+        ``compact`` — so compaction writes exactly what reads return.
         """
-        split = self._split_hot(manifest, buckets, file_schema)
-        if split is None:
+        deltas = manifest["deltas"]
+        files = manifest["files"]
+        if buckets is None:
+            wanted = sorted(set(files) | set(deltas), key=int)
+        else:
+            wanted = [str(b) for b in buckets]
+        hot = [b for b in wanted if deltas.get(b)]
+        if not hot:
             return self._read_files(manifest, buckets, file_schema)
-        base_cold, union_hot, winner_input = split
+        hot_set = set(hot)
+        cold = [b for b in wanted if b not in hot_set]
+
+        base_cold = self._read_files(manifest, cold, file_schema)
+        base_hot = self._read_files(manifest, hot, file_schema)
+        delta_df = self._read_files(manifest, hot, file_schema, which="deltas")
         key = manifest["key"]
-        if winner_input is not None:
-            # Winners restricted to delta-touched keys, then two chained
-            # hash aggs. The second agg ALSO counts rows tied at the
-            # winning _ord (max_by of the per-(key,_ord) count) — see the
-            # tie probe below.
+        union_hot = base_hot.unionByName(delta_df).withColumn("_ord", _ord())
+
+        # pending delta volume from manifest-resident per-file row counts
+        # (recorded at commit time): pure dict lookups — no footer IO, no job
+        n_delta_rows = sum(
+            manifest["file_rows"][f] for b in hot for f in deltas[b])
+        if n_delta_rows <= RESOLVE_BROADCAST_MAX_DELTA_ROWS:
+            # Winner input restricted to delta-touched keys: a column-pruned
+            # pass (parquet reads key, _ts, _seq only) — O(delta keys), not
+            # O(table keys); base rows whose key never appears in a delta
+            # are already their own winners and skip resolution entirely.
+            pruned = delta_df.select(key, "_ts", "_seq")
+            if any(files.get(b) for b in hot):
+                # base rows only matter for keys a delta touches; semi-join
+                # keeps the winner relation O(delta keys) on a huge table.
+                # (With no base files — young pure-MOR table — deltas ARE
+                # the table; skip the extra distinct+semi-join entirely.)
+                dkeys = delta_df.select(F.col(key).alias("_dk")).distinct()
+                base_pruned = base_hot.select(key, "_ts", "_seq").join(
+                    F.broadcast(dkeys), F.col(key) == F.col("_dk"),
+                    "left_semi")
+                pruned = pruned.unionByName(base_pruned)
+            # Two chained hash aggs. The second agg ALSO counts rows tied at
+            # the winning _ord (max_by of the per-(key,_ord) count) — see
+            # the tie probe below.
             winners_q = (
-                winner_input
+                pruned.withColumn("_ord", _ord())
                 .groupBy(key, "_ord")
                 .agg(F.count("*").alias("_cnt"))
                 .groupBy(F.col(key).alias("_wk"))
@@ -703,11 +731,9 @@ class LakeTable:
             # ONE job: pull the winners to the driver (O(delta keys) x 3
             # cols — the same rows a broadcast would ship there anyway;
             # Arrow columnar both ways, no per-row Python) and derive the
-            # tie answer locally. This replaces the previous three
-            # driver-synchronous steps (eager localCheckpoint job +
-            # tie-probe job + broadcast build) — per-commit serial time
-            # that executor count cannot shrink, i.e. exactly what caps
-            # N->4N scaling at micro-batch cadence. Ties (equal
+            # tie answer locally: a single driver-synchronous step, the
+            # serial time executor count cannot shrink and that caps N->4N
+            # scaling at micro-batch cadence. Ties (equal
             # (_ts,_seq) = re-delivered copies of the same event) exist
             # only under at-least-once re-delivery — almost never; the
             # common case then resolves in a SINGLE pass over the full
@@ -723,94 +749,25 @@ class LakeTable:
                                       winners_q.schema["_word"].dataType),
                     ]),
                 )
-                return base_cold.unionByName(
-                    _keep_winners(union_hot, winners, key))
-        # compaction-overdue overflow, or re-delivered ties
-        return base_cold.unionByName(_rank_winners(union_hot, key))
+                # a key untouched by any delta has no winner row and passes
+                # through; winners stream through map-side with zero extra
+                # exchange
+                j = union_hot.join(F.broadcast(winners),
+                                   F.col(key) == F.col("_wk"), "left")
+                return base_cold.unionByName(j.filter(
+                    F.col("_wk").isNull() | (F.col("_ord") == F.col("_word"))
+                ).drop("_wk", "_word", "_ord"))
+        # compaction-overdue overflow, or re-delivered ties: key-partitioned
+        # shuffle resolution — one exchange of the hot buckets' full rows,
+        # O(hot data), bounded executor memory, no driver broadcast, ties
+        # deduped by row_number. Correct at any size.
+        from pyspark.sql import Window
 
-    def _split_hot(
-        self,
-        manifest: dict,
-        buckets: list[int] | None,
-        file_schema: T.StructType | None = None,
-    ) -> tuple[DataFrame, DataFrame, DataFrame | None] | None:
-        """Shared front of both MOR resolution forms. None when no wanted
-        bucket carries pending deltas (a plain scan suffices); else
-        ``(base_cold, union_hot, winner_input)``: the scan of delta-free
-        buckets, the hot buckets' base ∪ delta rows with their packed
-        ``_ord``, and the column-pruned ``(key, _ts, _seq, _ord)`` rows
-        the winners are aggregated from — None when the pending delta
-        rows exceed RESOLVE_BROADCAST_MAX_DELTA_ROWS (shuffle
-        resolution)."""
-        deltas = manifest["deltas"]
-        files = manifest["files"]
-        if buckets is None:
-            wanted = sorted(set(files.keys()) | set(deltas.keys()), key=int)
-        else:
-            wanted = [str(b) for b in buckets]
-        hot = [b for b in wanted if deltas.get(b)]
-        if not hot:
-            return None
-        hot_set = set(hot)
-        cold = [b for b in wanted if b not in hot_set]
-
-        base_cold = self._read_files(manifest, cold, file_schema)
-        base_hot = self._read_files(manifest, hot, file_schema)
-        delta_df = self._read_files(manifest, hot, file_schema, which="deltas")
-        key = manifest["key"]
-        union_hot = base_hot.unionByName(delta_df).withColumn("_ord", _ord())
-
-        # pending delta volume from manifest-resident per-file row counts
-        # (recorded at commit time): pure dict lookups — no footer IO, no job
-        n_delta_rows = sum(
-            manifest["file_rows"][f] for b in hot for f in deltas[b])
-        if n_delta_rows > RESOLVE_BROADCAST_MAX_DELTA_ROWS:
-            return base_cold, union_hot, None
-
-        # Winner input restricted to delta-touched keys: a column-pruned
-        # pass (parquet reads key, _ts, _seq only) — O(delta keys), not
-        # O(table keys); base rows whose key never appears in a delta are
-        # already their own winners and skip resolution entirely.
-        pruned = delta_df.select(key, "_ts", "_seq")
-        if any(files.get(b) for b in hot):
-            # base rows only matter for keys a delta touches; semi-join
-            # keeps the winner relation O(delta keys) on a huge table.
-            # (With no base files — young pure-MOR table — deltas ARE the
-            # table; skip the extra distinct+semi-join entirely.)
-            dkeys = delta_df.select(F.col(key).alias("_dk")).distinct()
-            base_pruned = base_hot.select(key, "_ts", "_seq").join(
-                F.broadcast(dkeys), F.col(key) == F.col("_dk"), "left_semi")
-            pruned = pruned.unionByName(base_pruned)
-        return base_cold, union_hot, pruned.withColumn("_ord", _ord())
-
-    def _resolved_for_rewrite(
-        self, manifest: dict, buckets: list[int] | None
-    ) -> tuple[DataFrame, bool]:
-        """Resolution variant for compact()'s rewrite: semantics of
-        _read_resolved, but built as ONE pure plan — the winners relation
-        stays a broadcast *subplan* (materialized inside the rewrite job
-        itself), with no driver toPandas round-trip and no tie-probe
-        decision job. Tied re-delivered rows (equal (_ts,_seq)
-        byte-identical copies) may survive the winner filter; the caller
-        collapses them with a partition-local dropDuplicates(key) AFTER its
-        bucket-aligned exchange (HashPartitioning(key, n) satisfies the
-        clustering, so the dedup adds no shuffle). Returns
-        ``(df, needs_key_dedup)``; the compaction-overdue overflow case
-        takes the shuffle resolution, which leaves no ties."""
-        split = self._split_hot(manifest, buckets)
-        if split is None:
-            return self._read_files(manifest, buckets), False
-        base_cold, union_hot, winner_input = split
-        key = manifest["key"]
-        if winner_input is None:
-            return base_cold.unionByName(_rank_winners(union_hot, key)), False
-        winners = (
-            winner_input
-            .groupBy(F.col(key).alias("_wk"))
-            .agg(F.max("_ord").alias("_word"))
-        )
+        w = Window.partitionBy(key).orderBy(F.desc("_ord"))
         return base_cold.unionByName(
-            _keep_winners(union_hot, winners, key)), True
+            union_hot.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_ord"))
 
     def read(self, version: int | None = None, *, with_system_cols: bool = False) -> DataFrame:
         """Current (or time-travel) state. Tombstones filtered out; pending
@@ -881,19 +838,19 @@ class LakeTable:
 
     # ----------------------------------------------------------------- write
     def _write_snapshot(
-        self, df: DataFrame, version: int, *, kind: str = "snap",
-        bloom_key: str | None = None,
-    ) -> dict[str, list[str]]:
+        self, df: DataFrame, version: int, key: str, *, kind: str = "snap",
+    ) -> tuple[dict[str, list[str]], dict[str, int], dict[str, list]]:
         """Write df (must carry _bucket) hive-partitioned by _bucket; return
-        per-bucket relative file lists.
+        ``(files, file_rows, file_key_bounds)``: per-bucket relative file
+        lists and the written files' stats (see _scan_new_file_stats).
 
-        ``bloom_key`` writes a parquet bloom filter for that column (MOR
-        delta files only — they are append-ordered, so their key min/max
-        bounds span the whole bucket and ``read_keys``'s bounds pruning
-        cannot skip them; the bloom lets the scan skip entire row groups
-        on pushed key-equality predicates instead of decoding them. Base
-        files are key-sorted by compaction, where bounds already prune,
-        so they skip the bloom's write+size cost)."""
+        ``kind="delta"`` (MOR delta files) also writes a parquet bloom
+        filter on ``key``: delta files are append-ordered, so their key
+        min/max bounds span the whole bucket and ``read_keys``'s bounds
+        pruning cannot skip them; the bloom lets the scan skip entire row
+        groups on pushed key-equality predicates instead of decoding them.
+        Base files are key-sorted by compaction, where bounds already
+        prune, so they skip the bloom's write+size cost."""
         # unique suffix: two writers deriving from the same parent would
         # otherwise race into the SAME dir (mode=overwrite clobbers the
         # winner's files before the loser's commit is even refused) — with
@@ -906,9 +863,9 @@ class LakeTable:
         out_dir = os.path.join(self.path, snap_rel)
         with _static_plan(self.spark):
             w = df.write.mode("overwrite").partitionBy("_bucket")
-            if bloom_key is not None:
+            if kind == "delta":
                 w = (
-                    w.option(f"parquet.bloom.filter.enabled#{bloom_key}", "true")
+                    w.option(f"parquet.bloom.filter.enabled#{key}", "true")
                     # adaptive sizing: parquet keeps candidate filters and
                     # persists the smallest that holds the file's actual
                     # key NDV — measured +3% delta bytes on the 70 B-body
@@ -934,7 +891,7 @@ class LakeTable:
                     for f in os.listdir(os.path.join(out_dir, d))
                     if f.endswith(".parquet")
                 )
-        return files
+        return (files, *self._scan_new_file_stats(files, key))
 
     def _scan_new_file_stats(
         self, files: dict[str, list[str]], key: str
@@ -1129,29 +1086,16 @@ class LakeTable:
         key = m["key"]
         new_schema = merge_schemas(T.StructType.fromJson(m["schema"]), df.schema)
         version = m["version"] + 1
-        typ = {f.name: f.dataType for f in new_schema.fields}
-        src_types = dict(zip(df.columns, (f.dataType for f in df.schema.fields)))
-        conformed = []
-        for c in new_schema.fieldNames():
-            if c not in src_types:
-                conformed.append(F.lit(None).cast(typ[c]).alias(c))
-            elif src_types[c] != typ[c]:
-                # e.g. an all-null column arriving as NullType/boolean from
-                # pandas inference — conform to the declared type
-                conformed.append(F.col(c).cast(typ[c]).alias(c))
-            else:
-                conformed.append(F.col(c))
-        full = df.select(  # one projection (see merge() note)
-            *conformed,
+        full = df.select(  # one projection (see _conformed_cols)
+            *_conformed_cols(df, new_schema),
             F.lit(-1).cast("long").alias("_seq"),
             (F.col("warc_ts") if "warc_ts" in df.columns
              else F.lit(None).cast("timestamp")).alias("_ts"),
             F.lit(False).alias("_deleted"),
             self.bucket_expr(F.col(key), m["n_buckets"]).alias("_bucket"),
         )
-        files = self._write_snapshot(
-            full.repartition(m["n_buckets"], F.col(key)), version)
-        new_rows, new_bounds = self._scan_new_file_stats(files, key)
+        files, new_rows, new_bounds = self._write_snapshot(
+            full.repartition(m["n_buckets"], F.col(key)), version, key)
         version, _ = self._publish_snapshot(
             m, {"op": "overwrite"}, batch_id=batch_id, new_files=files,
             rewritten=None, new_rows=new_rows, new_bounds=new_bounds,
@@ -1234,25 +1178,8 @@ class LakeTable:
         payload_schema = T.StructType([updates.schema[c] for c in payload_cols])
         new_schema = merge_schemas(T.StructType.fromJson(m["schema"]), payload_schema)
         all_cols = new_schema.fieldNames()
-        typ = {f.name: f.dataType for f in new_schema.fields}
-
-        # ONE projection, not a withColumn chain: every stacked withColumn
-        # re-runs analysis over the growing plan — at micro-batch cadence
-        # the per-commit Catalyst time is a driver-side serial term that
-        # caps scaling (it does not shrink with executor count)
-        src_types = dict(zip(updates.columns,
-                             (f.dataType for f in updates.schema.fields)))
-        conformed = []
-        for c in all_cols:
-            if c not in src_types:
-                conformed.append(F.lit(None).cast(typ[c]).alias(c))
-            elif src_types[c] != typ[c]:
-                # e.g. an all-null (NullType) column in a delete-only batch
-                conformed.append(F.col(c).cast(typ[c]).alias(c))
-            else:
-                conformed.append(F.col(c))
         src = updates.select(
-            *conformed, "event_seq", "op",
+            *_conformed_cols(updates, new_schema), "event_seq", "op",
             self.bucket_expr(F.col(key), n_buckets).alias("_bucket"),
         )
 
@@ -1369,22 +1296,18 @@ class LakeTable:
                 applied & (F.unix_micros(F.col("_ts")) < F.lit(late_thr)),
                 1).otherwise(0)).alias("_late"),
         ).drop("_action")
-        if src_aligned:
-            # src arrived HashPartitioning(key, n_buckets) (prepare_batch's
-            # fused exchange); the planner co-partitions the target side to
-            # match, and a full-outer SMJ moves no rows — so the join
-            # output is already physically bucket-aligned (partition b ==
-            # bucket b, even though Catalyst reports full-outer output
-            # partitioning as unknown). Write it directly: zero further
-            # exchange — the whole COW commit carries payloads through
-            # exactly ONE shuffle (the target side's co-partitioning).
-            new_files = self._write_snapshot(out, version)
-        else:
-            new_files = self._write_snapshot(
-                out.repartition(n_buckets, F.col(key)), version)
-        # per-file stats of the just-written files, recorded in the manifest
-        # so reads/lineage never re-touch footers
-        new_rows, new_bounds = self._scan_new_file_stats(new_files, key)
+        # aligned src arrived HashPartitioning(key, n_buckets)
+        # (prepare_batch's fused exchange); the planner co-partitions the
+        # target side to match, and a full-outer SMJ moves no rows — so the
+        # join output is already physically bucket-aligned (partition b ==
+        # bucket b, even though Catalyst reports full-outer output
+        # partitioning as unknown). Write it directly: zero further
+        # exchange — the whole COW commit carries payloads through exactly
+        # ONE shuffle (the target side's co-partitioning).
+        if not src_aligned:
+            out = out.repartition(n_buckets, F.col(key))
+        new_files, new_rows, new_bounds = self._write_snapshot(
+            out, version, key)
 
         got = obs.get
         a = {k: int(v) for k, v in got.items() if v and not k.startswith("_")}
@@ -1465,9 +1388,8 @@ class LakeTable:
         # aligned src (prepare_batch fused exchange): the batch is already
         # partition b == bucket b — append delta files with NO exchange at
         # all (the O(batch) commit's only stage is scan->write)
-        new_files = self._write_snapshot(
-            out, version, kind="delta", bloom_key=m["key"],
-        )
+        new_files, new_rows, new_bounds = self._write_snapshot(
+            out, version, m["key"], kind="delta")
 
         def _same_spec(base: dict) -> None:
             # The delta files were written keyed by m's bucket ids, so if
@@ -1499,9 +1421,6 @@ class LakeTable:
                 batch_id=batch_id, rebase=_same_spec, pre_commit=pre_commit)
             return MergeResult(version, 0, 0, 0, 0, 0, noop=noop)
 
-        # per-file stats of the just-written delta files — recorded in the
-        # manifest so read-path delta sizing is dict lookups, never footer IO
-        new_rows, new_bounds = self._scan_new_file_stats(new_files, m["key"])
         got = obs.get  # filled by the completed write job — no new job
         n_upserts = int(got.get("upserts") or 0)
         n_deletes = int(got.get("deletes") or 0)
@@ -1573,12 +1492,12 @@ class LakeTable:
             ) from e
         fschema = self._file_schema(m_to)
         if m_from["n_buckets"] == m_to["n_buckets"]:
-            all_b = set(m_from.get("files", {})) | set(m_from.get("deltas", {})) \
-                | set(m_to.get("files", {})) | set(m_to.get("deltas", {}))
+            all_b = set(m_from["files"]) | set(m_from["deltas"]) \
+                | set(m_to["files"]) | set(m_to["deltas"])
             changed = sorted(
                 (b for b in all_b
-                 if m_from.get("files", {}).get(b, []) != m_to.get("files", {}).get(b, [])
-                 or m_from.get("deltas", {}).get(b, []) != m_to.get("deltas", {}).get(b, [])),
+                 if m_from["files"].get(b, []) != m_to["files"].get(b, [])
+                 or m_from["deltas"].get(b, []) != m_to["deltas"].get(b, [])),
                 key=int)
         else:
             changed = None  # rebucketed: no bucket correspondence
@@ -1672,8 +1591,8 @@ class LakeTable:
                 with open(os.path.join(self._meta_dir, fn)) as f:
                     mm = json.load(f)
                 out.append({"version": mm["version"], "parent": mm["parent"],
-                            "metrics": mm.get("metrics", {}),
-                            "watermark_seq": mm.get("watermark_seq", -1)})
+                            "metrics": mm["metrics"],
+                            "watermark_seq": mm["watermark_seq"]})
         return out
 
     def compact(self, *, drop_tombstones: bool = False,
@@ -1705,26 +1624,25 @@ class LakeTable:
             target = sorted((b for b, fl in m["deltas"].items() if fl), key=int)
             if not target:
                 return m["version"]  # nothing pending — no-op, no commit
-        # single-job rewrite: winners as a pure broadcast subplan, ties
-        # collapsed partition-locally after the aligned exchange — the
-        # whole compaction is one Spark job (no driver probe round-trip)
-        df, needs_dedup = self._resolved_for_rewrite(m, target)
+        df = self._read_resolved(m, target)
         df = df.withColumn("_bucket", self.bucket_expr(F.col(key), new_n))
         if drop_tombstones:
             df = df.filter(~F.col("_deleted"))
-        out = df.repartition(new_n, F.col(key))
-        if needs_dedup:
-            # HashPartitioning(key, new_n) satisfies the clustering —
-            # this dedup of re-delivered ties adds NO exchange
-            out = out.dropDuplicates([key])
         # key-sorted base files (Iceberg sort-order analog): a partition-
         # local, spill-safe sort on a rewrite that is happening anyway.
         # Tightens parquet row-group key stats so point lookups
         # (read_keys -> isin pushdown) prune ROW GROUPS inside multi-GB
-        # bucket files, not just whole files via file_key_bounds.
-        out = out.sortWithinPartitions(key)
-        new_files = self._write_snapshot(out, m["version"] + 1)
-        new_rows, new_bounds = self._scan_new_file_stats(new_files, key)
+        # bucket files, not just whole files via file_key_bounds. The sort
+        # leads with _bucket because the partitionBy("_bucket") write
+        # requires that ordering: a bare key sort does not satisfy it, so a
+        # planned write adds its own _bucket sort and the optimizer drops
+        # the key sort beneath it. Each partition holds one bucket
+        # (repartition(new_n, key) == bucket placement), so the _bucket
+        # prefix costs nothing.
+        out = (df.repartition(new_n, F.col(key))
+               .sortWithinPartitions("_bucket", key))
+        new_files, new_rows, new_bounds = self._write_snapshot(
+            out, m["version"] + 1, key)
 
         def _rebase_ok(base: dict) -> None:
             """A lost commit race against a live TAILER rebases (the
@@ -1753,7 +1671,7 @@ class LakeTable:
         return version
 
     def pending_delta_files(self) -> int:
-        return sum(len(v) for v in self.manifest().get("deltas", {}).values())
+        return sum(len(v) for v in self.manifest()["deltas"].values())
 
     def maybe_compact(self, *, max_delta_files: int = 64,
                       drop_tombstones: bool = False) -> int | None:
@@ -1800,7 +1718,7 @@ class LakeTable:
         def refs(manifest: dict) -> set[str]:
             out: set[str] = set()
             for which in ("files", "deltas"):
-                for fl in manifest.get(which, {}).values():
+                for fl in manifest[which].values():
                     out.update(fl)
             return out
 

@@ -241,9 +241,8 @@ def merge_into(
           for a in ("insert", "update", "update_t", "delete", "keep")],
     ).drop("_action")
 
-    new_files = table._write_snapshot(
-        out.repartition(n_buckets, F.col(key)), version)
-    new_rows, new_bounds = table._scan_new_file_stats(new_files, m["key"])
+    new_files, new_rows, new_bounds = table._write_snapshot(
+        out.repartition(n_buckets, F.col(key)), version, m["key"])
     got = obs.get
     src.unpersist()
     # a rewrite: a lost commit race raises ConcurrentWriteError (never

@@ -54,7 +54,6 @@ def tail_change_log(
     max_files_per_trigger: int | None = None,
     mode: str = "cow",
     dead_letter_dir: str | None = None,
-    auto_compact_delta_files: int | None = None,
     compactor=None,
 ):
     """Tail ``log_dir`` (parquet change-event files) into the lake table at
@@ -65,14 +64,11 @@ def tail_change_log(
     continuously running tailer (prod shape). ``max_files_per_trigger``
     bounds micro-batch size for steady incremental progress.
 
-    Compaction cadence, two shapes: ``auto_compact_delta_files=k`` runs
-    ``maybe_compact`` INLINE after each micro-batch (simple, but the next
-    micro-batch waits out the rewrite); a ``compactor``
-    (streaming.compactor.BackgroundCompactor) is only NOTIFIED here and
-    folds deltas on its own thread, overlapped with subsequent
-    micro-batches — safe by construction via the OCC rebase machinery,
-    and the production shape (Hudi async compaction analog). Passing
-    both uses the compactor.
+    Compaction: a ``compactor`` (streaming.compactor.BackgroundCompactor)
+    is only NOTIFIED after each micro-batch and folds deltas on its own
+    thread, overlapped with subsequent micro-batches — safe by
+    construction via the OCC rebase machinery (Hudi async compaction
+    analog).
     """
     if LakeTable.exists(table_path):
         table = LakeTable(spark, table_path)
@@ -133,8 +129,6 @@ def tail_change_log(
         )
         if compactor is not None:
             compactor.notify()  # non-blocking; folds on its own thread
-        elif auto_compact_delta_files is not None:
-            table.maybe_compact(max_delta_files=auto_compact_delta_files)
 
     writer = (
         events.writeStream.foreachBatch(_apply)
@@ -166,17 +160,21 @@ def stream_metrics(table: LakeTable) -> DataFrame:
     skipped/applied accounting, queryable instead of a text report)."""
     rows = []
     for h in table.history():
-        m = h.get("metrics", {})
+        m = h["metrics"]
         actions = m.get("actions", {})
         rows.append(
             {
                 "version": h["version"],
                 "op": m.get("op"),
                 "batch_id": m.get("batch_id"),
-                "watermark_seq": h.get("watermark_seq", -1),
-                "inserted": actions.get("insert", 0) + actions.get("revive", 0),
+                "watermark_seq": h["watermark_seq"],
+                # COW actions, plus the MOR appends (as MergeResult counts
+                # them: every upsert row inserted, every delete row deleted)
+                "inserted": actions.get("insert", 0) + actions.get("revive", 0)
+                + actions.get("append_upsert", 0),
                 "updated": actions.get("update", 0),
-                "deleted": actions.get("delete", 0) + actions.get("tombstone_new", 0),
+                "deleted": actions.get("delete", 0) + actions.get("tombstone_new", 0)
+                + actions.get("append_delete", 0),
                 "stale_skipped": actions.get("stale", 0),
                 "kept": actions.get("keep", 0),
                 "late_events": m.get("late_events", 0),

@@ -31,13 +31,17 @@ def test_spark_murmur3_matches_engine_hash(spark):
         assert _spark_murmur3(s.encode("utf-8")) == got[s], s
 
 
+def _events(spark):
+    return generate_change_events(spark, 4000, seed=7, n_domains=8,
+                                  pages_per_domain=32)
+
+
 @pytest.fixture()
 def mor_table(spark, tmp_path):
     """A MOR table with pending deltas (unresolved winners) AND several
     base files carrying recorded key bounds."""
     path = str(tmp_path / "pages")
-    ev = generate_change_events(spark, 4000, seed=7, n_domains=8,
-                                pages_per_domain=32)
+    ev = _events(spark)
     # two batches compacted (base files), then two more left as deltas
     replay(spark, path, ev.filter(F.col("event_seq") < 2000),
            n_batches=2, n_buckets=8, mode="mor")
@@ -110,24 +114,58 @@ def test_read_keys_sees_delta_winners_and_tombstones(spark, tmp_path):
     assert sys_state.count() == len(live)
 
 
-def test_compact_writes_key_sorted_files(spark, mor_table):
-    """compact() emits key-sorted base files (partition-local sort on the
-    rewrite that's happening anyway) so parquet row-group stats prune
-    inside files for point lookups."""
-    import pyarrow.parquet as pq
+@pytest.mark.parametrize(
+    "path", ["broadcast", "ties", "overflow", "full_cow", "rebucket"])
+def test_compact_writes_key_sorted_files(spark, tmp_path, request,
+                                         monkeypatch, path):
+    """compact() emits key-sorted base files, one row per key, on every
+    resolution path (partition-local sort on the rewrite that's happening
+    anyway) so parquet row-group stats prune inside files for point
+    lookups: broadcast winners; re-delivered ties; the shuffle overflow
+    fallback; a full rewrite of a delta-free COW table; a rebucket."""
     import os
 
-    t = mor_table
-    t.compact()
+    import pyarrow.parquet as pq
+
+    from epigraphdb_graph_spark.plans import lake as lake_mod
+    from epigraphdb_graph_spark.replay import apply_batch
+
+    if path == "full_cow":
+        replay(spark, str(tmp_path / "cow"), _events(spark), n_batches=2,
+               n_buckets=8, mode="cow")
+        t = LakeTable(spark, str(tmp_path / "cow"))
+        assert not any(t.manifest()["deltas"].values())
+        t.compact(full=True)
+    else:
+        t = request.getfixturevalue("mor_table")
+        if path == "ties":
+            # at-least-once re-delivery: the applied second half again,
+            # under a new batch id -> delta rows tied on (_ts, _seq)
+            apply_batch(t, _events(spark).filter(F.col("event_seq") >= 2000),
+                        batch_id="redelivered:000000000001", mode="mor")
+            raw = t._read_files(t.manifest(), which="deltas")
+            assert raw.groupBy("url", "_ts", "_seq").count() \
+                .filter("count > 1").count() > 0
+        if path == "overflow":
+            monkeypatch.setattr(lake_mod, "RESOLVE_BROADCAST_MAX_DELTA_ROWS",
+                                10)
+        expect = t.read().orderBy("url").collect()
+        if path == "rebucket":
+            t.compact(n_buckets=2 * t.manifest()["n_buckets"])
+        else:
+            t.compact()
+        # state unchanged by the sorted rewrite
+        assert t.read().orderBy("url").collect() == expect
     m = t.manifest()
+    assert not any(m["deltas"].values())
     checked = 0
     for fl in m["files"].values():
         for f in fl:
             col = pq.read_table(os.path.join(t.path, f), columns=["url"])["url"].to_pylist()
             assert col == sorted(col), f
+            assert len(set(col)) == len(col), f
             checked += 1
     assert checked > 0
-    # state unchanged by the sorted rewrite
     assert t.read_keys(t.read().select("url").first()["url"]).count() == 1
 
 

@@ -119,6 +119,22 @@ def test_tailer_mor_mode_matches_oracle(spark, tmp_path, events):
     _assert_equal(_read_state(spark, table_path), events.toPandas())
 
 
+def test_stream_metrics_counts_mor_appends(spark, tmp_path, events):
+    """MOR commits record ``append_upsert``/``append_delete`` actions;
+    stream_metrics must count them as inserted/deleted, exactly as the
+    commits' MergeResults do."""
+    from epigraphdb_graph_spark.replay import replay
+
+    path = str(tmp_path / "pages")
+    results = replay(spark, path, events, n_batches=3, n_buckets=8,
+                     mode="mor")
+    got = stream_metrics(LakeTable(spark, path)).agg(
+        F.sum("inserted"), F.sum("deleted")).first()
+    want = (sum(r.inserted for r in results), sum(r.deleted for r in results))
+    assert want[0] > 0 and want[1] > 0
+    assert tuple(got) == want
+
+
 def test_tailer_restart_same_checkpoint_is_noop(spark, tmp_path, events):
     log_dir = str(tmp_path / "log")
     table_path = str(tmp_path / "pages")
