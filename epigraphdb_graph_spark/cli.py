@@ -239,10 +239,10 @@ def cmd_lookup(args) -> int:
         "found": len(rows),
         "files_scanned": sum(
             len(fl) for sec in ("files", "deltas")
-            for fl in pruned.get(sec, {}).values()),
+            for fl in pruned[sec].values()),
         "files_total": sum(
             len(fl) for sec in ("files", "deltas")
-            for fl in m.get(sec, {}).values()),
+            for fl in m[sec].values()),
         "rows": rows,
     }))
     return 0

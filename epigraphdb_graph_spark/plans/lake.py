@@ -40,8 +40,10 @@ Scale design (what holds at 100 TB / 1000 executors):
   *events* no-ops — both levels are idempotent (north_rule).
 - **Delete tombstones are retained** (``_deleted`` flag, filtered from
   reads): a late stale update arriving after a delete must stay dead, and
-  a genuinely newer insert must revive the key. Tombstones older than the
-  lateness horizon can be dropped by ``compact()``.
+  a genuinely newer insert must revive the key. ``compact(drop_tombstones=
+  True)`` drops only tombstones older than the lateness horizon (event-time
+  watermark minus ``lateness_horizon_s``): a late event inside the horizon
+  still meets its tombstone and stays dead.
 
 Reference parity notes: the unique-key constraint the reference enforces at
 QC time (utils/qc.py:74-84) is structural here (MERGE key); the reference's
@@ -58,7 +60,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,21 +117,13 @@ def _rebase_backoff(attempt: int) -> None:
 
     _time.sleep(random.uniform(0.001, 0.02 * (2 ** min(attempt, 6))))
 
-# MOR read resolution: broadcast the (delta-key -> winning _ord) relation
-# only while pending delta rows stay under this bound; beyond it (compaction
-# badly overdue) fall back to a key-partitioned shuffle resolution. 1M keys
-# ≈ tens of MB broadcast — safe for any reasonable driver/executor memory.
-RESOLVE_BROADCAST_MAX_DELTA_ROWS = 1_000_000
-
 
 def _ord():
     """Packed (_ts, _seq) resolution order: unix_micros(_ts) * 10^18 +
     _seq. Lexicographic (ts, seq) order is preserved for any seq in
     (-10^18, 10^18) (covers 10^10-event logs and the base-load _seq = -1);
     max micros ~1.7e15 keeps the product < 10^34 (decimal cap is 10^38). A
-    single packed decimal keeps the winner agg a HASH agg (max over a
-    struct would fall back to SortAggregate — struct buffers aren't
-    mutable)."""
+    single packed decimal is the one sort key of the resolution window."""
     return (
         F.unix_micros(F.col("_ts")).cast("decimal(38,0)")
         * F.lit(1_000_000_000_000_000_000)
@@ -222,8 +216,8 @@ class CommitInFlightError(ConcurrentWriteError):
 @contextmanager
 def _static_plan(spark):
     """Scope-disable AQE for an engine write action. The engine's write
-    plans are fully determined — explicit bucket repartition counts,
-    explicit broadcast hints, bounded winner relations — so AQE's
+    plans are fully determined — explicit bucket repartition counts on
+    the table key, one bucket-aligned resolution exchange — so AQE's
     re-planning at every exchange buys nothing and costs a scheduler
     barrier per stage: measured ~20% of an 8-core micro-batch MOR commit.
     User-facing reads keep AQE (skew-join handling, coalescing) — only
@@ -653,27 +647,26 @@ class LakeTable:
         max (_ts, _seq) across base+delta rows, exactly the same total order
         MERGE uses, so COW and MOR histories converge to identical states.
 
-        Scale shape (what survives 10^9+ keys):
+        One lazy plan, no Spark action while it is built:
 
         - **Delta-bucket locality**: only buckets that actually carry
-          pending deltas enter resolution at all; base files of untouched
-          buckets stream through scan-only (zero resolution cost). This is
-          Hudi/Iceberg-v2 file-group merging — merge cost follows *pending
-          deltas*, never table size.
-        - **Delta-key-bounded winners**: base files hold exactly one row
-          per key (every COW/compact rewrite guarantees it), so resolution
-          is only ever needed for keys that appear in a delta. The winners
-          relation is O(pending delta keys) — bounded by the compaction
-          cadence (``maybe_compact``), NOT by the table's key count.
-          It is collected to the driver and broadcast when small (the
-          common case, steady-state tailing) and falls back to a key-partitioned shuffle resolution
-          when a neglected table has accumulated too many delta rows
-          (correct at any size; just pays the shuffle).
-        - **Exactly one row per key**: re-delivered events (at-least-once
-          sources, fresh-checkpoint log re-reads) append byte-identical
-          delta rows with equal (_ts, _seq); resolution collapses such
-          ties with a per-key pick, so MOR reads stay idempotent under
-          re-delivery just like COW's per-row stale guard.
+          pending deltas enter resolution; cold buckets' base files stream
+          through scan-only. This is Hudi/Iceberg-v2 file-group merging —
+          merge cost follows *pending deltas*, never table size.
+        - **Bucket-aligned exchange**: the hot buckets' base ∪ delta rows
+          are repartitioned at ``n_buckets`` on the key — the table's own
+          file layout — and ``row_number`` over ``(_ts, _seq)`` descending
+          keeps one row per key. Re-delivered events (equal
+          ``(_ts, _seq)``, byte-identical rows) collapse to one, so MOR
+          reads stay idempotent under re-delivery. Because the exchange
+          equals bucket placement, compaction's and COW targets'
+          ``repartition(n_buckets, key)`` reuse it instead of adding one.
+        - **Only key predicates pass the Window**: a filter on the key
+          (``read_keys``' ``isin``) is pushed below it into both scans —
+          a key's rows all survive it, so resolution per key is unchanged.
+          Any other predicate, ``~_deleted`` included, must stay above: a
+          newer tombstone filtered out first would let an older live row
+          win.
 
         Every reader and rewriter resolves through here: ``read``,
         ``read_keys``, ``changes``, COW merge targets, ``merge_into`` and
@@ -688,86 +681,22 @@ class LakeTable:
         hot = [b for b in wanted if deltas.get(b)]
         if not hot:
             return self._read_files(manifest, buckets, file_schema)
-        hot_set = set(hot)
-        cold = [b for b in wanted if b not in hot_set]
-
-        base_cold = self._read_files(manifest, cold, file_schema)
-        base_hot = self._read_files(manifest, hot, file_schema)
-        delta_df = self._read_files(manifest, hot, file_schema, which="deltas")
         key = manifest["key"]
-        union_hot = base_hot.unionByName(delta_df).withColumn("_ord", _ord())
-
-        # pending delta volume from manifest-resident per-file row counts
-        # (recorded at commit time): pure dict lookups — no footer IO, no job
-        n_delta_rows = sum(
-            manifest["file_rows"][f] for b in hot for f in deltas[b])
-        if n_delta_rows <= RESOLVE_BROADCAST_MAX_DELTA_ROWS:
-            # Winner input restricted to delta-touched keys: a column-pruned
-            # pass (parquet reads key, _ts, _seq only) — O(delta keys), not
-            # O(table keys); base rows whose key never appears in a delta
-            # are already their own winners and skip resolution entirely.
-            pruned = delta_df.select(key, "_ts", "_seq")
-            if any(files.get(b) for b in hot):
-                # base rows only matter for keys a delta touches; semi-join
-                # keeps the winner relation O(delta keys) on a huge table.
-                # (With no base files — young pure-MOR table — deltas ARE
-                # the table; skip the extra distinct+semi-join entirely.)
-                dkeys = delta_df.select(F.col(key).alias("_dk")).distinct()
-                base_pruned = base_hot.select(key, "_ts", "_seq").join(
-                    F.broadcast(dkeys), F.col(key) == F.col("_dk"),
-                    "left_semi")
-                pruned = pruned.unionByName(base_pruned)
-            # Two chained hash aggs. The second agg ALSO counts rows tied at
-            # the winning _ord (max_by of the per-(key,_ord) count) — see
-            # the tie probe below.
-            winners_q = (
-                pruned.withColumn("_ord", _ord())
-                .groupBy(key, "_ord")
-                .agg(F.count("*").alias("_cnt"))
-                .groupBy(F.col(key).alias("_wk"))
-                .agg(F.max("_ord").alias("_word"),
-                     F.max_by("_cnt", "_ord").alias("_wties"))
-            )
-            # ONE job: pull the winners to the driver (O(delta keys) x 3
-            # cols — the same rows a broadcast would ship there anyway;
-            # Arrow columnar both ways, no per-row Python) and derive the
-            # tie answer locally: a single driver-synchronous step, the
-            # serial time executor count cannot shrink and that caps N->4N
-            # scaling at micro-batch cadence. Ties (equal
-            # (_ts,_seq) = re-delivered copies of the same event) exist
-            # only under at-least-once re-delivery — almost never; the
-            # common case then resolves in a SINGLE pass over the full
-            # rows (broadcast join + filter, no second branch, no dedup
-            # shuffle).
-            winners_pdf = winners_q.toPandas()
-            if not (winners_pdf["_wties"] > 1).any():
-                winners = self.spark.createDataFrame(
-                    winners_pdf[["_wk", "_word"]],
-                    T.StructType([
-                        T.StructField("_wk", winners_q.schema["_wk"].dataType),
-                        T.StructField("_word",
-                                      winners_q.schema["_word"].dataType),
-                    ]),
-                )
-                # a key untouched by any delta has no winner row and passes
-                # through; winners stream through map-side with zero extra
-                # exchange
-                j = union_hot.join(F.broadcast(winners),
-                                   F.col(key) == F.col("_wk"), "left")
-                return base_cold.unionByName(j.filter(
-                    F.col("_wk").isNull() | (F.col("_ord") == F.col("_word"))
-                ).drop("_wk", "_word", "_ord"))
-        # compaction-overdue overflow, or re-delivered ties: key-partitioned
-        # shuffle resolution — one exchange of the hot buckets' full rows,
-        # O(hot data), bounded executor memory, no driver broadcast, ties
-        # deduped by row_number. Correct at any size.
-        from pyspark.sql import Window
-
         w = Window.partitionBy(key).orderBy(F.desc("_ord"))
-        return base_cold.unionByName(
-            union_hot.withColumn("_rn", F.row_number().over(w))
+        resolved = (
+            self._read_files(manifest, hot, file_schema)
+            .unionByName(self._read_files(manifest, hot, file_schema,
+                                          which="deltas"))
+            .repartition(manifest["n_buckets"], F.col(key))
+            .withColumn("_ord", _ord())
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_ord"))
+        cold = [b for b in wanted if not deltas.get(b) and files.get(b)]
+        if not cold:
+            return resolved
+        return self._read_files(manifest, cold, file_schema).unionByName(
+            resolved)
 
     def read(self, version: int | None = None, *, with_system_cols: bool = False) -> DataFrame:
         """Current (or time-travel) state. Tombstones filtered out; pending
@@ -1611,9 +1540,11 @@ class LakeTable:
         (partition-spec evolution — keys move buckets, so this is
         necessarily a full rewrite), after which every new commit uses the
         new spec; old snapshots stay readable (time travel keeps their
-        manifests). ``drop_tombstones`` removes tombstones from whatever
-        buckets this compaction rewrites (combine with ``full=True`` for a
-        table-wide sweep once the lateness horizon has passed)."""
+        manifests). ``drop_tombstones`` removes, from whatever buckets this
+        compaction rewrites, the tombstones older than the lateness horizon
+        (``_late_threshold_micros``); younger ones are kept so a late event
+        inside the horizon cannot resurrect its key. Combine with
+        ``full=True`` for a table-wide sweep."""
         m = self.manifest()
         key = m["key"]
         new_n = n_buckets or m["n_buckets"]
@@ -1627,7 +1558,8 @@ class LakeTable:
         df = self._read_resolved(m, target)
         df = df.withColumn("_bucket", self.bucket_expr(F.col(key), new_n))
         if drop_tombstones:
-            df = df.filter(~F.col("_deleted"))
+            df = df.filter(~(F.col("_deleted") & (
+                F.unix_micros("_ts") < F.lit(_late_threshold_micros(m)))))
         # key-sorted base files (Iceberg sort-order analog): a partition-
         # local, spill-safe sort on a rewrite that is happening anyway.
         # Tightens parquet row-group key stats so point lookups

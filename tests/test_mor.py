@@ -153,6 +153,52 @@ def test_mor_stale_events_lose_at_read(spark, tmp_path):
         [(4, "delete", "u", pd.Timestamp("2024-01-06"), None)], columns=cols))
     apply_batch(table, dele, batch_id="b3", mode="mor")
     assert table.read().count() == 0
-    # compact with drop_tombstones empties the table files
+    # the tombstone set the watermark, so it is inside the lateness
+    # horizon: compact(drop_tombstones=True) keeps it and the key stays dead
     table.compact(drop_tombstones=True)
     assert table.read().count() == 0
+
+
+def _tombstone_table(spark, path, properties=None):
+    """MOR table where key ``u`` is inserted at 10:00 and deleted at
+    10:30, both as pending deltas. Returns (table, event builder)."""
+    from epigraphdb_graph_spark.schema import PAGES_SCHEMA
+
+    cols = ["event_seq", "op", "url", "warc_ts", "html"]
+
+    def ev(rows):
+        return spark.createDataFrame(pd.DataFrame(rows, columns=cols))
+
+    table = LakeTable.create(spark, path, PAGES_SCHEMA, key="url",
+                             n_buckets=4, properties=properties)
+    apply_batch(table, ev([(1, "insert", "u", pd.Timestamp("2024-01-01 10:00"),
+                            b"<p>v1</p>")]), batch_id="b1", mode="mor")
+    apply_batch(table, ev([(2, "delete", "u", pd.Timestamp("2024-01-01 10:30"),
+                            None)]), batch_id="b2", mode="mor")
+    return table, ev
+
+
+def test_compact_keeps_tombstones_inside_lateness_horizon(spark, tmp_path):
+    """compact(drop_tombstones=True) must keep a tombstone younger than the
+    lateness horizon: a late update stamped before the delete (but inside
+    the default 1 h horizon) arriving after the compaction must still
+    lose to it, not resurrect the key."""
+    table, ev = _tombstone_table(spark, str(tmp_path / "t"))
+    table.compact(drop_tombstones=True)
+    apply_batch(table, ev([(3, "update", "u", pd.Timestamp("2024-01-01 10:15"),
+                            b"<p>late</p>")]), batch_id="b3", mode="mor")
+    assert table.read().count() == 0
+
+
+def test_compact_drops_tombstones_past_lateness_horizon(spark, tmp_path):
+    """Once the watermark moves past a tombstone by more than the horizon,
+    a full compact(drop_tombstones=True) removes it from the files."""
+    table, ev = _tombstone_table(spark, str(tmp_path / "t"),
+                                 properties={"lateness_horizon_s": 60})
+    apply_batch(table, ev([(3, "insert", "v", pd.Timestamp("2024-01-01 12:00"),
+                            b"<p>v</p>")]), batch_id="b3", mode="mor")
+    table.compact(drop_tombstones=True, full=True)
+    m = table.manifest()
+    assert not any(m["deltas"].values())
+    assert table._read_files(m).filter("_deleted").count() == 0
+    assert [r["url"] for r in table.read().collect()] == ["v"]

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from epigraphdb_graph_spark.plans.lake import LakeTable, _spark_murmur3
-from epigraphdb_graph_spark.replay import replay
+from epigraphdb_graph_spark.replay import apply_batch, replay
 from epigraphdb_graph_spark.sources.events import generate_change_events
 
 
@@ -90,45 +90,104 @@ def test_read_keys_prunes_files(spark, mor_table):
 
 def test_read_keys_sees_delta_winners_and_tombstones(spark, tmp_path):
     """A key whose latest event sits in an unresolved delta must resolve
-    through read_keys exactly as through read(); a tombstoned key must
-    come back empty."""
+    through read_keys exactly as through read(); a key whose live base row
+    is superseded by a newer delta tombstone must come back empty from
+    both (``~_deleted`` may not be filtered before the resolution)."""
+    import datetime as dt
+
     path = str(tmp_path / "t")
     ev = generate_change_events(spark, 3000, seed=11, n_domains=4,
                                 pages_per_domain=16)
-    replay(spark, path, ev, n_batches=3, n_buckets=4, mode="mor")
+    replay(spark, path, ev.filter(F.col("event_seq") < 2000), n_batches=2,
+           n_buckets=4, mode="mor")
     t = LakeTable(spark, path)
-    sys_state = t.read(with_system_cols=True)
+    t.compact()
+    victim = t.read().select("url").orderBy("url").first()["url"]
+    replay(spark, path, ev, n_batches=3, n_buckets=4, mode="mor")
+    newest = ev.agg(F.max("warc_ts")).first()[0] + dt.timedelta(days=1)
+    tomb = (ev.filter(F.col("url") == victim).limit(1)
+            .withColumn("op", F.lit("delete"))
+            .withColumn("event_seq", F.lit(10_000_000).cast("long"))
+            .withColumn("warc_ts", F.lit(newest)))
+    apply_batch(t, tomb, batch_id="tomb:000000000000", mode="mor")
+    # the victim's live base row and its newer tombstone are both on disk
+    m = t.manifest()
+    on_disk = F.col("url") == victim
+    assert t._read_files(m).filter(on_disk & ~F.col("_deleted")).count() == 1
+    assert t._read_files(m, which="deltas").filter(
+        on_disk & F.col("_deleted") & (F.col("_seq") == 10_000_000)
+    ).count() == 1
+
+    assert t.read_keys(victim).count() == 0
     live = {r["url"] for r in t.read().select("url").collect()}
-    # pick a tombstoned key if the generator produced one
-    all_keys = {
-        r["url"]
-        for r in t._read_resolved(t.manifest()).select("url").collect()
-    }
-    dead = sorted(all_keys - live)
-    if dead:
-        assert t.read_keys(dead[0]).count() == 0
+    assert victim not in live
     probe = sorted(live)[0]
     row = t.read_keys(probe).collect()
     expect = t.read().filter(F.col("url") == probe).collect()
     assert row == expect
-    assert sys_state.count() == len(live)
+    assert t.read(with_system_cols=True).count() == len(live)
+
+
+def test_resolution_plan_runs_no_job(spark, mor_table):
+    """Building the merge-on-read plans is lazy: neither ``read_keys`` nor
+    ``_read_resolved`` runs a Spark job before an action is called."""
+    t = mor_table
+    m = t.manifest()
+    key = t.read().select("url").first()["url"]
+    sc = spark.sparkContext
+    group = "resolution-plan-build"
+    sc.setJobGroup(group, "build merge-on-read plans")
+    try:
+        t.read_keys(key)
+        t._read_resolved(m)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_resolution_plan_shape(spark, mor_table):
+    """The resolution exchange is bucket-aligned, so a rewrite's own
+    ``repartition(n_buckets, key)`` reuses it (one exchange in all), and a
+    key predicate is pushed below the Window into the scans."""
+    t = mor_table
+    m = t.manifest()
+    hot = sorted((b for b, fl in m["deltas"].items() if fl), key=int)
+    assert hot
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    aqe = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        rewrite = t._read_resolved(m, hot).repartition(m["n_buckets"], "url")
+        assert plan(rewrite).count("Exchange hashpartitioning") == 1
+        key = t._read_files(m, which="deltas").select("url").first()["url"]
+        lookup = plan(t.read_keys(key))
+    finally:
+        spark.conf.set(aqe, old)
+    pruned = t._prune_manifest_for_keys(m, [key])
+    assert pruned["deltas"]
+    scans = [ln for ln in lookup.splitlines() if "FileScan parquet" in ln]
+    n_sections = sum(1 for sec in ("files", "deltas")
+                     if any(pruned[sec].values()))
+    assert len(scans) == n_sections
+    for ln in scans:
+        assert "EqualTo(url," in ln, ln
 
 
 @pytest.mark.parametrize(
-    "path", ["broadcast", "ties", "overflow", "full_cow", "rebucket"])
-def test_compact_writes_key_sorted_files(spark, tmp_path, request,
-                                         monkeypatch, path):
+    "path", ["deltas", "ties", "full_cow", "rebucket"])
+def test_compact_writes_key_sorted_files(spark, tmp_path, request, path):
     """compact() emits key-sorted base files, one row per key, on every
-    resolution path (partition-local sort on the rewrite that's happening
+    rewrite shape (partition-local sort on the rewrite that's happening
     anyway) so parquet row-group stats prune inside files for point
-    lookups: broadcast winners; re-delivered ties; the shuffle overflow
-    fallback; a full rewrite of a delta-free COW table; a rebucket."""
+    lookups: pending deltas; re-delivered ties; a full rewrite of a
+    delta-free COW table; a rebucket."""
     import os
 
     import pyarrow.parquet as pq
-
-    from epigraphdb_graph_spark.plans import lake as lake_mod
-    from epigraphdb_graph_spark.replay import apply_batch
 
     if path == "full_cow":
         replay(spark, str(tmp_path / "cow"), _events(spark), n_batches=2,
@@ -146,9 +205,6 @@ def test_compact_writes_key_sorted_files(spark, tmp_path, request,
             raw = t._read_files(t.manifest(), which="deltas")
             assert raw.groupBy("url", "_ts", "_seq").count() \
                 .filter("count > 1").count() > 0
-        if path == "overflow":
-            monkeypatch.setattr(lake_mod, "RESOLVE_BROADCAST_MAX_DELTA_ROWS",
-                                10)
         expect = t.read().orderBy("url").collect()
         if path == "rebucket":
             t.compact(n_buckets=2 * t.manifest()["n_buckets"])
