@@ -1088,11 +1088,13 @@ class LakeTable:
             states because resolution uses the same (_ts, _seq) total
             order.
 
-        ``src_aligned``: ``updates`` already sits in bucket layout
-        (prepare_batch's fused ``repartition(n_buckets, key)``) — the COW
-        join reuses that exchange and the MOR delta write needs none;
-        otherwise merge exchanges the batch into bucket layout itself (one
-        delta file per touched bucket).
+        ``src_aligned``: each bucket of ``updates`` already lies inside one
+        partition (prepare_batch's ``repartition(n_buckets, key)``, kept
+        at n_buckets partitions by the COW form and coalesced to the core
+        count by the MOR form). The COW join then runs at n_buckets, and
+        the MOR delta write needs no exchange: each task writes one file
+        per bucket it holds. Otherwise merge exchanges the batch into
+        bucket layout itself (one delta file per touched bucket).
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
@@ -1153,13 +1155,13 @@ class LakeTable:
         )
         if src_aligned:
             # explicitly co-partition the target at n_buckets so the MERGE
-            # join reuses src's fused exchange verbatim: without this,
-            # EnsureRequirements normalizes BOTH sides to
-            # spark.sql.shuffle.partitions whenever that differs from
-            # n_buckets — re-shuffling the already-aligned src payloads.
-            # With it, the whole COW commit is one exchange per side and
-            # the join output stays physically bucket-aligned for the
-            # exchange-free write below.
+            # join runs at n_buckets: without this, EnsureRequirements
+            # normalizes BOTH sides to spark.sql.shuffle.partitions
+            # whenever that differs from n_buckets. With it, the write plan
+            # is one exchange per side (src's prepare exchange is hidden
+            # from the planner by lww_dedup_agg's struct projection, so src
+            # is exchanged once more here) and the join output stays
+            # physically bucket-aligned for the exchange-free write below.
             target = target.repartition(n_buckets, F.col(key))
 
         s_cols = F.struct(
@@ -1225,14 +1227,11 @@ class LakeTable:
                 applied & (F.unix_micros(F.col("_ts")) < F.lit(late_thr)),
                 1).otherwise(0)).alias("_late"),
         ).drop("_action")
-        # aligned src arrived HashPartitioning(key, n_buckets)
-        # (prepare_batch's fused exchange); the planner co-partitions the
-        # target side to match, and a full-outer SMJ moves no rows — so the
-        # join output is already physically bucket-aligned (partition b ==
-        # bucket b, even though Catalyst reports full-outer output
-        # partitioning as unknown). Write it directly: zero further
-        # exchange — the whole COW commit carries payloads through exactly
-        # ONE shuffle (the target side's co-partitioning).
+        # aligned: both join sides are HashPartitioning(key, n_buckets) and
+        # a full-outer SMJ moves no rows — so the join output is already
+        # physically bucket-aligned (partition b == bucket b, even though
+        # Catalyst reports full-outer output partitioning as unknown).
+        # Write it directly, with no further exchange.
         if not src_aligned:
             out = out.repartition(n_buckets, F.col(key))
         new_files, new_rows, new_bounds = self._write_snapshot(
@@ -1314,9 +1313,9 @@ class LakeTable:
         )
         if not src_aligned:
             out = out.repartition(m["n_buckets"], F.col(m["key"]))
-        # aligned src (prepare_batch fused exchange): the batch is already
-        # partition b == bucket b — append delta files with NO exchange at
-        # all (the O(batch) commit's only stage is scan->write)
+        # aligned src (prepare_batch's exchange): each bucket lies inside
+        # one partition — append delta files with NO further exchange (the
+        # O(batch) commit's only exchange is prepare_batch's)
         new_files, new_rows, new_bounds = self._write_snapshot(
             out, version, m["key"], kind="delta")
 

@@ -29,38 +29,56 @@ from .plans.lake import LakeTable, MergeResult
 from .schema import PAGES_SCHEMA
 
 
-def prepare_batch(events: DataFrame, *, dedup: bool = True,
+def prepare_batch(events: DataFrame, *, form: str = "aligned",
                   bucket_into: int | None = None,
                   key: str = "url") -> DataFrame:
-    """Prepare a raw change-event batch for ``LakeTable.merge``: per-key
-    LWW winner selection, then html→text extraction on winners only.
+    """Prepare a raw change-event batch for ``LakeTable.merge``, in one of
+    three forms.
 
     ``bucket_into=n`` (apply_batch sets it to the table's n_buckets)
-    fuses the table's bucket layout into this preparation: the raw batch
-    is exchanged once with ``repartition(n, key)``, which places every
-    row in partition == bucket (see LakeTable.create), so the downstream
-    MERGE join / delta write needs no further exchange. ``lww_dedup_agg``
-    then runs partition-local (HashPartitioning(key, n) already clusters
-    each key) with its map-side partial combine, and extraction runs
-    after it, so superseded events never reach the Python UDF. Payloads
-    cross one exchange, no winner set is collected to the driver (so any
-    batch size works), and the result has exactly one row per key — the
-    COW MERGE contract.
+    exchanges the raw batch once with ``repartition(n, key)``, which
+    places every row of bucket b in partition b (see LakeTable.create).
+    Without it the batch keeps its own partitioning.
 
-    ``dedup=False`` (MOR append-all, chosen by choose_mor_dedup for
-    effectively append-only batches): no winner selection — extract every
-    event, then exchange; MOR read-resolution collapses superseded rows
-    and re-delivered ties."""
-    if not dedup:
+    - ``"aligned"`` (COW): exchange -> ``lww_dedup_agg`` -> extraction.
+      The dedup runs partition-local (HashPartitioning(key, n) already
+      clusters each key) with its map-side partial combine, and
+      extraction runs after it, so superseded events never reach the
+      Python UDF. The result keeps n partitions, bucket b in partition
+      b, and has exactly one row per key — the COW MERGE contract.
+    - ``"narrow"`` (MOR): the same exchange and dedup, then
+      ``coalesce(min(n, defaultParallelism))`` before extraction, so the
+      Python stage runs one task per core rather than one per bucket.
+      ``coalesce`` merges whole partitions, so each bucket still lies
+      inside one partition and the delta write gives one file per
+      touched bucket with no further exchange. It never narrows below
+      the core count: extraction of KB-scale pages is real CPU work.
+    - ``"append"`` (MOR append-all, chosen by choose_mor_dedup for
+      effectively append-only batches): no winner selection — extract
+      every event on the scan side, then exchange; MOR read-resolution
+      collapses superseded rows and re-delivered ties."""
+    if form == "append":
         events = events.withColumn("text", extract_text_udf(F.col("html")))
         if bucket_into is not None:
             events = events.repartition(bucket_into, F.col(key))
         return events
+    if form not in ("aligned", "narrow"):
+        raise ValueError(f"unknown prepare form {form!r}")
     if bucket_into is not None:
         events = events.repartition(bucket_into, F.col(key))
     events = lww_dedup_agg(events, key=key, ts_col="warc_ts",
                            seq_col="event_seq")
+    if form == "narrow" and bucket_into is not None:
+        width = _python_width(events.sparkSession, bucket_into)
+        if width < bucket_into:
+            events = events.coalesce(width)
     return events.withColumn("text", extract_text_udf(F.col("html")))
+
+
+def _python_width(spark: SparkSession, n_buckets: int) -> int:
+    """Task count of the narrow form's Python stage for an ``n_buckets``
+    table: one task per core, or per bucket when there are fewer."""
+    return min(n_buckets, spark.sparkContext.defaultParallelism)
 
 
 #: auto MOR policy threshold: distinct(key)/rows above this means the
@@ -125,12 +143,15 @@ def apply_batch(
     duration so the quarantine's side jobs and the merge share one
     source pass.
 
-    Dedup policy: COW always selects winners (the MERGE join needs exactly
-    one source row per key). MOR asks choose_mor_dedup with ``stats`` —
-    the caller's ``(rows, distinct keys)`` for this batch (replay's
-    whole-log bounds pass, or the tailer's previous micro-batch) — and
-    with ``stats=None`` assumes a supersede-bearing batch, which needs no
-    stats job.
+    Prepare form (see prepare_batch): COW takes the ``"aligned"`` form
+    (the MERGE join needs exactly one source row per key, bucket-aligned).
+    MOR asks choose_mor_dedup with ``stats`` — the caller's ``(rows,
+    distinct keys)`` for this batch (replay's whole-log bounds pass, or
+    the tailer's previous micro-batch) — between ``"narrow"`` and
+    ``"append"``; with ``stats=None`` it assumes a supersede-bearing
+    batch (``"narrow"``), which needs no stats job. A narrow commit
+    records its Python stage's task count, known at plan time, as
+    ``prepare_partitions`` in its metrics.
 
     ``deferred_watermark`` and ``pre_commit`` pass through to
     ``LakeTable.merge``.
@@ -156,15 +177,22 @@ def apply_batch(
         events, counts = quarantine(cached, dead_letter_dir,
                                     batch_tag=batch_id)
         extra = {"quarantined": counts}
-    dedup = (mode == "cow" or stats is None
-             or choose_mor_dedup(events, stats=stats) == "agg")
+    if mode == "cow":
+        form = "aligned"
+    elif stats is None or choose_mor_dedup(events, stats=stats) == "agg":
+        form = "narrow"
+    else:
+        form = "append"
     last_err: ConcurrentWriteError | None = None
     try:
         for _ in range(3):
             m = table.manifest()
+            if form == "narrow":
+                extra = {**(extra or {}), "prepare_partitions":
+                         _python_width(table.spark, m["n_buckets"])}
             try:
                 return table.merge(
-                    prepare_batch(events, dedup=dedup, key=m["key"],
+                    prepare_batch(events, form=form, key=m["key"],
                                   bucket_into=m["n_buckets"]),
                     batch_id=batch_id, watermark_seq=watermark_seq,
                     deferred_watermark=deferred_watermark, mode=mode,

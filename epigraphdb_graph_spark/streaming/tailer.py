@@ -178,11 +178,13 @@ def stream_metrics(table: LakeTable) -> DataFrame:
                 "stale_skipped": actions.get("stale", 0),
                 "kept": actions.get("keep", 0),
                 "late_events": m.get("late_events", 0),
+                # Python-stage tasks of a narrow MOR commit (else null)
+                "prepare_partitions": m.get("prepare_partitions"),
             }
         )
     return table.spark.createDataFrame(
         rows,
         "version int, op string, batch_id string, watermark_seq long, "
         "inserted long, updated long, deleted long, stale_skipped long, "
-        "kept long, late_events long",
+        "kept long, late_events long, prepare_partitions int",
     )

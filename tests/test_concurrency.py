@@ -237,7 +237,7 @@ def _prep(spark, seq, url):
     output: key/ts/payload + event_seq + op + extracted text)."""
     from epigraphdb_graph_spark.replay import prepare_batch
 
-    return prepare_batch(_ev(spark, seq, url=url), dedup=True)
+    return prepare_batch(_ev(spark, seq, url=url), form="aligned")
 
 
 def test_cow_merge_from_stale_snapshot_refused(spark, tmp_path):

@@ -69,7 +69,7 @@ def _batch_pool(spark):
             "event_seq long, op string, url string, warc_ts timestamp, "
             "html binary" + (", lang string" if b >= 4 else ""),
         )
-        pool.append((f"fuzz:{b:04d}", prepare_batch(df, dedup=True),
+        pool.append((f"fuzz:{b:04d}", prepare_batch(df, form="aligned"),
                      int(pdf["event_seq"].max())))
     return pool, raw
 

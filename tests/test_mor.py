@@ -46,27 +46,87 @@ def _assert_equal(got: pd.DataFrame, want: pd.DataFrame):
     assert list(got["text"]) == list(want["text"])
 
 
+# 32 buckets exceed the 8-core test session, so the narrow prepare form's
+# coalesce is live there (at 8 buckets it is a no-op)
 def test_mor_replay_matches_oracle(spark, tmp_path, events, oracle_state):
-    path = str(tmp_path / "mor")
-    results = replay(spark, path, events, n_batches=5, n_buckets=8, mode="mor")
-    assert all(not r.noop for r in results)
-    table = LakeTable(spark, path)
-    assert any(table.manifest()["deltas"].values())  # deltas pending
-    _assert_equal(_state(spark, path), oracle_state)
+    for n_buckets in (8, 32):
+        path = str(tmp_path / f"mor{n_buckets}")
+        results = replay(spark, path, events, n_batches=5,
+                         n_buckets=n_buckets, mode="mor")
+        assert all(not r.noop for r in results)
+        table = LakeTable(spark, path)
+        assert any(table.manifest()["deltas"].values())  # deltas pending
+        _assert_equal(_state(spark, path), oracle_state)
 
 
 def test_mor_compact_preserves_state(spark, tmp_path, events, oracle_state):
-    path = str(tmp_path / "mor_compact")
-    replay(spark, path, events, n_batches=5, n_buckets=8, mode="mor",
-           compact_every=2)
-    table = LakeTable(spark, path)
-    # final batch (5th) left uncompacted deltas; compact the rest
-    table.compact()
+    for n_buckets in (8, 32):
+        path = str(tmp_path / f"mor_compact{n_buckets}")
+        replay(spark, path, events, n_batches=5, n_buckets=n_buckets,
+               mode="mor", compact_every=2)
+        table = LakeTable(spark, path)
+        # final batch (5th) left uncompacted deltas; compact the rest
+        table.compact()
+        m = table.manifest()
+        assert not any(m["deltas"].values())
+        _assert_equal(_state(spark, path), oracle_state)
+        ops = [h["metrics"].get("op") for h in table.history()]
+        assert ops.count("compact") >= 2
+
+
+def test_mor_commit_runs_python_stage_at_core_count(spark, tmp_path, events):
+    """Above the core count, a MOR commit's post-scan stages (dedup,
+    extraction, delta write) run one task per core, not one per bucket —
+    yet every touched bucket still gets exactly one delta file holding
+    only its own keys, and the commit records the narrowed width."""
+    from epigraphdb_graph_spark.schema import PAGES_SCHEMA
+    from epigraphdb_graph_spark.streaming import stream_metrics
+
+    n_buckets = 32
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    assert n_buckets > cores
+    schema = type(PAGES_SCHEMA)(
+        [f for f in PAGES_SCHEMA.fields if f.name in events.columns])
+    table = LakeTable.create(spark, str(tmp_path / "narrow"), schema,
+                             key="url", n_buckets=n_buckets)
+    group = "test-narrow-mor-commit"
+    sc.setJobGroup(group, "one MOR commit")
+    try:
+        apply_batch(table, events, batch_id="narrow:000000000001",
+                    watermark_seq=N_EVENTS - 1, mode="mor")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    assert jobs
+    for j in jobs:
+        # a job's first stage is the scan (the exchange's map side)
+        for sid in sorted(tracker.getJobInfo(j).stageIds)[1:]:
+            st = tracker.getStageInfo(sid)
+            assert st is None or st.numTasks <= cores, (j, sid, st.numTasks)
+
     m = table.manifest()
-    assert not any(m["deltas"].values())
-    _assert_equal(_state(spark, path), oracle_state)
-    ops = [h["metrics"].get("op") for h in table.history()]
-    assert ops.count("compact") >= 2
+    bucket = table.bucket_expr(F.col("url"), n_buckets)
+    touched = {str(r[0]) for r in events.select(bucket).distinct().collect()}
+    deltas = {b: fl for b, fl in m["deltas"].items() if fl}
+    assert set(deltas) == touched
+    assert all(len(fl) == 1 for fl in deltas.values())
+    bucket_of = {fl[0]: int(b) for b, fl in deltas.items()}
+    rows = (
+        spark.read.parquet(*[f"{table.path}/{f}" for f in bucket_of])
+        .select(F.input_file_name().alias("f"), bucket.alias("b"))
+        .distinct().collect()
+    )
+    assert len(rows) == len(bucket_of)  # one bucket per file
+    for r in rows:
+        f = next(f for f in bucket_of if r["f"].endswith(f))
+        assert r["b"] == bucket_of[f], r
+
+    assert m["metrics"]["prepare_partitions"] == cores
+    got = stream_metrics(table).filter("op = 'merge'") \
+        .select("prepare_partitions").collect()
+    assert [r[0] for r in got] == [cores]
 
 
 def test_mor_then_cow_folds_deltas(spark, tmp_path, events, oracle_state):

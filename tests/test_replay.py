@@ -172,3 +172,55 @@ def test_time_travel(spark, tmp_path, events):
     # version 1 only saw the first half of the log
     m1 = table.manifest(1)
     assert m1["watermark_seq"] < N_EVENTS - 1
+
+
+def test_cow_commit_keeps_aligned_shape(spark, tmp_path, events, monkeypatch):
+    """COW is never narrowed: its prepared batch keeps n_buckets
+    partitions, and a commit's write plan (AQE off, as the engine writes)
+    has exactly one bucket exchange on each side of the MERGE join. The
+    batch's own prepare exchange sits inside the cached relation, which
+    an earlier job of the commit materialises."""
+    import re
+
+    from epigraphdb_graph_spark.plans.lake import LakeTable
+    from epigraphdb_graph_spark.replay import apply_batch, prepare_batch
+
+    n_buckets = 32
+    assert n_buckets > spark.sparkContext.defaultParallelism
+    plans = []
+    write = LakeTable._write_snapshot
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, *args, **kwargs)
+
+    aqe = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        prepared = prepare_batch(events, form="aligned", bucket_into=n_buckets)
+        assert prepared.rdd.getNumPartitions() == n_buckets
+        path = str(tmp_path / "cow")
+        replay(spark, path, events.filter(F.col("event_seq") < N_EVENTS // 2),
+               n_buckets=n_buckets)
+        monkeypatch.setattr(LakeTable, "_write_snapshot", spy)
+        apply_batch(LakeTable(spark, path),
+                    events.filter(F.col("event_seq") >= N_EVENTS // 2),
+                    batch_id="cow:000000000001", mode="cow")
+    finally:
+        spark.conf.set(aqe, old)
+    assert len(plans) == 1
+    assert "Coalesce" not in plans[0]
+    lines = plans[0].splitlines()
+    j = next(i for i, ln in enumerate(lines) if "SortMergeJoin" in ln)
+    col = lines[j].index("+- ") + 3  # the join's children start here
+    starts = [i for i in range(j + 1, len(lines))
+              if lines[i][col:col + 3] in (":- ", "+- ")]
+    assert len(starts) == 2, plans[0]
+    exchange = re.compile(rf"Exchange hashpartitioning\(url#\d+, {n_buckets}\)")
+    for lo, hi in zip(starts, starts[1:] + [len(lines)]):
+        side = lines[lo:hi]
+        cached = [i for i, ln in enumerate(side) if "InMemoryRelation" in ln]
+        side = side[:cached[0]] if cached else side
+        assert sum(bool(exchange.search(ln)) for ln in side) == 1, \
+            "\n".join(side)

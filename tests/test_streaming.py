@@ -105,18 +105,24 @@ def test_tailer_exactly_once_and_resume(spark, tmp_path, events):
 
 def test_tailer_mor_mode_matches_oracle(spark, tmp_path, events):
     """Streaming tailer with MOR commits: state after drain + compact
-    equals the oracle (dedup is deferred to resolution in this mode)."""
-    log_dir = str(tmp_path / "log")
-    table_path = str(tmp_path / "pages")
-    events.repartition(2).write.mode("overwrite").parquet(log_dir)
-    q = tail_change_log(spark, log_dir, table_path, str(tmp_path / "ckpt"),
-                        n_buckets=8, mode="mor")
-    q.awaitTermination(120)
-    table = LakeTable(spark, table_path)
-    assert any(table.manifest()["deltas"].values())
-    _assert_equal(_read_state(spark, table_path), events.toPandas())
-    table.compact()
-    _assert_equal(_read_state(spark, table_path), events.toPandas())
+    equals the oracle (dedup is deferred to resolution in this mode) —
+    also at 32 buckets on the 8-core test session, where the narrow
+    prepare form coalesces the Python stage to the core count."""
+    events.repartition(2).write.mode("overwrite").parquet(
+        str(tmp_path / "log"))
+    for n_buckets in (8, 32):
+        table_path = str(tmp_path / f"pages{n_buckets}")
+        q = tail_change_log(spark, str(tmp_path / "log"), table_path,
+                            str(tmp_path / f"ckpt{n_buckets}"),
+                            n_buckets=n_buckets, mode="mor")
+        q.awaitTermination(120)
+        table = LakeTable(spark, table_path)
+        assert any(table.manifest()["deltas"].values())
+        _assert_equal(_read_state(spark, table_path), events.toPandas())
+        table.compact()
+        _assert_equal(_read_state(spark, table_path), events.toPandas())
+    narrow = [h["metrics"].get("prepare_partitions") for h in table.history()]
+    assert spark.sparkContext.defaultParallelism in narrow
 
 
 def test_stream_metrics_counts_mor_appends(spark, tmp_path, events):
