@@ -214,6 +214,16 @@ class CommitInFlightError(ConcurrentWriteError):
 
 
 @contextmanager
+def _scoped_conf(spark, key: str, value: str):
+    """Set a session conf for the duration of the block, then restore it."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def _static_plan(spark):
     """Scope-disable AQE for an engine write action. The engine's write
     plans are fully determined — explicit bucket repartition counts on
@@ -222,13 +232,7 @@ def _static_plan(spark):
     barrier per stage: measured ~20% of an 8-core micro-batch MOR commit.
     User-facing reads keep AQE (skew-join handling, coalescing) — only
     the commit path under the single writer runs with it off."""
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
 # --------------------------------------------------------------------------
@@ -622,17 +626,38 @@ class LakeTable:
         buckets: list[int] | None = None,
         file_schema: T.StructType | None = None,
         *,
-        which: str = "files",
+        which: tuple[str, ...] = ("files",),
     ) -> DataFrame:
-        files = manifest[which]
-        wanted = files.keys() if buckets is None else [str(b) for b in buckets]
-        paths = [os.path.join(self.path, p) for b in wanted for p in files.get(str(b), [])]
+        """Plain scan of the files that the manifest sections ``which``
+        (``"files"`` = base, ``"deltas"`` = MOR deltas) list for
+        ``buckets`` (None = every bucket): ONE ``parquet()`` call, so base
+        and delta files of the same buckets share one ``FileScan``.
+
+        The paths come from the manifest, so the scan runs no listing job:
+        Spark's parallel file listing (more paths than
+        ``parallelPartitionDiscovery.threshold``) is scoped off for the
+        call. With no path at all the frame is an empty JVM relation
+        (``range(0)`` projected onto the file schema) — no Python task,
+        unlike ``createDataFrame([])``'s ``defaultParallelism`` empty
+        Python partitions."""
+        wanted = None if buckets is None else [str(b) for b in buckets]
+        paths = [
+            os.path.join(self.path, p)
+            for sec in which
+            for b in (manifest[sec] if wanted is None else wanted)
+            for p in manifest[sec].get(b, [])
+        ]
         fschema = file_schema or self._file_schema(manifest)
         if not paths:
-            return self.spark.createDataFrame([], fschema)
+            return self.spark.range(0).select(*(
+                F.lit(None).cast(f.dataType).alias(f.name) for f in fschema))
         # explicit schema: files from pre-evolution snapshots lack new
         # columns; Spark null-fills them (additive evolution read path)
-        return self.spark.read.schema(fschema).parquet(*paths)
+        with _scoped_conf(
+                self.spark,
+                "spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(len(paths))):
+            return self.spark.read.schema(fschema).parquet(*paths)
 
     def _read_resolved(
         self,
@@ -653,6 +678,11 @@ class LakeTable:
           pending deltas enter resolution; cold buckets' base files stream
           through scan-only. This is Hudi/Iceberg-v2 file-group merging —
           merge cost follows *pending deltas*, never table size.
+        - **One scan of the hot buckets**: their base and delta files share
+          the file schema, so ``_read_files(which=("files", "deltas"))``
+          reads them in one ``FileScan``. A hot bucket always has a delta
+          path, so resolution never unions an empty frame; a read with no
+          file at all is an empty JVM relation that starts no task.
         - **Bucket-aligned exchange**: the hot buckets' base ∪ delta rows
           are repartitioned at ``n_buckets`` on the key — the table's own
           file layout — and ``row_number`` over ``(_ts, _seq)`` descending
@@ -662,7 +692,7 @@ class LakeTable:
           equals bucket placement, compaction's and COW targets'
           ``repartition(n_buckets, key)`` reuse it instead of adding one.
         - **Only key predicates pass the Window**: a filter on the key
-          (``read_keys``' ``isin``) is pushed below it into both scans —
+          (``read_keys``' ``isin``) is pushed below it into the hot scan —
           a key's rows all survive it, so resolution per key is unchanged.
           Any other predicate, ``~_deleted`` included, must stay above: a
           newer tombstone filtered out first would let an older live row
@@ -684,9 +714,8 @@ class LakeTable:
         key = manifest["key"]
         w = Window.partitionBy(key).orderBy(F.desc("_ord"))
         resolved = (
-            self._read_files(manifest, hot, file_schema)
-            .unionByName(self._read_files(manifest, hot, file_schema,
-                                          which="deltas"))
+            self._read_files(manifest, hot, file_schema,
+                             which=("files", "deltas"))
             .repartition(manifest["n_buckets"], F.col(key))
             .withColumn("_ord", _ord())
             .withColumn("_rn", F.row_number().over(w))

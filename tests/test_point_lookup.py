@@ -12,7 +12,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from epigraphdb_graph_spark.plans.lake import LakeTable, _spark_murmur3
+from epigraphdb_graph_spark.plans.lake import (
+    LakeTable,
+    _spark_murmur3,
+    _static_plan,
+)
 from epigraphdb_graph_spark.replay import apply_batch, replay
 from epigraphdb_graph_spark.sources.events import generate_change_events
 
@@ -49,6 +53,24 @@ def mor_table(spark, tmp_path):
     t.compact()
     replay(spark, path, ev, n_batches=4, n_buckets=8, mode="mor")
     return LakeTable(spark, path)
+
+
+@pytest.fixture()
+def delta_only_table(spark, tmp_path):
+    """A MOR table with no base file and more delta files than Spark's
+    parallel-listing threshold (32 paths)."""
+    path = str(tmp_path / "deltas")
+    replay(spark, path, _events(spark), n_batches=9, n_buckets=4, mode="mor")
+    t = LakeTable(spark, path)
+    m = t.manifest()
+    assert not any(m["files"].values())
+    assert sum(len(fl) for fl in m["deltas"].values()) > 32
+    return t
+
+
+def _plan(spark, df):
+    with _static_plan(spark):
+        return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_read_keys_equals_filtered_read(spark, mor_table):
@@ -114,7 +136,7 @@ def test_read_keys_sees_delta_winners_and_tombstones(spark, tmp_path):
     m = t.manifest()
     on_disk = F.col("url") == victim
     assert t._read_files(m).filter(on_disk & ~F.col("_deleted")).count() == 1
-    assert t._read_files(m, which="deltas").filter(
+    assert t._read_files(m, which=("deltas",)).filter(
         on_disk & F.col("_deleted") & (F.col("_seq") == 10_000_000)
     ).count() == 1
 
@@ -128,53 +150,80 @@ def test_read_keys_sees_delta_winners_and_tombstones(spark, tmp_path):
     assert t.read(with_system_cols=True).count() == len(live)
 
 
-def test_resolution_plan_runs_no_job(spark, mor_table):
+def test_resolution_plan_runs_no_job(spark, mor_table, delta_only_table):
     """Building the merge-on-read plans is lazy: neither ``read_keys`` nor
-    ``_read_resolved`` runs a Spark job before an action is called."""
-    t = mor_table
-    m = t.manifest()
-    key = t.read().select("url").first()["url"]
+    ``_read_resolved`` runs a Spark job before an action is called — not
+    even a file-listing job over more than 32 delta files, whose paths the
+    manifest already lists."""
     sc = spark.sparkContext
-    group = "resolution-plan-build"
-    sc.setJobGroup(group, "build merge-on-read plans")
-    try:
-        t.read_keys(key)
-        t._read_resolved(m)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for i, t in enumerate((mor_table, delta_only_table)):
+        m = t.manifest()
+        key = t.read().select("url").first()["url"]
+        group = f"resolution-plan-build-{i}"
+        sc.setJobGroup(group, "build merge-on-read plans")
+        try:
+            t.read_keys(key)
+            t._read_resolved(m)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs == [], t.path
 
 
 def test_resolution_plan_shape(spark, mor_table):
     """The resolution exchange is bucket-aligned, so a rewrite's own
-    ``repartition(n_buckets, key)`` reuses it (one exchange in all), and a
-    key predicate is pushed below the Window into the scans."""
+    ``repartition(n_buckets, key)`` reuses it (one exchange in all); the
+    hot bucket's base and delta files are one scan, and a key predicate
+    is pushed below the Window into it."""
     t = mor_table
     m = t.manifest()
     hot = sorted((b for b, fl in m["deltas"].items() if fl), key=int)
     assert hot
 
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    aqe = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(aqe)
-    spark.conf.set(aqe, "false")
-    try:
-        rewrite = t._read_resolved(m, hot).repartition(m["n_buckets"], "url")
-        assert plan(rewrite).count("Exchange hashpartitioning") == 1
-        key = t._read_files(m, which="deltas").select("url").first()["url"]
-        lookup = plan(t.read_keys(key))
-    finally:
-        spark.conf.set(aqe, old)
+    rewrite = t._read_resolved(m, hot).repartition(m["n_buckets"], "url")
+    assert _plan(spark, rewrite).count("Exchange hashpartitioning") == 1
+    # a key with rows in both a base file and a delta file
+    key = (t._read_files(m).select("url")
+           .intersect(t._read_files(m, which=("deltas",)).select("url"))
+           .first()["url"])
+    lookup = _plan(spark, t.read_keys(key))
     pruned = t._prune_manifest_for_keys(m, [key])
-    assert pruned["deltas"]
+    assert pruned["deltas"] and pruned["files"]
     scans = [ln for ln in lookup.splitlines() if "FileScan parquet" in ln]
-    n_sections = sum(1 for sec in ("files", "deltas")
-                     if any(pruned[sec].values()))
-    assert len(scans) == n_sections
+    assert len(scans) == 1
     for ln in scans:
         assert "EqualTo(url," in ln, ln
+
+
+def test_resolution_scans_once_with_no_python_side(spark, tmp_path,
+                                                  delta_only_table):
+    """Buckets with deltas and no base file resolve from one parquet scan
+    with no empty Python-side frame, and a read of buckets that hold no
+    file at all (a COW merge's target in a fresh table) is a JVM-only
+    empty relation: no PythonRDD, so no Python task for zero rows."""
+    t = delta_only_table
+    m = t.manifest()
+    hot = sorted((b for b, fl in m["deltas"].items() if fl), key=int)
+    state = t.read()
+    keys = [r["url"] for r in state.select("url").limit(3).collect()]
+    assert keys
+    for k in keys:
+        plan = _plan(spark, t.read_keys(k))
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "ExistingRDD" not in plan, plan
+        assert t.read_keys(k).count() == \
+            state.filter(F.col("url") == k).count() == 1
+    plan = _plan(spark, t._read_resolved(m, hot))
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "ExistingRDD" not in plan, plan
+
+    fresh = LakeTable.create(spark, str(tmp_path / "fresh"), t.schema(),
+                             n_buckets=m["n_buckets"])
+    target = fresh._read_resolved(fresh.manifest(), hot)
+    lineage = target._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert target.count() == 0
+    assert target.schema.names == t._read_resolved(m, hot).schema.names
 
 
 @pytest.mark.parametrize(
@@ -202,7 +251,7 @@ def test_compact_writes_key_sorted_files(spark, tmp_path, request, path):
             # under a new batch id -> delta rows tied on (_ts, _seq)
             apply_batch(t, _events(spark).filter(F.col("event_seq") >= 2000),
                         batch_id="redelivered:000000000001", mode="mor")
-            raw = t._read_files(t.manifest(), which="deltas")
+            raw = t._read_files(t.manifest(), which=("deltas",))
             assert raw.groupBy("url", "_ts", "_seq").count() \
                 .filter("count > 1").count() > 0
         expect = t.read().orderBy("url").collect()
