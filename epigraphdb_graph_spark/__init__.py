@@ -22,4 +22,10 @@ Layout
 - ``cli``        spark-submit entry: replay / resume / bench
 """
 
+from .packaging import install_zip_cache_guard
+
 __version__ = "0.1.0"
+
+# every Python worker that unpickles an engine UDF imports this package:
+# stop its per-task importlib.invalidate_caches() re-reading zip archives
+install_zip_cache_guard()

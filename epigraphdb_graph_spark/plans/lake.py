@@ -89,18 +89,18 @@ _ABANDONED_COMMIT_GRACE_S = 900.0
 _POINTER_LOCK_STALE_S = 10.0
 
 
-def _batch_watermark(src: DataFrame, watermark_seq: int | None,
-                     deferred_watermark) -> int:
+def _batch_watermark(watermark_seq: int | None, deferred_watermark,
+                     batch_max_seq) -> int:
     """A change batch's log position: the caller's ``watermark_seq``, else
-    its ``deferred_watermark()``, else max event_seq in the (deduped)
-    batch — LWW by (warc_ts, seq) may have dropped the max-seq event, so
-    the explicit forms are the accurate ones (replay.py passes them)."""
+    its ``deferred_watermark()``, else ``batch_max_seq()``, the max
+    event_seq in the (deduped) batch — LWW by (warc_ts, seq) may have
+    dropped the max-seq event, so the explicit forms are the accurate ones
+    (replay.py passes them)."""
     if watermark_seq is None and deferred_watermark is not None:
         watermark_seq = deferred_watermark()
     if watermark_seq is None:
-        wm_row = src.agg(F.max("event_seq")).first()
-        watermark_seq = wm_row[0] if wm_row[0] is not None else -1
-    return watermark_seq
+        watermark_seq = batch_max_seq()
+    return -1 if watermark_seq is None else watermark_seq
 
 
 def _rebase_backoff(attempt: int) -> None:
@@ -1144,10 +1144,9 @@ class LakeTable:
         )
 
         if mode == "mor":
-            # no persist: the write pass streams source->UDF->parquet once,
-            # and the metrics/watermark passes are column-pruned recomputes
-            # (no html, no UDF) — caching full row images here would add
-            # O(batch) memory traffic for nothing
+            # no persist: the write pass streams source->UDF->parquet once
+            # and carries the metrics and watermark (Observation) — there
+            # is no second pass for a cache to serve
             return self._merge_mor(
                 m, src, all_cols, new_schema,
                 batch_id=batch_id, watermark_seq=watermark_seq,
@@ -1275,8 +1274,9 @@ class LakeTable:
             "late_events": int(got.get("_late") or 0) + a.get("stale", 0),
         }
         wm_ts = got.get("_wm_ts")
-        watermark_seq = _batch_watermark(src, watermark_seq,
-                                         deferred_watermark)
+        watermark_seq = _batch_watermark(
+            watermark_seq, deferred_watermark,
+            lambda: src.agg(F.max("event_seq")).first()[0])
         src.unpersist()
         version, _ = self._publish_snapshot(
             m, {"op": "merge", "batch_id": batch_id, **metrics, **extra},
@@ -1311,8 +1311,8 @@ class LakeTable:
         """Merge-on-read commit: append the batch as per-bucket delta
         files. O(batch) — no target read, no join; per-key LWW resolution
         is deferred to _read_resolved/compact (Hudi/Iceberg-v2 MOR analog).
-        ``src`` arrives bucketed and schema-conformed, NOT persisted (side
-        passes below are column-pruned recomputes — no html, no UDF), and
+        ``src`` arrives bucketed and schema-conformed, NOT persisted (the
+        write job is its only pass: metrics and watermark ride on it), and
         may hold multiple rows per key (prepare_batch's append-all form
         keeps superseded events and re-delivered ties; resolution orders by
         (_ts,_seq) and collapses them)."""
@@ -1339,6 +1339,9 @@ class LakeTable:
             F.max(F.unix_micros(F.col("_ts"))).alias("_wm_ts"),
             F.sum(F.when(F.unix_micros(F.col("_ts")) < F.lit(late_thr), 1)
                   .otherwise(0)).alias("_late"),
+            # the batch's log position when the caller passes none: no
+            # separate max(event_seq) job over a recomputed batch
+            F.max("_seq").alias("_max_seq"),
         )
         if not src_aligned:
             out = out.repartition(m["n_buckets"], F.col(m["key"]))
@@ -1390,8 +1393,8 @@ class LakeTable:
                           for b, fl in new_files.items()},
         }
         wm_ts = got.get("_wm_ts")
-        watermark_seq = _batch_watermark(src, watermark_seq,
-                                         deferred_watermark)
+        watermark_seq = _batch_watermark(
+            watermark_seq, deferred_watermark, lambda: got.get("_max_seq"))
         version, noop = self._publish_snapshot(
             m, {"op": "merge", "batch_id": batch_id, **metrics, **extra},
             batch_id=batch_id, appended=new_files,

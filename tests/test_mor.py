@@ -129,6 +129,30 @@ def test_mor_commit_runs_python_stage_at_core_count(spark, tmp_path, events):
     assert [r[0] for r in got] == [cores]
 
 
+def test_mor_merge_without_watermark_runs_one_job(spark, tmp_path, events):
+    """With no caller watermark, a MOR commit takes the batch's max
+    event_seq from its write job's Observation: one job, no separate
+    max(event_seq) pass over a recomputed batch."""
+    from epigraphdb_graph_spark.replay import prepare_batch
+    from epigraphdb_graph_spark.schema import PAGES_SCHEMA
+
+    sc = spark.sparkContext
+    schema = type(PAGES_SCHEMA)(
+        [f for f in PAGES_SCHEMA.fields if f.name in events.columns])
+    table = LakeTable.create(spark, str(tmp_path / "nowm"), schema,
+                             key="url", n_buckets=8)
+    src = prepare_batch(events, form="narrow", bucket_into=8)
+    want = src.agg(F.max("event_seq")).first()[0]
+    group = "test-mor-merge-no-watermark"
+    sc.setJobGroup(group, "one MOR merge without a watermark")
+    try:
+        table.merge(src, mode="mor", src_aligned=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert table.manifest()["watermark_seq"] == want
+
+
 def test_mor_then_cow_folds_deltas(spark, tmp_path, events, oracle_state):
     """A COW merge over buckets with pending deltas must fold them in and
     retire them (mixed-mode correctness)."""
