@@ -35,6 +35,8 @@ Scale design (what holds at 100 TB / 1000 executors):
   event_seq) struct): map-side combine collapses hot keys before the
   shuffle, so Zipf-skewed domains don't create straggler reducers
   (see operators/lww.py; window variant kept for parity).
+- **One LWW order** (``_lww_window``) for every resolution: a COW commit
+  resolves its touched buckets with the batch as one more delta source.
 - **Exactly-once**: a batch id recorded in the manifest makes re-applied
   micro-batches no-ops, and per-row ``(_ts, _seq)`` guards make replayed
   *events* no-ops — both levels are idempotent (north_rule).
@@ -118,17 +120,18 @@ def _rebase_backoff(attempt: int) -> None:
     _time.sleep(random.uniform(0.001, 0.02 * (2 ** min(attempt, 6))))
 
 
-def _ord():
-    """Packed (_ts, _seq) resolution order: unix_micros(_ts) * 10^18 +
-    _seq. Lexicographic (ts, seq) order is preserved for any seq in
+def _lww_window(key: str, *ties):
+    """The LWW order of every resolution: per key, newest first by packed
+    (_ts, _seq) = unix_micros(_ts) * 10^18 + _seq, then ``ties``.
+    Lexicographic (ts, seq) order is preserved for any seq in
     (-10^18, 10^18) (covers 10^10-event logs and the base-load _seq = -1);
-    max micros ~1.7e15 keeps the product < 10^34 (decimal cap is 10^38). A
-    single packed decimal is the one sort key of the resolution window."""
-    return (
+    max micros ~1.7e15 keeps the product < 10^34 (decimal cap is 10^38)."""
+    ord_ = (
         F.unix_micros(F.col("_ts")).cast("decimal(38,0)")
         * F.lit(1_000_000_000_000_000_000)
         + F.col("_seq")
     )
+    return Window.partitionBy(key).orderBy(ord_.desc(), *ties)
 
 
 def _conformed_cols(df: DataFrame, schema: T.StructType) -> list:
@@ -582,8 +585,8 @@ class LakeTable:
             # IDENTICAL to Spark's HashPartitioning placement so that
             # repartition(n_buckets, key) puts bucket b's rows in partition
             # b exactly: one exchange both bucket-aligns a batch AND
-            # satisfies groupBy(key)/join(key) clustering, so LWW dedup and
-            # the MERGE join run in the same stage with no further shuffle
+            # satisfies groupBy(key)/window clustering, so LWW dedup and
+            # resolution run in the same stage with no further shuffle
             # (Iceberg bucket-transform storage-partitioned-join analog).
             # The only layout: manifest() rejects any other value.
             "bucket_hash": "murmur3",
@@ -689,8 +692,8 @@ class LakeTable:
           keeps one row per key. Re-delivered events (equal
           ``(_ts, _seq)``, byte-identical rows) collapse to one, so MOR
           reads stay idempotent under re-delivery. Because the exchange
-          equals bucket placement, compaction's and COW targets'
-          ``repartition(n_buckets, key)`` reuse it instead of adding one.
+          equals bucket placement, compaction's
+          ``repartition(n_buckets, key)`` reuses it instead of adding one.
         - **Only key predicates pass the Window**: a filter on the key
           (``read_keys``' ``isin``) is pushed below it into the hot scan —
           a key's rows all survive it, so resolution per key is unchanged.
@@ -699,8 +702,10 @@ class LakeTable:
           win.
 
         Every reader and rewriter resolves through here: ``read``,
-        ``read_keys``, ``changes``, COW merge targets, ``merge_into`` and
-        ``compact`` — so compaction writes exactly what reads return.
+        ``read_keys``, ``changes``, ``merge_into`` and ``compact`` — so
+        compaction writes exactly what reads return. A COW commit runs the
+        same resolution with its batch as one more delta source (``merge``);
+        both take their order from ``_lww_window``.
         """
         deltas = manifest["deltas"]
         files = manifest["files"]
@@ -712,15 +717,13 @@ class LakeTable:
         if not hot:
             return self._read_files(manifest, buckets, file_schema)
         key = manifest["key"]
-        w = Window.partitionBy(key).orderBy(F.desc("_ord"))
         resolved = (
             self._read_files(manifest, hot, file_schema,
                              which=("files", "deltas"))
             .repartition(manifest["n_buckets"], F.col(key))
-            .withColumn("_ord", _ord())
-            .withColumn("_rn", F.row_number().over(w))
+            .withColumn("_rn", F.row_number().over(_lww_window(key)))
             .filter(F.col("_rn") == 1)
-            .drop("_rn", "_ord"))
+            .drop("_rn"))
         cold = [b for b in wanted if not deltas.get(b) and files.get(b)]
         if not cold:
             return resolved
@@ -1036,7 +1039,7 @@ class LakeTable:
                     raise
 
     def overwrite(self, df: DataFrame, *, batch_id: str | None = None) -> MergeResult:
-        """Bulk first-load fast path (no MERGE join) — analog of the
+        """Bulk first-load fast path (no resolution) — analog of the
         reference's neo4j-admin bulk import vs transactional LOAD CSV.
         Replaces the whole table: every base file and every pending delta
         is retired."""
@@ -1101,29 +1104,28 @@ class LakeTable:
           - op == delete                   -> tombstone (read-invisible)
 
         ``mode``:
-          - ``"cow"`` (copy-on-write): full-outer MERGE join against the
-            touched buckets, rewrite them. Commit cost O(touched data);
-            reads stay plain scans. Right when batches are large relative
-            to update locality or reads dominate. A lost commit race
-            raises ConcurrentWriteError (the rewrite read superseded base
-            files); ``replay.apply_batch`` re-prepares the batch.
+          - ``"cow"`` (copy-on-write): resolve the touched buckets with
+            the batch as one more delta source and write the result as
+            their base files. Commit cost O(touched data); reads stay
+            plain scans. Right when batches are large relative to update
+            locality or reads dominate. A lost commit race raises
+            ConcurrentWriteError (the rewrite read superseded base files);
+            ``replay.apply_batch`` re-prepares the batch.
           - ``"mor"`` (merge-on-read): append the batch as per-bucket delta
-            files — commit cost O(batch), **no join, no target read**; the
-            per-key LWW resolution is deferred to read()/compact(), exactly
-            like Iceberg v2 / Hudi MOR tables. Right for high-throughput
-            CDC tailing; run ``compact()`` on a cadence to re-bound read
-            cost. A lost commit race rebases the written delta files onto
-            the winner's snapshot. Both modes converge to identical table
+            files — commit cost O(batch), **no target read**; the per-key
+            LWW resolution is deferred to read()/compact(), exactly like
+            Iceberg v2 / Hudi MOR tables. Right for high-throughput CDC
+            tailing; run ``compact()`` on a cadence to re-bound read cost.
+            A lost commit race rebases the written delta files onto the
+            winner's snapshot. Both modes converge to identical table
             states because resolution uses the same (_ts, _seq) total
             order.
 
-        ``src_aligned``: each bucket of ``updates`` already lies inside one
-        partition (prepare_batch's ``repartition(n_buckets, key)``, kept
-        at n_buckets partitions by the COW form and coalesced to the core
-        count by the MOR form). The COW join then runs at n_buckets, and
-        the MOR delta write needs no exchange: each task writes one file
-        per bucket it holds. Otherwise merge exchanges the batch into
-        bucket layout itself (one delta file per touched bucket).
+        ``src_aligned`` (MOR only): each bucket of ``updates`` already lies
+        inside one partition (prepare_batch's ``repartition(n_buckets,
+        key)``), so the delta write needs no exchange: each task writes
+        one file per bucket it holds. Otherwise merge exchanges the batch
+        into bucket layout itself (one delta file per touched bucket).
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
@@ -1137,9 +1139,12 @@ class LakeTable:
         payload_cols = [c for c in updates.columns if c not in ("event_seq", "op")]
         payload_schema = T.StructType([updates.schema[c] for c in payload_cols])
         new_schema = merge_schemas(T.StructType.fromJson(m["schema"]), payload_schema)
-        all_cols = new_schema.fieldNames()
+        # the batch in the table's file layout: one projection
         src = updates.select(
-            *_conformed_cols(updates, new_schema), "event_seq", "op",
+            *_conformed_cols(updates, new_schema),
+            F.col("event_seq").alias("_seq"),
+            F.col("warc_ts").alias("_ts"),
+            (F.col("op") == "delete").alias("_deleted"),
             self.bucket_expr(F.col(key), n_buckets).alias("_bucket"),
         )
 
@@ -1148,20 +1153,18 @@ class LakeTable:
             # and carries the metrics and watermark (Observation) — there
             # is no second pass for a cache to serve
             return self._merge_mor(
-                m, src, all_cols, new_schema,
+                m, src, new_schema,
                 batch_id=batch_id, watermark_seq=watermark_seq,
                 extra_metrics=extra, src_aligned=src_aligned,
                 deferred_watermark=deferred_watermark, pre_commit=pre_commit,
             )
 
         # persist (COW): the updates lineage (dedup + extraction UDF) is
-        # consumed by three actions (touched-buckets, merge write, metrics
-        # recompute's source side) — run the expensive upstream exactly once
+        # consumed by two actions (touched-buckets, rewrite) — run the
+        # expensive upstream exactly once
         src = src.persist()
 
         # ---- bucket pruning: only read buckets this batch touches.
-        # Read with the *evolved* file schema: pre-evolution files null-fill
-        # the new columns (additive evolution read path).
         touched = [r[0] for r in src.select("_bucket").distinct().collect()]
         if not touched:
             # empty batch: no snapshot rewrite; still record the batch id so
@@ -1173,95 +1176,52 @@ class LakeTable:
                         **extra}, batch_id=batch_id)
                 return MergeResult(version, 0, 0, 0, 0, 0)
             return MergeResult(m["version"], 0, 0, 0, 0, 0, noop=True)
-        evolved_manifest = {**m, "schema": new_schema.jsonValue()}
-        # resolved read: if earlier MOR commits left deltas in these buckets,
-        # they are folded in here and this COW rewrite retires them
-        target = (
-            self._read_resolved(m, buckets=touched,
-                                file_schema=self._file_schema(evolved_manifest))
-            .withColumn("_bucket", self.bucket_expr(F.col(key), n_buckets))
-        )
-        if src_aligned:
-            # explicitly co-partition the target at n_buckets so the MERGE
-            # join runs at n_buckets: without this, EnsureRequirements
-            # normalizes BOTH sides to spark.sql.shuffle.partitions
-            # whenever that differs from n_buckets. With it, the write plan
-            # is one exchange per side (src's prepare exchange is hidden
-            # from the planner by lww_dedup_agg's struct projection, so src
-            # is exchanged once more here) and the join output stays
-            # physically bucket-aligned for the exchange-free write below.
-            target = target.repartition(n_buckets, F.col(key))
 
-        s_cols = F.struct(
-            *[F.col(f"s.{c}").alias(c) for c in all_cols],
-            F.col("s.event_seq").alias("_seq"),
-            F.col("s.warc_ts").alias("_ts"),
-            (F.col("s.op") == "delete").alias("_deleted"),
-            F.col("s._bucket").alias("_bucket"),
-        )
-        t_cols = F.struct(
-            *[F.col(f"t.{c}").alias(c) for c in all_cols],
-            F.col("t._seq"), F.col("t._ts"), F.col("t._deleted"), F.col("t._bucket"),
-        )
-        s_key = F.col(f"s.{key}")
-        t_key = F.col(f"t.{key}")
-        # stale iff (s.warc_ts, s.event_seq) <= (t._ts, t._seq)
-        stale = (F.col("s.warc_ts") < F.col("t._ts")) | (
-            (F.col("s.warc_ts") == F.col("t._ts"))
-            & (F.col("s.event_seq") <= F.col("t._seq"))
-        )
-
-        joined = target.alias("t").join(src.alias("s"), t_key == s_key, "full_outer")
-        action = (
-            F.when(s_key.isNull(), F.lit("keep"))
-            .when(t_key.isNull() & (F.col("s.op") == "delete"), F.lit("tombstone_new"))
-            .when(t_key.isNull(), F.lit("insert"))
-            .when(stale, F.lit("stale"))
-            .when(F.col("s.op") == "delete", F.lit("delete"))
-            .when(F.col("t._deleted"), F.lit("revive"))
-            .otherwise(F.lit("update"))
-        )
-        row = (
-            F.when(action.isin("keep", "stale"), t_cols)
-            .otherwise(s_cols)
-        )
-        resolved = joined.select(action.alias("_action"), row.alias("r")).select(
-            "_action", "r.*"
+        # The rewrite resolves the touched buckets' files (evolved schema:
+        # older files null-fill new columns) with the batch as one more
+        # delta source. The target wins a tie, so a re-delivered event is
+        # stale. On a batch winner's row the next row is the target's
+        # winner: ``_prior`` is its tombstone flag (null: a new key).
+        fschema = self._file_schema({**m, "schema": new_schema.jsonValue()})
+        w = _lww_window(key, "_src")
+        ranked = (
+            self._read_files(m, touched, fschema, which=("files", "deltas"))
+            .select("*", F.lit(False).alias("_src"),
+                    self.bucket_expr(F.col(key), n_buckets).alias("_bucket"))
+            .unionByName(src.withColumn("_src", F.lit(True)))
+            .repartition(n_buckets, F.col(key))
+            .select("*", F.row_number().over(w).alias("_rn"),
+                    F.lead("_deleted").over(w).alias("_prior"))
         )
 
         version = m["version"] + 1
-        # action counts piggyback on the write job (Observation — no extra
-        # pass over the join); per-bucket row counts come from the written
-        # parquet footers (metadata only). An earlier design ran a separate
-        # column-pruned metrics job per commit — one whole extra job.
+        # action counts, watermarks and the batch's max _seq piggyback on
+        # the write job (Observation — no extra pass); per-bucket row
+        # counts come from the written parquet footers (metadata only)
         from pyspark.sql import Observation
 
         obs = Observation()
         late_thr = _late_threshold_micros(m)
-        applied = ~F.col("_action").isin("keep", "stale")
-        out = resolved.observe(
+        won = F.col("_src") & (F.col("_rn") == 1)  # applied batch rows
+        live = won & ~F.col("_deleted")
+        stale = F.count_if(F.col("_src") & (F.col("_rn") > 1))
+        out = ranked.observe(
             obs,
-            *[
-                F.sum(F.when(F.col("_action") == a, 1).otherwise(0)).alias(a)
-                for a in ("keep", "insert", "update", "delete",
-                          "tombstone_new", "revive", "stale")
-            ],
-            # event-time watermark + late-data accounting (St3):
-            # max applied event time, and applied events older than
-            # (previous watermark - lateness horizon). Stale rows are
-            # late by definition and already counted above.
-            F.max(F.when(applied, F.unix_micros(F.col("_ts")))).alias("_wm_ts"),
-            F.sum(F.when(
-                applied & (F.unix_micros(F.col("_ts")) < F.lit(late_thr)),
-                1).otherwise(0)).alias("_late"),
-        ).drop("_action")
-        # aligned: both join sides are HashPartitioning(key, n_buckets) and
-        # a full-outer SMJ moves no rows — so the join output is already
-        # physically bucket-aligned (partition b == bucket b, even though
-        # Catalyst reports full-outer output partitioning as unknown).
-        # Write it directly, with no further exchange.
-        if not src_aligned:
-            out = out.repartition(n_buckets, F.col(key))
+            (F.count_if(~F.col("_src") & (F.col("_rn") == 1)) - stale)
+            .alias("keep"),
+            F.count_if(live & F.coalesce("_prior", F.lit(True))).alias("insert"),
+            F.count_if(live & ~F.col("_prior")).alias("update"),
+            F.count_if(won & F.col("_deleted")).alias("delete"),
+            stale.alias("stale"),
+            # event-time watermark + late-data accounting (St3) over the
+            # applied rows; stale rows are late by definition (see below)
+            F.max(F.when(won, F.unix_micros(F.col("_ts")))).alias("_wm_ts"),
+            F.count_if(won & (F.unix_micros(F.col("_ts")) < F.lit(late_thr)))
+            .alias("_late"),
+            F.max(F.when(F.col("_src"), F.col("_seq"))).alias("_max_seq"),
+        ).filter(F.col("_rn") == 1).drop("_src", "_rn", "_prior")
+        # the resolution's exchange is the bucket layout (partition b ==
+        # bucket b): write it with no further exchange
         new_files, new_rows, new_bounds = self._write_snapshot(
             out, version, key)
 
@@ -1275,8 +1235,7 @@ class LakeTable:
         }
         wm_ts = got.get("_wm_ts")
         watermark_seq = _batch_watermark(
-            watermark_seq, deferred_watermark,
-            lambda: src.agg(F.max("event_seq")).first()[0])
+            watermark_seq, deferred_watermark, lambda: got.get("_max_seq"))
         src.unpersist()
         version, _ = self._publish_snapshot(
             m, {"op": "merge", "batch_id": batch_id, **metrics, **extra},
@@ -1287,9 +1246,9 @@ class LakeTable:
             watermark_ts=None if wm_ts is None else int(wm_ts))
         return MergeResult(
             version,
-            inserted=a.get("insert", 0) + a.get("revive", 0),
+            inserted=a.get("insert", 0),
             updated=a.get("update", 0),
-            deleted=a.get("delete", 0) + a.get("tombstone_new", 0),
+            deleted=a.get("delete", 0),
             stale_skipped=a.get("stale", 0),
             touched_buckets=len(touched),
         )
@@ -1298,7 +1257,6 @@ class LakeTable:
         self,
         m: dict,
         src: DataFrame,
-        all_cols: list[str],
         new_schema: T.StructType,
         *,
         batch_id: str | None,
@@ -1311,20 +1269,13 @@ class LakeTable:
         """Merge-on-read commit: append the batch as per-bucket delta
         files. O(batch) — no target read, no join; per-key LWW resolution
         is deferred to _read_resolved/compact (Hudi/Iceberg-v2 MOR analog).
-        ``src`` arrives bucketed and schema-conformed, NOT persisted (the
-        write job is its only pass: metrics and watermark ride on it), and
-        may hold multiple rows per key (prepare_batch's append-all form
+        ``src`` arrives in the file layout with ``_bucket``, NOT persisted
+        (the write job is its only pass: metrics and watermark ride on it),
+        and may hold multiple rows per key (prepare_batch's append-all form
         keeps superseded events and re-delivered ties; resolution orders by
         (_ts,_seq) and collapses them)."""
         extra = dict(extra_metrics or {})
         version = m["version"] + 1
-        out = src.select(
-            *all_cols,
-            F.col("event_seq").alias("_seq"),
-            F.col("warc_ts").alias("_ts"),
-            (F.col("op") == "delete").alias("_deleted"),
-            "_bucket",
-        )
         # metrics piggyback on the write job itself (Observation fills when
         # the action runs) — a separate metrics pass was a whole extra job
         # per commit; per-bucket row counts come from parquet footers below
@@ -1332,7 +1283,7 @@ class LakeTable:
 
         obs = Observation()
         late_thr = _late_threshold_micros(m)
-        out = out.observe(
+        out = src.observe(
             obs,
             F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("deletes"),
             F.sum(F.when(F.col("_deleted"), 0).otherwise(1)).alias("upserts"),

@@ -29,30 +29,26 @@ from .plans.lake import LakeTable, MergeResult
 from .schema import PAGES_SCHEMA
 
 
-def prepare_batch(events: DataFrame, *, form: str = "aligned",
+def prepare_batch(events: DataFrame, *, form: str = "narrow",
                   bucket_into: int | None = None,
                   key: str = "url") -> DataFrame:
     """Prepare a raw change-event batch for ``LakeTable.merge``, in one of
-    three forms.
+    two forms.
 
     ``bucket_into=n`` (apply_batch sets it to the table's n_buckets)
     exchanges the raw batch once with ``repartition(n, key)``, which
     places every row of bucket b in partition b (see LakeTable.create).
     Without it the batch keeps its own partitioning.
 
-    - ``"aligned"`` (COW): exchange -> ``lww_dedup_agg`` -> extraction.
-      The dedup runs partition-local (HashPartitioning(key, n) already
-      clusters each key) with its map-side partial combine, and
-      extraction runs after it, so superseded events never reach the
-      Python UDF. The result keeps n partitions, bucket b in partition
-      b, and has exactly one row per key — the COW MERGE contract.
-    - ``"narrow"`` (MOR): the same exchange and dedup, then
-      ``coalesce(min(n, defaultParallelism))`` before extraction, so the
-      Python stage runs one task per core rather than one per bucket.
-      ``coalesce`` merges whole partitions, so each bucket still lies
-      inside one partition and the delta write gives one file per
-      touched bucket with no further exchange. It never narrows below
-      the core count: extraction of KB-scale pages is real CPU work.
+    - ``"narrow"`` (COW and MOR): exchange -> ``lww_dedup_agg`` ->
+      ``coalesce(min(n, defaultParallelism))`` -> extraction. The dedup
+      runs partition-local with its map-side partial combine, so only
+      winners reach the Python UDF: one row per key, as COW requires.
+      The coalesce runs one Python task per core, not per bucket, and
+      merges whole partitions: each bucket stays in one partition, so
+      the MOR delta write gives one file per touched bucket with no
+      further exchange. It never narrows below the core count:
+      extraction of KB-scale pages is real CPU work.
     - ``"append"`` (MOR append-all, chosen by choose_mor_dedup for
       effectively append-only batches): no winner selection — extract
       every event on the scan side, then exchange; MOR read-resolution
@@ -62,13 +58,13 @@ def prepare_batch(events: DataFrame, *, form: str = "aligned",
         if bucket_into is not None:
             events = events.repartition(bucket_into, F.col(key))
         return events
-    if form not in ("aligned", "narrow"):
+    if form != "narrow":
         raise ValueError(f"unknown prepare form {form!r}")
     if bucket_into is not None:
         events = events.repartition(bucket_into, F.col(key))
     events = lww_dedup_agg(events, key=key, ts_col="warc_ts",
                            seq_col="event_seq")
-    if form == "narrow" and bucket_into is not None:
+    if bucket_into is not None:
         width = _python_width(events.sparkSession, bucket_into)
         if width < bucket_into:
             events = events.coalesce(width)
@@ -143,11 +139,11 @@ def apply_batch(
     duration so the quarantine's side jobs and the merge share one
     source pass.
 
-    Prepare form (see prepare_batch): COW takes the ``"aligned"`` form
-    (the MERGE join needs exactly one source row per key, bucket-aligned).
-    MOR asks choose_mor_dedup with ``stats`` — the caller's ``(rows,
-    distinct keys)`` for this batch (replay's whole-log bounds pass, or
-    the tailer's previous micro-batch) — between ``"narrow"`` and
+    Prepare form (see prepare_batch): COW takes the ``"narrow"`` form
+    (its resolution needs exactly one source row per key). MOR asks
+    choose_mor_dedup with ``stats`` — the caller's ``(rows, distinct
+    keys)`` for this batch (replay's whole-log bounds pass, or the
+    tailer's previous micro-batch) — between ``"narrow"`` and
     ``"append"``; with ``stats=None`` it assumes a supersede-bearing
     batch (``"narrow"``), which needs no stats job. A narrow commit
     records its Python stage's task count, known at plan time, as
@@ -177,9 +173,8 @@ def apply_batch(
         events, counts = quarantine(cached, dead_letter_dir,
                                     batch_tag=batch_id)
         extra = {"quarantined": counts}
-    if mode == "cow":
-        form = "aligned"
-    elif stats is None or choose_mor_dedup(events, stats=stats) == "agg":
+    if (mode == "cow" or stats is None
+            or choose_mor_dedup(events, stats=stats) == "agg"):
         form = "narrow"
     else:
         form = "append"

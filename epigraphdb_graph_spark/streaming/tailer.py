@@ -103,8 +103,8 @@ def tail_change_log(
 
         # watermark = true log position (max seq in the RAW batch — LWW
         # dedup may drop the max-seq event) + next batch's policy stats,
-        # all piggybacked on the merge write job via Observation: the
-        # whole micro-batch is ONE Spark job in the aligned-agg shape
+        # all piggybacked on the merge write job via Observation: a MOR
+        # micro-batch is ONE Spark job in the narrow-agg shape
         raw_obs = Observation()
         events = batch_df.observe(
             raw_obs,
@@ -169,7 +169,9 @@ def stream_metrics(table: LakeTable) -> DataFrame:
                 "batch_id": m.get("batch_id"),
                 "watermark_seq": h["watermark_seq"],
                 # COW actions, plus the MOR appends (as MergeResult counts
-                # them: every upsert row inserted, every delete row deleted)
+                # them: every upsert row inserted, every delete row deleted).
+                # A COW commit folds revives into insert and tombstones of
+                # new keys into delete; older manifests list them apart.
                 "inserted": actions.get("insert", 0) + actions.get("revive", 0)
                 + actions.get("append_upsert", 0),
                 "updated": actions.get("update", 0),
@@ -178,7 +180,7 @@ def stream_metrics(table: LakeTable) -> DataFrame:
                 "stale_skipped": actions.get("stale", 0),
                 "kept": actions.get("keep", 0),
                 "late_events": m.get("late_events", 0),
-                # Python-stage tasks of a narrow MOR commit (else null)
+                # Python-stage tasks of a narrow commit (else null)
                 "prepare_partitions": m.get("prepare_partitions"),
             }
         )

@@ -174,19 +174,22 @@ def test_time_travel(spark, tmp_path, events):
     assert m1["watermark_seq"] < N_EVENTS - 1
 
 
-def test_cow_commit_keeps_aligned_shape(spark, tmp_path, events, monkeypatch):
-    """COW is never narrowed: its prepared batch keeps n_buckets
-    partitions, and a commit's write plan (AQE off, as the engine writes)
-    has exactly one bucket exchange on each side of the MERGE join. The
-    batch's own prepare exchange sits inside the cached relation, which
-    an earlier job of the commit materialises."""
+def test_cow_commit_is_one_resolution(spark, tmp_path, events, monkeypatch):
+    """A COW commit resolves the touched buckets with its batch as one
+    more delta source: the write plan (AQE off, as the engine writes) has
+    no join, one Window, and exactly one bucket exchange outside the
+    cached batch. The batch's own prepare exchange sits inside the cached
+    relation, which an earlier job of the commit materialises; the batch
+    takes the narrow prepare form, so its Python stage runs at the core
+    count."""
     import re
 
     from epigraphdb_graph_spark.plans.lake import LakeTable
-    from epigraphdb_graph_spark.replay import apply_batch, prepare_batch
+    from epigraphdb_graph_spark.replay import apply_batch
 
     n_buckets = 32
-    assert n_buckets > spark.sparkContext.defaultParallelism
+    cores = spark.sparkContext.defaultParallelism
+    assert n_buckets > cores
     plans = []
     write = LakeTable._write_snapshot
 
@@ -198,8 +201,6 @@ def test_cow_commit_keeps_aligned_shape(spark, tmp_path, events, monkeypatch):
     old = spark.conf.get(aqe)
     spark.conf.set(aqe, "false")
     try:
-        prepared = prepare_batch(events, form="aligned", bucket_into=n_buckets)
-        assert prepared.rdd.getNumPartitions() == n_buckets
         path = str(tmp_path / "cow")
         replay(spark, path, events.filter(F.col("event_seq") < N_EVENTS // 2),
                n_buckets=n_buckets)
@@ -210,17 +211,109 @@ def test_cow_commit_keeps_aligned_shape(spark, tmp_path, events, monkeypatch):
     finally:
         spark.conf.set(aqe, old)
     assert len(plans) == 1
-    assert "Coalesce" not in plans[0]
-    lines = plans[0].splitlines()
-    j = next(i for i, ln in enumerate(lines) if "SortMergeJoin" in ln)
-    col = lines[j].index("+- ") + 3  # the join's children start here
-    starts = [i for i in range(j + 1, len(lines))
-              if lines[i][col:col + 3] in (":- ", "+- ")]
-    assert len(starts) == 2, plans[0]
+    plan = plans[0]
+    assert "Join" not in plan, plan
+    lines = plan.splitlines()
+    assert sum(bool(re.search(r"\bWindow \[", ln)) for ln in lines) == 1, plan
+
+    def depth(ln):
+        return re.search(r"\w", ln).start()
+
+    cached = next(i for i, ln in enumerate(lines) if "InMemoryRelation" in ln)
+    below = [i for i in range(cached + 1, len(lines))
+             if depth(lines[i]) > depth(lines[cached])]
+    outside = [ln for i, ln in enumerate(lines) if i not in below]
     exchange = re.compile(rf"Exchange hashpartitioning\(url#\d+, {n_buckets}\)")
-    for lo, hi in zip(starts, starts[1:] + [len(lines)]):
-        side = lines[lo:hi]
-        cached = [i for i, ln in enumerate(side) if "InMemoryRelation" in ln]
-        side = side[:cached[0]] if cached else side
-        assert sum(bool(exchange.search(ln)) for ln in side) == 1, \
-            "\n".join(side)
+    assert sum(bool(exchange.search(ln)) for ln in outside) == 1, plan
+    assert sum(bool(exchange.search(ln)) for ln in lines) == 2, plan
+    assert LakeTable(spark, path).manifest()["metrics"][
+        "prepare_partitions"] == cores
+
+
+def _change_batch(spark, rows):
+    pdf = pd.DataFrame(rows, columns=["event_seq", "op", "url", "warc_ts", "html"])
+    pdf["warc_ts"] = pd.to_datetime(pdf["warc_ts"])
+    return spark.createDataFrame(
+        pdf, "event_seq long, op string, url string, warc_ts timestamp, "
+        "html binary")
+
+
+def test_cow_action_counts(spark, tmp_path):
+    """One crafted COW batch over a seeded table hits every action: a new
+    key, an update of a live key, a revive of a tombstoned key, a delete
+    of a live key, a delete of an unknown key, a stale event, a
+    re-delivered tie, and untouched keys (one live, one tombstoned) in the
+    touched bucket. MergeResult, the commit's metrics and its
+    stream_metrics row count them; the same batches through MOR and
+    compact() give the same state."""
+    from epigraphdb_graph_spark.plans.lake import LakeTable
+    from epigraphdb_graph_spark.replay import apply_batch
+    from epigraphdb_graph_spark.schema import PAGES_SCHEMA
+    from epigraphdb_graph_spark.streaming.tailer import stream_metrics
+
+    t0 = "2024-01-01 00:00:00"
+    seed = _change_batch(spark, [
+        (1, "insert", "live", t0, b"<p>v1</p>"),
+        (2, "insert", "tomb", t0, b"<p>v2</p>"),
+        (3, "delete", "tomb", "2024-01-01 01:00:00", None),
+        (4, "insert", "dead", t0, b"<p>v4</p>"),
+        (5, "insert", "newer", "2024-01-01 05:30:00", b"<p>v5</p>"),
+        (6, "insert", "tie", t0, b"<p>v6</p>"),
+        (7, "insert", "keep", t0, b"<p>v7</p>"),
+        (8, "insert", "keep_tomb", t0, b"<p>v8</p>"),
+        (9, "delete", "keep_tomb", "2024-01-01 01:00:00", None),
+    ])
+    t5 = "2024-01-01 05:00:00"
+    batch = _change_batch(spark, [
+        (20, "insert", "new", t5, b"<p>v20</p>"),
+        (21, "update", "live", t5, b"<p>v21</p>"),
+        (22, "insert", "tomb", t5, b"<p>v22</p>"),  # revive
+        (23, "delete", "dead", t5, None),
+        (24, "delete", "unknown", t5, None),  # tombstone for a new key
+        (25, "update", "newer", t5, b"<p>v25</p>"),  # older than the target
+        (6, "insert", "tie", t0, b"<p>v6</p>"),  # re-delivered event
+    ])
+
+    def state(table):
+        return sorted(tuple(r) for r in table._read_resolved(table.manifest())
+                      .select("url", "_seq", "_deleted", "text").collect())
+
+    # one bucket: every untouched key shares the batch's bucket
+    cow = LakeTable.create(spark, str(tmp_path / "cow"), PAGES_SCHEMA,
+                           key="url", n_buckets=1)
+    apply_batch(cow, seed, batch_id="seed", mode="cow")
+    r = apply_batch(cow, batch, batch_id="batch", mode="cow")
+    assert (r.inserted, r.updated, r.deleted, r.stale_skipped,
+            r.touched_buckets, r.noop) == (2, 1, 2, 2, 1, False)
+    m = cow.manifest()
+    assert m["metrics"]["actions"] == {
+        "keep": 2, "insert": 2, "update": 1, "delete": 2, "stale": 2}
+    # no caller watermark: the batch's max event_seq, stale rows included
+    assert m["watermark_seq"] == 25
+    # event time: the seed's max applied warc_ts; the batch's applied
+    # rows sit inside the lateness horizon, so only its stale rows are late
+    assert m["watermark_ts"] == int(
+        pd.Timestamp("2024-01-01 05:30:00", tz="UTC").timestamp()) * 10**6
+    row = stream_metrics(cow).filter("batch_id = 'batch'").collect()[0]
+    assert (row["inserted"], row["updated"], row["deleted"],
+            row["stale_skipped"], row["kept"], row["late_events"]) == \
+        (2, 1, 2, 2, 2, 2)
+    want = [
+        ("dead", 23, True, None),
+        ("keep", 7, False, "v7"),
+        ("keep_tomb", 9, True, None),
+        ("live", 21, False, "v21"),
+        ("new", 20, False, "v20"),
+        ("newer", 5, False, "v5"),
+        ("tie", 6, False, "v6"),
+        ("tomb", 22, False, "v22"),
+        ("unknown", 24, True, None),
+    ]
+    assert state(cow) == want
+
+    mor = LakeTable.create(spark, str(tmp_path / "mor"), PAGES_SCHEMA,
+                           key="url", n_buckets=1)
+    apply_batch(mor, seed, batch_id="seed", mode="mor")
+    apply_batch(mor, batch, batch_id="batch", mode="mor")
+    mor.compact()
+    assert state(mor) == want
